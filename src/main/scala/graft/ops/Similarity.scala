@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.functions.VectorExpressions.{cosine, dot, l2norm, squaredL2}
 
 /** Similarity search over embedding columns (north star): brute-force
@@ -711,6 +712,41 @@ object Similarity {
 
   // ---------------------------------------------------- persisted IVF-PQ index
 
+  /** The declared schema of each IVF-PQ index table; `cluster_id` is the
+    * hive partition column of `codes/` and `vectors/`. Every index write
+    * conforms its output to these types and every read names them, so
+    * no path pays a schema-inference job (one per `spark.read.parquet`
+    * of an undeclared table), the partition column reads as BIGINT with
+    * no cast, and a file whose column types disagree fails the read
+    * instead of returning nulls. Centroids and codebooks are stored as
+    * double whatever the embedding's element type: float to double is
+    * exact, and the vector kernels promote to double anyway. */
+  private val IvfPqSchema: Map[String, StructType] = Map(
+    "centroids" -> StructType.fromDDL("c_id BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE"),
+    "codebooks" -> StructType.fromDDL("s INT, code BIGINT, cw ARRAY<DOUBLE>"),
+    "codes" -> StructType.fromDDL("id BIGINT, s INT, code BIGINT, cluster_id BIGINT"),
+    "vectors" -> StructType.fromDDL("id BIGINT, ve ARRAY<DOUBLE>, cluster_id BIGINT"))
+
+  private def readIndexTable(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.read.schema(IvfPqSchema(table)).parquet(s"$dir/$table")
+
+  /** Write one IVF-PQ index table in its declared schema; `codes/` and
+    * `vectors/` are clustered on the hive key first: without it every
+    * task writes a sliver into every cluster dir — up to tasks ×
+    * clusters tiny files, the small-file explosion that kills a 100 TB
+    * index (and measurably slows this write). With it, each cluster's
+    * rows land in one task → one right-sized file per cluster (at real
+    * scale Spark splits oversized tasks by maxRecordsPerFile, keeping
+    * files bounded both ways). */
+  private def writeIndexTable(df: DataFrame, dir: String, table: String,
+      mode: String): Unit = {
+    val out = df.select(IvfPqSchema(table).fields.map(f => col(f.name).cast(f.dataType)): _*)
+    if (out.columns.contains("cluster_id"))
+      out.repartition(col("cluster_id"))
+        .write.mode(mode).partitionBy("cluster_id").parquet(s"$dir/$table")
+    else out.write.mode(mode).parquet(s"$dir/$table")
+  }
+
   /** Materialize the IVF-PQ serving index as a TABLE LAYOUT — the
     * 100 TB shape the in-memory `ivfPqTopK` describes: `codes/` and
     * `vectors/` are hive-partitioned by `cluster_id`, so a query
@@ -739,33 +775,23 @@ object Similarity {
       // write is awaited before a failure propagates (Par.awaitAll), and
       // the cache is released in the finally.
       val centroidsW = Future {
-        assigned.filter(col(idCol) === col("cluster_id"))
-          .select(col("cluster_id").as("c_id"), col(vecCol).as("cv"), col("norm").as("cn"))
-          .write.mode("overwrite").parquet(s"$outDir/centroids")
+        writeIndexTable(assigned.filter(col(idCol) === col("cluster_id"))
+          .select(col("cluster_id").as("c_id"), col(vecCol).as("cv"), col("norm").as("cn")),
+          outDir, "centroids", "overwrite")
       }
       // a pqModel failure must still await the in-flight centroids
       // write before surfacing, so nothing mutates outDir post-throw
       val model = scala.util.Try(pqModel(emb, idCol, vecCol, m, seedStepPq))
       Par.awaitAll(Seq(centroidsW))
       val (cb, codes) = model.get
-      // repartition ON the hive key before the partitioned write: without
-      // it every task writes a sliver into every cluster dir — up to
-      // tasks × clusters tiny files, the small-file explosion that kills
-      // a 100 TB index (and measurably slows this write). With it, each
-      // cluster's rows land in one task → one right-sized file per
-      // cluster (at real scale Spark splits oversized tasks by
-      // maxRecordsPerFile, keeping files bounded both ways).
       Par.awaitAll(Seq(
-        Future { cb.write.mode("overwrite").parquet(s"$outDir/codebooks") },
+        Future { writeIndexTable(cb, outDir, "codebooks", "overwrite") },
         Future {
-          codes.join(clusters, Seq("id"))
-            .repartition(col("cluster_id"))
-            .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$outDir/codes")
+          writeIndexTable(codes.join(clusters, Seq("id")), outDir, "codes", "overwrite")
         },
         Future {
-          normalized(emb, idCol, vecCol).join(clusters, Seq("id"))
-            .repartition(col("cluster_id"))
-            .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$outDir/vectors")
+          writeIndexTable(normalized(emb, idCol, vecCol).join(clusters, Seq("id")),
+            outDir, "vectors", "overwrite")
         }))
     } finally assigned.unpersist()
   }
@@ -807,8 +833,8 @@ object Similarity {
       nAssign: Int = 2): Unit = {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cb = spark.read.parquet(s"$indexDir/codebooks")
+    val cents = readIndexTable(spark, indexDir, "centroids")
+    val cb = readIndexTable(spark, indexDir, "codebooks")
     val assigned = ivfAssignTo(newEmb, cents, idCol, vecCol, nAssign).persist()
     try {
       val clusters = assigned.select(col(idCol).as("id"), col("cluster_id"))
@@ -817,14 +843,12 @@ object Similarity {
       // before surfacing either's failure (round-17 ADVICE).
       Par.awaitAll(Seq(
         Future {
-          pqEncode(newEmb, idCol, vecCol, cb).join(clusters, Seq("id"))
-            .repartition(col("cluster_id"))
-            .write.mode("append").partitionBy("cluster_id").parquet(s"$indexDir/codes")
+          writeIndexTable(pqEncode(newEmb, idCol, vecCol, cb).join(clusters, Seq("id")),
+            indexDir, "codes", "append")
         },
         Future {
-          normalized(newEmb, idCol, vecCol).join(clusters, Seq("id"))
-            .repartition(col("cluster_id"))
-            .write.mode("append").partitionBy("cluster_id").parquet(s"$indexDir/vectors")
+          writeIndexTable(normalized(newEmb, idCol, vecCol).join(clusters, Seq("id")),
+            indexDir, "vectors", "append")
         }))
     } finally assigned.unpersist()
   }
@@ -840,51 +864,68 @@ object Similarity {
     * O(probed clusters) instead of O(probed clusters × appends). */
   def compactIvfPqIndex(spark: SparkSession, srcDir: String,
       dstDir: String): Unit = {
-    spark.read.parquet(s"$srcDir/centroids").write.parquet(s"$dstDir/centroids")
-    spark.read.parquet(s"$srcDir/codebooks").write.parquet(s"$dstDir/codebooks")
-    for (t <- Seq("codes", "vectors"))
-      spark.read.parquet(s"$srcDir/$t")
-        .repartition(col("cluster_id"))
-        .write.partitionBy("cluster_id").parquet(s"$dstDir/$t")
+    for (t <- Seq("centroids", "codebooks", "codes", "vectors"))
+      writeIndexTable(readIndexTable(spark, srcDir, t), dstDir, t, "errorifexists")
   }
 
   /** Serve IVF-PQ retrieval OFF the persisted index — expression-for-
     * expression the `ivfPqTopK` dataflow (so results pin row-identical
     * at the same parameters, spec'd), but every corpus-sized read is
-    * file-pruned: the query batch's probed cluster set (collected at
-    * the driver — |queries| × nProbe ids) becomes an `isin` partition
-    * filter on `codes/` and `vectors/`. `queryVecs` carries RAW
-    * vectors (q_id, qv) — norms and normalization are re-derived with
-    * the same expressions as the index side, keeping every double
-    * bit-identical to the self-contained form. */
+    * file-pruned: the query batch's probed cluster set becomes an `isin`
+    * partition filter on `codes/` and `vectors/`. `queryVecs` carries
+    * RAW vectors (q_id, qv) — norms and normalization are re-derived
+    * with the same expressions as the index side, keeping every double
+    * bit-identical to the self-contained form.
+    *
+    * Job budget: a call is fixed work per query batch, so its cost is
+    * counted in Spark jobs (13 for a build plus `collect()` on the
+    * 500-vector sf0.01 index; DedupSimilaritySpec holds the ceiling).
+    * What keeps it there:
+    *  - every index table is read with its declared schema
+    *    (`IvfPqSchema`), so building the frame infers nothing;
+    *  - the subspace width is `size(cw)` inside the distance-table
+    *    expression, not a `first()` job;
+    *  - the probes (|queries| × nProbe rows) are computed ONCE: the
+    *    collected rows give the partition filter and, as a local
+    *    relation, the broadcast side of the candidate join, so the
+    *    queries × centroids ranking never re-runs inside the main plan
+    *    (dynamic partition pruning instead of the collect measured
+    *    slower, 911 vs 789 ms per call);
+    *  - the candidate codes are clustered on `q_id` once, so the
+    *    (q_id, id, s) dedup, the per-(q_id, id) ADC sum and the per-q_id
+    *    shortlist window share one exchange instead of paying three.
+    *    Per query the candidates are bounded by nProbe × cluster size ×
+    *    nAssign × m; the cluster count grows with the corpus (one
+    *    centroid per `seedStepIvf` vectors), so cluster size, and with
+    *    it a q_id-keyed partition, stays bounded as the corpus grows. */
   def servePqIndex(spark: SparkSession, indexDir: String,
       queryVecs: DataFrame, k: Int, nProbe: Int = 8,
       shortlist: Int = 100): DataFrame = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cb = spark.read.parquet(s"$indexDir/codebooks")
-    val subDim = cb.select(size(col("cw"))).first().getInt(0)
+    val cents = readIndexTable(spark, indexDir, "centroids")
+    val cb = readIndexTable(spark, indexDir, "codebooks")
     val q0 = queryVecs.select(col("q_id"), col("qv"), l2norm(col("qv")).as("qn"))
     val wp = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("c_id"))
-    val probes = broadcast(q0).join(broadcast(cents))
+    val probeFrame = broadcast(q0).join(broadcast(cents))
       .withColumn("csim", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
       .withColumn("r", row_number().over(wp))
       .filter(col("r") <= nProbe)
       .select(col("q_id"), col("c_id").as("cluster_id"))
-    val probedClusters = probes.select(col("cluster_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val probeRows = probeFrame.collect()
+    val probes = spark.createDataFrame(java.util.Arrays.asList(probeRows: _*),
+      probeFrame.schema)
+    val probedClusters = probeRows.map(_.getLong(1)).distinct.toSeq
     val q = q0.select(col("q_id"), col("qv").as("_v"), col("qn").as("_n"))
       .select(col("q_id"),
         transform(col("_v"), x => x.cast("double") / col("_n")).as("qe"))
+    val subDim = size(col("cw"))
     val tab = q.crossJoin(broadcast(cb))
       .select(col("q_id"), col("s"), col("code"),
-        d2i(slice(col("qe"), col("s") * subDim + 1, lit(subDim)), col("cw")).as("d2i"))
-    // partition-column type inference reads the dir values as INT;
-    // pin back to the id type so the probe join keys match exactly
-    val candCodes = spark.read.parquet(s"$indexDir/codes")
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
+        d2i(slice(col("qe"), col("s") * subDim + 1, subDim), col("cw")).as("d2i"))
+    val candCodes = readIndexTable(spark, indexDir, "codes")
       .filter(col("cluster_id").isin(probedClusters: _*))
       .join(broadcast(probes), Seq("cluster_id"))
       .filter(col("q_id") =!= col("id"))
+      .repartition(col("q_id"))
       .dropDuplicates("q_id", "id", "s")
     val scored = candCodes.join(broadcast(tab), Seq("q_id", "s", "code"))
       .groupBy(col("q_id"), col("id")).agg(sum(col("d2i")).as("ad2i"))
@@ -893,8 +934,7 @@ object Similarity {
         Window.partitionBy(col("q_id")).orderBy(col("ad2i"), col("id"))))
       .filter(col("srk") <= shortlist)
       .select(col("q_id"), col("id").as("n_id"))
-    val vecs = spark.read.parquet(s"$indexDir/vectors")
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
+    val vecs = readIndexTable(spark, indexDir, "vectors")
       .filter(col("cluster_id").isin(probedClusters: _*))
       .select(col("id").as("n_id"), col("ve").as("ne"))
       .dropDuplicates("n_id")

@@ -9,6 +9,7 @@ class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
+  private val dir01 = "/root/testdata/sf0.01"
   private def docs = graft.Tables.load(spark, dir, "documents")
   private def emb = graft.Tables.load(spark, dir, "embeddings")
 
@@ -559,6 +560,82 @@ class DedupSimilaritySpec extends SparkSpec {
     val plan = served.queryExecution.executedPlan.toString
     val nonEmptyPf = "PartitionFilters: \\[[^\\]]".r.findAllIn(plan).length
     assert(nonEmptyPf >= 2, s"codes AND vectors reads must be partition-pruned, got $nonEmptyPf")
+  }
+
+  test("servePqIndex job budget: one build plus collect() runs at most 13 Spark jobs") {
+    // Serving is fixed work per query batch: an eager side job during
+    // frame construction (schema inference, first(), a second probe
+    // pass) shows up here as a count above the budget.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val e = graft.Tables.load(spark, dir01, "embeddings")
+    val idx = java.nio.file.Files.createTempDirectory("ivfpq_jobs_").toString
+    Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx)
+    val queries = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    def serve() = Similarity.servePqIndex(spark, idx, queries, k = 5,
+      nProbe = 8, shortlist = 100).collect()
+    val warm = serve()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "pq-budget" => jobs.incrementAndGet()
+          case "pq-budget-drained" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup("pq-budget", "servePqIndex job budget")
+      val r = serve()
+      // events arrive in order on one listener queue: once this marker
+      // job's start is seen, every serve job's start has been counted
+      sc.setJobGroup("pq-budget-drained", "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(rows.nonEmpty && rows.toSeq == warm.toSeq)
+    info(s"servePqIndex jobs: ${jobs.get}")
+    assert(jobs.get <= 13, s"servePqIndex ran ${jobs.get} jobs, budget 13")
+  }
+
+  test("IVF-PQ index schema: a double-embedding build serves like the float build; a mistyped table fails loudly") {
+    val e = graft.Tables.load(spark, dir01, "embeddings")
+    val ed = e.withColumn("embedding", col("embedding").cast("array<double>"))
+    def build(emb: org.apache.spark.sql.DataFrame, name: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(name).toString
+      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", d)
+      d
+    }
+    def serve(idx: String, emb: org.apache.spark.sql.DataFrame) =
+      Similarity.servePqIndex(spark, idx, emb.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("q_id"), col("embedding").as("qv")),
+        k = 5, nProbe = 8, shortlist = 100).collect().map(_.toSeq).toSeq
+    val fIdx = build(e, "ivfpq_float_")
+    val fRows = serve(fIdx, e)
+    assert(fRows.nonEmpty && serve(build(ed, "ivfpq_double_"), ed) == fRows)
+    // one column per table rewritten with a type the declared schema
+    // does not allow: the serve must throw, never read the column as null
+    for ((table, column, badType) <- Seq(
+        ("centroids", "cn", "string"),
+        ("codebooks", "cw", "array<string>"),
+        ("codes", "code", "string"),
+        ("vectors", "ve", "array<string>"))) {
+      val bad = java.nio.file.Files.createTempDirectory(s"ivfpq_bad_$table").toString
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(fIdx), new java.io.File(bad))
+      val t = spark.read.parquet(s"$fIdx/$table")
+        .withColumn(column, col(column).cast(badType))
+      val w = t.write.mode("overwrite")
+      if (t.columns.contains("cluster_id")) w.partitionBy("cluster_id").parquet(s"$bad/$table")
+      else w.parquet(s"$bad/$table")
+      val err = intercept[org.apache.spark.SparkException](serve(bad, e))
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("DATA_TYPE_MISMATCH")),
+        s"$table.$column: expected a column type mismatch, got $err")
+    }
   }
 
   test("pqEncodeStreaming matches batch pqEncode at the same model and runs on a live stream") {
