@@ -48,12 +48,10 @@ object Bench {
       // default 100-entry generated-class cache — every "warm" run was
       // re-compiling its whole-stage code, a flat recompilation tax on
       // each query in the full suite that an isolated run never pays.
-      // Round-12: env-tunable for controlled experiments. Measured at
-      // 206 queries: 1000 entries regressed the warm suite 317.8s vs
-      // 223.4s at 5000 (recompilation tax dominates any GC-scan cost
-      // of the pinned classes) — 5000 stays the default.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // Measured at 206 queries (round 12): 1000 entries regressed the
+      // warm suite 317.8s vs 223.4s at 5000 (recompilation tax
+      // dominates any GC-scan cost of the pinned classes).
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,19 +15,15 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   /** Storage level for persisted TEXT-SIZED frames (corpus survivors,
-    * shingle/token arrays, feature frames). Default DISK_ONLY — the
-    * round-15 GC audit moved these off the heap because their
-    * deserialized copies dominated old-gen in a long many-query JVM.
-    * Env-tunable (round-16, VERDICT r15 item 1c) so the DISK-I/O-vs-GC
-    * trade is measurable without a rebuild:
-    * SPARK_GRAFT_TEXT_PERSIST=MEMORY_AND_DISK_SER keeps the frames as
-    * serialized in-memory bytes (compact, low-GC) and spills only on
-    * pressure — the candidate middle ground if the driver box's disk
-    * is the contended resource. Accepts any StorageLevel name. */
+    * shingle/token arrays, feature frames): DISK_ONLY. The round-15 GC
+    * audit moved these off the heap because their deserialized copies
+    * dominated old-gen in a long many-query JVM. The round-16 A/B
+    * (docs/PERSIST_AB_r16.md) kept DISK_ONLY over MEMORY_AND_DISK_SER:
+    * ~4% faster on a quiesced box (recipe family 28.8 s vs 30.1 s at
+    * sf0.1), though SER writes ~30% fewer bytes — the level to revisit
+    * if local disk becomes the contended resource. */
   val textFrameLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_TEXT_PERSIST", "DISK_ONLY")
-        .trim.toUpperCase)
+    org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   def local(
       cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),

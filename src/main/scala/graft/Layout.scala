@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * files whose parquet min/max stats admit the value, instead of every
   * file the way a single-column sort helps only its own column.
   * Linear-scale rank normalization + bit interleave are pure codegen'd
-  * column arithmetic; the write is one range-repartition on the
-  * z-value (Spark samples the range bounds — no global sort) with an
-  * in-partition sort so row-group stats are tight too.
+  * column arithmetic; the write is one shuffle into equal-count
+  * z-value ranges (split points from one quantile pass — no global
+  * sort) with an in-partition sort so row-group stats are tight too.
   *
   * At 100 TB this is the difference between "filter on user_id reads
   * the whole feed" and "reads ~1/files_per_dimension of it" for tables
@@ -39,17 +39,34 @@ object Layout {
   }
 
   /** Write `df` z-clustered on two numeric dimensions: rank-normalize
-    * with the provided bounds, range-partition into `numFiles` splits
-    * of the z-curve, sort within each, drop the helper column. */
+    * with the provided bounds, split the z-curve into `numFiles`
+    * equal-count ranges, shuffle each row to its range's file, sort
+    * within each, drop the helper columns.
+    *
+    * The split points come from one deterministic quantile pass, not
+    * from `repartitionByRange`: Spark's range sampler seeds itself
+    * with the RDD id, so the file boundaries (and the pruning a test
+    * or a reader sees) would change with whatever ran earlier in the
+    * same SparkContext. */
   def writeZOrdered(df: DataFrame, dim1: String, lo1: Long, hi1: Long,
       dim2: String, lo2: Long, hi2: Long, outDir: String,
-      numFiles: Int): Unit =
-    df.withColumn("_z",
-        zValue(rank16(col(dim1), lo1, hi1), rank16(col(dim2), lo2, hi2)))
-      .repartitionByRange(numFiles, col("_z"))
+      numFiles: Int): Unit = {
+    val z = df.withColumn("_z",
+      zValue(rank16(col(dim1), lo1, hi1), rank16(col(dim2), lo2, hi2)))
+    val cuts = z.stat.approxQuantile("_z",
+      Array.tabulate(numFiles - 1)(i => (i + 1).toDouble / numFiles),
+      1.0 / (numFiles * 100)).distinct
+    val keyed = z.withColumn("_file",
+      cuts.foldLeft(lit(0))((n, c) => n + when(col("_z") >= c, 1).otherwise(0)))
+    val file = keyed.schema.fieldIndex("_file")
+    // an Int key hashes to itself: range i lands in partition i
+    val rows = keyed.rdd.keyBy(_.getInt(file))
+      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
+    df.sparkSession.createDataFrame(rows, keyed.schema)
       .sortWithinPartitions(col("_z"))
-      .drop("_z")
+      .drop("_z", "_file")
       .write.mode("overwrite").parquet(outDir)
+  }
 
   /** Per-file [min, max] of a column in a written directory — the
     * bounds parquet footer pruning operates on. (Reads the data; at

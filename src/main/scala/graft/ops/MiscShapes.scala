@@ -247,7 +247,7 @@ object MiscShapes {
   def bmpPixelMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeBmpPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeBmpPixels(media).toDF()
+    Multimodal.decodePixels(media).toDF()
       .groupBy(col("width").cast("long").as("width"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -294,7 +294,7 @@ object MiscShapes {
   def bmpResizePixels(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeBmpPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeBmpPixels(Multimodal.resizeBmpNearest(media, 8, 6)).toDF()
+    Multimodal.decodePixels(Multimodal.resizeNearest(media, 8, 6)).toDF()
       .groupBy((col("media_id") % 7).as("cohort"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -341,7 +341,7 @@ object MiscShapes {
   def gifPixelMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeGifPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeGifPixels(media).toDF()
+    Multimodal.decodePixels(media).toDF()
       .groupBy(col("width").cast("long").as("width"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -386,7 +386,7 @@ object MiscShapes {
   def gifResizePixels(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeGifPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeGifPixels(Multimodal.resizeGifNearest(media, 8, 6)).toDF()
+    Multimodal.decodePixels(Multimodal.resizeNearest(media, 8, 6)).toDF()
       .groupBy((col("media_id") % 7).as("cohort"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -433,7 +433,7 @@ object MiscShapes {
   def pngPixelMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizePngPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodePngPixels(media).toDF()
+    Multimodal.decodePixels(media).toDF()
       .groupBy(col("width").cast("long").as("width"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -475,7 +475,7 @@ object MiscShapes {
   def pngResizePixels(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizePngPixels(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodePngPixels(Multimodal.resizePngNearest(media, 8, 6)).toDF()
+    Multimodal.decodePixels(Multimodal.resizeNearest(media, 8, 6)).toDF()
       .groupBy((col("media_id") % 7).as("cohort"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_px")).as("total_px"),
@@ -716,7 +716,7 @@ object MiscShapes {
   /** q224 — perceptual image NEAR-dup dedup (round-14, VERDICT r13
     * item 5): four payloads per doc share planted pixel content — BMP
     * original, the SAME pixels as PNG (byte-disjoint re-encode),
-    * the original through the REAL resizeBmpNearest (2× — the
+    * the original through the REAL resizeNearest (2× — the
     * nearest index maps compose exactly), and a one-sample-inverted
     * near-dup twin. The engine decodes each through its real codec,
     * dHashes the pixels, and runs the multi-index banded Hamming

@@ -26,7 +26,10 @@ import org.apache.spark.sql.functions._
   * of round-14, retiring the last simulation point — baseline
   * grayscale JPEG (canonical Huffman + zigzag RLE + DC prediction +
   * RSTn restarts both directions, separable double-precision
-  * IDCT/FDCT). The GIF/PNG/JPEG codecs are cross-validated per-pixel
+  * IDCT/FDCT). Each format has exactly one decoder to pixels and one
+  * encoder from pixels; one magic-byte dispatcher (`decodeImage`)
+  * serves `decodePixels`, `resizeNearest` and the dHash, whatever the
+  * format. The GIF/PNG/JPEG codecs are cross-validated per-pixel
   * against the JDK's independent ImageIO coders in both directions.
   * Everything else — schema, typed
   * Dataset batching via mapPartitions (the Scala analogue of
@@ -81,16 +84,11 @@ object Multimodal {
   /** 33 bytes: PNG signature + a genuine IHDR chunk (length, type,
     * 13-byte data, real CRC32 over type+data — what `pngcheck` would
     * verify). */
-  private[ops] def pngHeader(w: Int, h: Int): Array[Byte] = {
-    val sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
+  private[ops] def pngHeader(w: Int, h: Int): Array[Byte] =
     // bit depth 8, color type 2 (truecolor), compression/filter 0,
     // interlace 0
-    val data = be32(w) ++ be32(h) ++ Array[Byte](8, 2, 0, 0, 0)
-    val typeAndData = "IHDR".getBytes("US-ASCII") ++ data
-    val crc = new java.util.zip.CRC32
-    crc.update(typeAndData)
-    sig ++ be32(data.length) ++ typeAndData ++ be32(crc.getValue.toInt)
-  }
+    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
+      pngChunk("IHDR", be32(w) ++ be32(h) ++ Array[Byte](8, 2, 0, 0, 0))
 
   /** 33 bytes: SOI + APP0/JFIF + SOF0 (baseline, 1 component). SOF
     * stores LINES (height) before SAMPLES/LINE (width) — the classic
@@ -1637,26 +1635,41 @@ object Multimodal {
   private[ops] def plantedR(id: Long, x: Int, y: Int): Int =
     ((id * 5L + 3L * x + 17L * y) % 256).toInt
 
-  /** A complete REAL 24bpp BMP: 54-byte headers plus an actual pixel
-    * array (bottom-up rows, BGR, 4-byte row padding). */
-  private[ops] def bmpWithPixels(id: Long, w: Int, h: Int): Array[Byte] = {
+  /** The planted trio as a row-major raster of packed 0xRRGGBB
+    * pixels — the content every truecolor synthesizer encodes. */
+  private[ops] def plantedRgb(id: Long, w: Int, h: Int): Array[Int] = {
+    val px = new Array[Int](w * h)
+    var i = 0
+    while (i < px.length) {
+      val x = i % w; val y = i / w
+      px(i) = (plantedR(id, x, y) << 16) | (plantedG(id, x, y) << 8) | plantedB(id, x, y)
+      i += 1
+    }
+    px
+  }
+
+  /** Encode packed 0xRRGGBB pixels (row-major, top row first) as a
+    * complete REAL 24bpp BMP: 54-byte headers plus the pixel array
+    * (bottom-up rows, BGR, 4-byte row padding). */
+  private[ops] def bmpFromRgb(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
     val stride = ((w * 3 + 3) / 4) * 4
     val body = new Array[Byte](stride * h)
     var r = 0
     while (r < h) {
-      val y = h - 1 - r // bottom-up storage
+      val src = (h - 1 - r) * w // bottom-up storage
       var x = 0
       while (x < w) {
-        val o = r * stride + x * 3
-        body(o) = plantedB(id, x, y).toByte
-        body(o + 1) = plantedG(id, x, y).toByte
-        body(o + 2) = plantedR(id, x, y).toByte
+        val c = rgb(src + x); val o = r * stride + x * 3
+        body(o) = c.toByte; body(o + 1) = (c >> 8).toByte; body(o + 2) = (c >> 16).toByte
         x += 1
       }
       r += 1 // pad bytes stay zero
     }
     bmpHeader(w, h, body.length) ++ body
   }
+
+  private[ops] def bmpWithPixels(id: Long, w: Int, h: Int): Array[Byte] =
+    bmpFromRgb(w, h, plantedRgb(id, w, h))
 
   /** Pixel-bearing BMP media table: dims are small planted functions
     * (w = id%21+4, h = id%17+4 — every row stride hits a different
@@ -1669,51 +1682,43 @@ object Multimodal {
     }
   }
 
-  case class PixelStats(media_id: Long, width: Int, height: Int,
-    sum_b: Long, sum_g: Long, sum_r: Long, n_px: Long)
-
-  /** Parse a 24bpp uncompressed BMP's REAL pixel array into per-image
-    * channel sums. Returns (w, h, Σb, Σg, Σr, n) in image coordinates,
-    * or the all-(-1) sentinel (the sniff convention) when the payload
-    * is not an uncompressed 24bpp BMP or its pixel array — INCLUDING
-    * the row padding — is shorter than stride·|h|: a bitmap missing
-    * its final pad bytes is corrupt, not "close enough". Negative DIB
-    * height = top-down row order, handled. */
-  private[ops] def bmpPixelStats(p: Array[Byte]): (Int, Int, Long, Long, Long, Long) = {
-    val none = (-1, -1, -1L, -1L, -1L, -1L)
-    if (p.length < 54 || p(0) != 'B' || p(1) != 'M') none
-    else {
-      val off = rLe32(p, 10)
-      val dibSize = rLe32(p, 14)
-      val w = rLe32(p, 18)
-      val hRaw = rLe32(p, 22)
-      val planes = rLe16(p, 26); val bpp = rLe16(p, 28)
-      val compression = rLe32(p, 30)
-      val h = math.abs(hRaw)
-      // stride in Long: w ≈ 2^30 overflows w*3 in Int to a NEGATIVE
-      // stride, which would pass the length guard below and then index
-      // the array at negative offsets (task failure, not the sentinel)
-      val strideL = (w.toLong * 3 + 3) / 4 * 4
-      val stride = strideL.toInt
-      if (dibSize < 40 || w <= 0 || h == 0 || planes != 1 || bpp != 24 ||
-          compression != 0 || off < 54 || strideL > Int.MaxValue ||
-          p.length < off.toLong + strideL * h) none
-      else {
-        var sb = 0L; var sg = 0L; var sr = 0L
-        var r = 0
-        while (r < h) {
-          var x = 0
-          val base = off + r * stride
-          while (x < w) {
-            val o = base + x * 3
-            sb += u8(p(o)); sg += u8(p(o + 1)); sr += u8(p(o + 2))
-            x += 1
-          }
-          r += 1
-        }
-        (w, h, sb, sg, sr, w.toLong * h)
+  /** Decode a 24bpp uncompressed BMP's REAL pixel array to (w, h,
+    * row-major packed 0xRRGGBB pixels) in image coordinates. None when
+    * the payload is not an uncompressed 24bpp BMP or its pixel array —
+    * INCLUDING the row padding — is shorter than stride·|h|: a bitmap
+    * missing its final pad bytes is corrupt, not "close enough".
+    * Negative DIB height = top-down row order, handled. */
+  private[ops] def bmpRgb(p: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+    if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
+    val off = rLe32(p, 10)
+    val dibSize = rLe32(p, 14)
+    val w = rLe32(p, 18)
+    val hRaw = rLe32(p, 22)
+    val planes = rLe16(p, 26); val bpp = rLe16(p, 28)
+    val compression = rLe32(p, 30)
+    val h = math.abs(hRaw) // Int.MinValue stays negative: rejected below
+    // stride in Long: w ≈ 2^30 overflows w*3 in Int to a NEGATIVE
+    // stride, which would pass the length guard below and then index
+    // the array at negative offsets (task failure, not a reject)
+    val strideL = (w.toLong * 3 + 3) / 4 * 4
+    if (dibSize < 40 || w <= 0 || h <= 0 || planes != 1 || bpp != 24 ||
+        compression != 0 || off < 54 || strideL > Int.MaxValue ||
+        p.length < off.toLong + strideL * h) return None
+    val stride = strideL.toInt
+    val out = new Array[Int](w * h)
+    var r = 0
+    while (r < h) {
+      val y = if (hRaw < 0) r else h - 1 - r // storage row r → image row y
+      val base = off + r * stride
+      var x = 0
+      while (x < w) {
+        val o = base + x * 3
+        out(y * w + x) = (u8(p(o + 2)) << 16) | (u8(p(o + 1)) << 8) | u8(p(o))
+        x += 1
       }
+      r += 1
     }
+    Some((w, h, out))
   }
 
   // ----------------------------------------------------------------
@@ -1836,19 +1841,23 @@ object Multimodal {
   private[ops] def gifPaletteR(i: Int): Int = i
   private[ops] def gifPaletteG(i: Int): Int = (3 * i) % 256
   private[ops] def gifPaletteB(i: Int): Int = (5 * i) % 256
+  private[ops] val gifPlantedPalette: Array[Int] =
+    Array.tabulate(256)(i => (gifPaletteR(i) << 16) | (gifPaletteG(i) << 8) | gifPaletteB(i))
 
   /** A complete REAL GIF89a from explicit pixel indices: logical
-    * screen descriptor, 256-entry global color table, image
-    * descriptor, LZW-compressed pixel indices in ≤255-byte
-    * sub-blocks, trailer. */
-  private[ops] def gifFromIndices(w: Int, h: Int, indices: Array[Int]): Array[Byte] = {
+    * screen descriptor, 256-entry global color table (`palette`'s
+    * packed 0xRRGGBB entries, zero-padded to 256), image descriptor,
+    * LZW-compressed pixel indices in ≤255-byte sub-blocks, trailer. */
+  private[ops] def gifFromIndices(w: Int, h: Int, indices: Array[Int],
+      palette: Array[Int]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(w * h + 800)
     out.write("GIF89a".getBytes("US-ASCII"))
     out.write(le16(w)); out.write(le16(h))
     out.write(0xf7); out.write(0); out.write(0) // GCT, 256 entries
     var i = 0
     while (i < 256) {
-      out.write(gifPaletteR(i)); out.write(gifPaletteG(i)); out.write(gifPaletteB(i))
+      val c = if (i < palette.length) palette(i) else 0
+      out.write((c >> 16) & 0xff); out.write((c >> 8) & 0xff); out.write(c & 0xff)
       i += 1
     }
     out.write(0x2c) // image descriptor
@@ -1866,17 +1875,13 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** The q214 media payload: `gifFromIndices` over the planted
-    * per-pixel index function. */
+  /** The q214 media payload: the planted index raster through
+    * [[gifFromIndices]] with the planted palette. */
   private[ops] def gifWithPixels(id: Long, w: Int, h: Int): Array[Byte] = {
-    val indices = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { indices(y * w + x) = plantedGifIdx(id, x, y); x += 1 }
-      y += 1
-    }
-    gifFromIndices(w, h, indices)
+    val idx = new Array[Int](w * h)
+    var i = 0
+    while (i < idx.length) { idx(i) = plantedGifIdx(id, i % w, i / w); i += 1 }
+    gifFromIndices(w, h, idx, gifPlantedPalette)
   }
 
   /** Pixel-bearing GIF media table (the q214/q215 input): dims are
@@ -1925,7 +1930,7 @@ object Multimodal {
           if (i + 10 > p.length) return None
           val left = rLe16(p, i + 1); val top = rLe16(p, i + 3)
           val iw = rLe16(p, i + 5); val ih = rLe16(p, i + 7)
-          val ip = u8(p, i + 9)
+          val ip = u8(p(i + 9))
           i += 10
           if (left != 0 || top != 0 || iw != w || ih != h) return None
           var pal = global
@@ -1969,89 +1974,6 @@ object Multimodal {
       }
     }
     None
-  }
-
-  private def u8(p: Array[Byte], i: Int): Int = p(i) & 0xff
-
-  /** GIF pixel-level channel sums via the real LZW decode — the q214
-    * kernel. Sentinel tuple on malformation (the sniff convention). */
-  private[ops] def gifPixelStats(p: Array[Byte]): (Int, Int, Long, Long, Long, Long) =
-    parseGif(p) match {
-      case None => (-1, -1, -1L, -1L, -1L, -1L)
-      case Some((w, h, pal, idx)) =>
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < idx.length) {
-          val c = pal(idx(i))
-          sr += (c >> 16) & 0xff; sg += (c >> 8) & 0xff; sb += c & 0xff
-          i += 1
-        }
-        (w, h, sb, sg, sr, w.toLong * h)
-    }
-
-  /** GIF pixel decode over a media Dataset — map-only, the q207
-    * shape with an entropy decoder in the loop. */
-  def decodeGifPixels(media: Dataset[MediaRow]): Dataset[PixelStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, sb, sg, sr, n) = gifPixelStats(r.payload)
-        PixelStats(r.media_id, w, h, sb, sg, sr, n)
-      }
-    }
-  }
-
-  /** REAL nearest-neighbor GIF resize: LZW-decode the source pixel
-    * stream, remap indices through the exact integer index map, and
-    * RE-ENCODE with this codec — a genuine decode→transform→encode
-    * round-trip. The output carries the source palette padded to 256
-    * entries (indices unchanged). Non-GIF / malformed payloads pass
-    * through untouched, as in [[resizeBmpNearest]]. */
-  def resizeGifNearest(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
-    require(newW > 0 && newH > 0, "target dims must be positive")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { row =>
-        parseGif(row.payload) match {
-          case None => row
-          case Some((w, h, pal, idx)) =>
-            val out = new java.io.ByteArrayOutputStream(newW * newH + 800)
-            out.write("GIF89a".getBytes("US-ASCII"))
-            out.write(le16(newW)); out.write(le16(newH))
-            out.write(0xf7); out.write(0); out.write(0)
-            var i = 0
-            while (i < 256) {
-              val c = if (i < pal.length) pal(i) else 0
-              out.write((c >> 16) & 0xff); out.write((c >> 8) & 0xff); out.write(c & 0xff)
-              i += 1
-            }
-            out.write(0x2c)
-            out.write(le16(0)); out.write(le16(0))
-            out.write(le16(newW)); out.write(le16(newH))
-            out.write(0)
-            val dst = new Array[Int](newW * newH)
-            var y = 0
-            while (y < newH) {
-              val sy = y * h / newH
-              var x = 0
-              while (x < newW) {
-                dst(y * newW + x) = idx(sy * w + x * w / newW)
-                x += 1
-              }
-              y += 1
-            }
-            out.write(8)
-            val lzw = lzwEncode(dst, 8)
-            var off = 0
-            while (off < lzw.length) {
-              val n = math.min(255, lzw.length - off)
-              out.write(n); out.write(lzw, off, n); off += n
-            }
-            out.write(0); out.write(0x3b)
-            row.copy(payload = out.toByteArray)
-        }
-      }
-    }
   }
 
   // ----------------------------------------------------------------
@@ -2124,14 +2046,12 @@ object Multimodal {
     be32(payload.length) ++ t ++ payload ++ be32(crc.getValue.toInt)
   }
 
-  /** A complete REAL PNG: signature, IHDR (genuine CRC32), one IDAT
-    * carrying the zlib-DEFLATE of filtered scanlines — the filter
-    * type CYCLES through all five per row, so a decoder that skimps
-    * on any filter fails the planted sums — and IEND. RGB8,
-    * non-interlaced. */
-  private[ops] def pngWithPixels(id: Long, w: Int, h: Int): Array[Byte] = {
-    val sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    val ihdr = be32(w) ++ be32(h) ++ Array[Byte](8, 2, 0, 0, 0)
+  /** Encode packed 0xRRGGBB pixels as a complete REAL PNG:
+    * signature, IHDR (genuine CRC32), one IDAT carrying the
+    * zlib-DEFLATE of the scanlines — row y filtered with PNG filter
+    * type `filterOf(y)` — and IEND. RGB8, non-interlaced. */
+  private[ops] def pngFromRgb(w: Int, h: Int, rgb: Array[Int],
+      filterOf: Int => Int): Array[Byte] = {
     val scan = new java.io.ByteArrayOutputStream((w * 3 + 1) * h)
     var prior = new Array[Byte](w * 3)
     var y = 0
@@ -2139,12 +2059,12 @@ object Multimodal {
       val raw = new Array[Byte](w * 3)
       var x = 0
       while (x < w) {
-        raw(x * 3) = plantedR(id, x, y).toByte
-        raw(x * 3 + 1) = plantedG(id, x, y).toByte
-        raw(x * 3 + 2) = plantedB(id, x, y).toByte
+        val c = rgb(y * w + x)
+        raw(x * 3) = (c >> 16).toByte; raw(x * 3 + 1) = (c >> 8).toByte
+        raw(x * 3 + 2) = c.toByte
         x += 1
       }
-      val ft = y % 5
+      val ft = filterOf(y)
       scan.write(ft)
       scan.write(pngFilterRow(ft, raw, prior))
       prior = raw
@@ -2156,9 +2076,15 @@ object Multimodal {
     val buf = new Array[Byte](8192)
     while (!deflater.finished()) zout.write(buf, 0, deflater.deflate(buf))
     deflater.end()
-    sig ++ pngChunk("IHDR", ihdr) ++ pngChunk("IDAT", zout.toByteArray) ++
+    pngHeader(w, h) ++ pngChunk("IDAT", zout.toByteArray) ++
       pngChunk("IEND", Array.empty[Byte])
   }
+
+  /** The q216 media payload: the planted trio through [[pngFromRgb]]
+    * with the filter type CYCLING through all five per row, so a
+    * decoder that skimps on any filter fails the planted sums. */
+  private[ops] def pngWithPixels(id: Long, w: Int, h: Int): Array[Byte] =
+    pngFromRgb(w, h, plantedRgb(id, w, h), _ % 5)
 
   /** Pixel-bearing PNG media table (the q216/q217 input). */
   def synthesizePngPixels(docs: DataFrame): Dataset[MediaRow] = {
@@ -2239,131 +2165,6 @@ object Multimodal {
       y += 1
     }
     Some((w, h, out))
-  }
-
-  /** PNG pixel-level channel sums — the q216 kernel. */
-  private[ops] def pngPixelStats(p: Array[Byte]): (Int, Int, Long, Long, Long, Long) =
-    parsePng(p) match {
-      case None => (-1, -1, -1L, -1L, -1L, -1L)
-      case Some((w, h, rgb)) =>
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < rgb.length) {
-          sr += rgb(i) & 0xff; sg += rgb(i + 1) & 0xff; sb += rgb(i + 2) & 0xff
-          i += 3
-        }
-        (w, h, sb, sg, sr, w.toLong * h)
-    }
-
-  /** PNG pixel decode over a media Dataset — map-only. */
-  def decodePngPixels(media: Dataset[MediaRow]): Dataset[PixelStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, sb, sg, sr, n) = pngPixelStats(r.payload)
-        PixelStats(r.media_id, w, h, sb, sg, sr, n)
-      }
-    }
-  }
-
-  /** REAL nearest-neighbor PNG resize: inflate+unfilter the source,
-    * remap pixels by the exact integer index map, re-filter (Sub) and
-    * re-deflate a complete PNG. Non-PNG payloads pass through. */
-  def resizePngNearest(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
-    require(newW > 0 && newH > 0, "target dims must be positive")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { row =>
-        parsePng(row.payload) match {
-          case None => row
-          case Some((w, h, rgb)) =>
-            val sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-            val ihdr = be32(newW) ++ be32(newH) ++ Array[Byte](8, 2, 0, 0, 0)
-            val scan = new java.io.ByteArrayOutputStream((newW * 3 + 1) * newH)
-            var prior = new Array[Byte](newW * 3)
-            var y = 0
-            while (y < newH) {
-              val sy = y * h / newH
-              val raw = new Array[Byte](newW * 3)
-              var x = 0
-              while (x < newW) {
-                val so = (sy * w + x * w / newW) * 3
-                raw(x * 3) = rgb(so); raw(x * 3 + 1) = rgb(so + 1)
-                raw(x * 3 + 2) = rgb(so + 2)
-                x += 1
-              }
-              scan.write(1) // Sub filter on every row
-              scan.write(pngFilterRow(1, raw, prior))
-              prior = raw
-              y += 1
-            }
-            val deflater = new java.util.zip.Deflater()
-            deflater.setInput(scan.toByteArray); deflater.finish()
-            val zout = new java.io.ByteArrayOutputStream(scan.size / 2 + 64)
-            val buf = new Array[Byte](8192)
-            while (!deflater.finished()) zout.write(buf, 0, deflater.deflate(buf))
-            deflater.end()
-            row.copy(payload = sig ++ pngChunk("IHDR", ihdr) ++
-              pngChunk("IDAT", zout.toByteArray) ++
-              pngChunk("IEND", Array.empty[Byte]))
-        }
-      }
-    }
-  }
-
-  /** Pixel-level decode — the q207 surface. Same scale shape as
-    * [[decodeHeader]]: map-only, payload bytes never leave their
-    * partition, output is a handful of scalar columns per image. */
-  def decodeBmpPixels(media: Dataset[MediaRow]): Dataset[PixelStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, sb, sg, sr, n) = bmpPixelStats(r.payload)
-        PixelStats(r.media_id, w, h, sb, sg, sr, n)
-      }
-    }
-  }
-
-  /** REAL nearest-neighbor resize for 24bpp BMPs — reads the actual
-    * source pixels (src(x·srcW div newW, y·srcH div newH), exact
-    * integer arithmetic) and re-encodes a complete bitmap with fresh
-    * row padding; q212 gates the resized pixels against the planted
-    * functions composed with the same index map. Payloads that are
-    * not decodable 24bpp BMPs pass through UNTOUCHED (the caller's
-    * filter decides what enters a resize stage); map-only. */
-  def resizeBmpNearest(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
-    require(newW > 0 && newH > 0, "target dims must be positive")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { row =>
-        val p = row.payload
-        val (w, h, _, _, _, n) = bmpPixelStats(p)
-        if (n < 0) row
-        else {
-          val off = rLe32(p, 10)
-          val topDown = rLe32(p, 22) < 0
-          val srcStride = ((w * 3 + 3) / 4) * 4
-          val dstStride = ((newW * 3 + 3) / 4) * 4
-          val body = new Array[Byte](dstStride * newH)
-          var r = 0
-          while (r < newH) {
-            val y = newH - 1 - r // dst stays bottom-up
-            val sy = y * h / newH
-            val srcRow = if (topDown) sy else h - 1 - sy
-            var x = 0
-            while (x < newW) {
-              val sx = x * w / newW
-              val so = off + srcRow * srcStride + sx * 3
-              val o = r * dstStride + x * 3
-              body(o) = p(so); body(o + 1) = p(so + 1); body(o + 2) = p(so + 2)
-              x += 1
-            }
-            r += 1
-          }
-          row.copy(payload = bmpHeader(newW, newH, body.length) ++ body)
-        }
-      }
-    }
   }
 
   // ----------------------------------------------------------------
@@ -2874,47 +2675,23 @@ object Multimodal {
     out
   }
 
-  /** Dequantize + de-zigzag + IDCT + level shift + clamp + crop. */
-  private def jpegPixelsOf(w: Int, h: Int, q: Array[Int],
-      blocks: Array[Array[Int]]): Array[Int] = {
-    val bw = (w + 7) / 8
-    val out = new Array[Int](w * h)
-    var b = 0
-    while (b < blocks.length) {
-      val blk = blocks(b)
-      val f = new Array[Double](64)
-      var k = 0
-      while (k < 64) { f(jpegZigzag(k)) = blk(k).toDouble * q(k); k += 1 }
-      val px = jpegIdct(f)
-      val bx = b % bw; val by = b / bw
-      var y = 0
-      while (y < 8) {
-        val gy = by * 8 + y
-        if (gy < h) {
-          var x = 0
-          while (x < 8) {
-            val gx = bx * 8 + x
-            if (gx < w) {
-              val v = math.round(px(y * 8 + x) + 128.0).toInt
-              out(gy * w + gx) = if (v < 0) 0 else if (v > 255) 255 else v
-            }
-            x += 1
-          }
-        }
-        y += 1
-      }
-      b += 1
-    }
-    out
-  }
-
   /** Full pixel decode: Huffman → dequantize → de-zigzag → IDCT →
     * +128 level shift, clamp, crop edge-block padding. Returns
     * (width, height, row-major gray pixels). */
   private[ops] def jpegGrayPixels(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    parseJpegBlocks(p).map { case (w, h, q, blocks) =>
-      (w, h, jpegPixelsOf(w, h, q, blocks))
+    parseJpegComponents(p).collect { case (w, h, comps) if comps.length == 1 =>
+      (w, h, jpegGrayOf(w, h, comps(0)))
     }
+
+  /** The one component's plane cropped to w×h. */
+  private def jpegGrayOf(w: Int, h: Int, comp: JpegComp): Array[Int] = {
+    val plane = jpegPlaneOf(comp)
+    val pw = comp.blocksW * 8
+    val out = new Array[Int](w * h)
+    var y = 0
+    while (y < h) { System.arraycopy(plane, y * pw, out, y * w, w); y += 1 }
+    out
+  }
 
   /** IDCT one component into its full padded plane (level-shifted,
     * clamped 0–255). */
@@ -2945,55 +2722,45 @@ object Multimodal {
     out
   }
 
-  /** Full COLOR decode of any baseline JFIF (gray or YCbCr at any
-    * supported sampling): per-component IDCT planes, box chroma
+  /** Full COLOR decode of a baseline YCbCr JFIF at any supported
+    * sampling: per-component IDCT planes, box chroma
     * upsampling (cx = x·hs div hmax — the nearest map), JFIF
     * YCbCr→RGB (R = Y + 1.402·(Cr−128), G = Y − 0.344136·(Cb−128) −
     * 0.714136·(Cr−128), B = Y + 1.772·(Cb−128)), rounded and
-    * clamped. Returns row-major RGB triples. */
+    * clamped. Returns row-major RGB triples; None for grayscale
+    * payloads, which [[jpegGrayPixels]] decodes. */
   private[ops] def jpegRgb(p: Array[Byte]): Option[(Int, Int, Array[Byte])] =
-    parseJpegComponents(p).map { case (w, h, comps) =>
-      val planes = comps.map(jpegPlaneOf)
-      val out = new Array[Byte](w * h * 3)
-      if (comps.length == 1) {
-        val pw = comps(0).blocksW * 8
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = planes(0)(y * pw + x).toByte
-            val o = (y * w + x) * 3
-            out(o) = v; out(o + 1) = v; out(o + 2) = v
-            x += 1
-          }
-          y += 1
-        }
-      } else {
-        val hmax = comps.map(_.hs).max; val vmax = comps.map(_.vs).max
-        val pws = comps.map(_.blocksW * 8)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            def samp(c: Int): Int =
-              planes(c)((y * comps(c).vs / vmax) * pws(c) + x * comps(c).hs / hmax)
-            val yy = samp(0).toDouble
-            val cb = samp(1) - 128.0; val cr = samp(2) - 128.0
-            def clamp(d: Double): Byte = {
-              val v = math.round(d).toInt
-              (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-            }
-            val o = (y * w + x) * 3
-            out(o) = clamp(yy + 1.402 * cr)
-            out(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-            out(o + 2) = clamp(yy + 1.772 * cb)
-            x += 1
-          }
-          y += 1
-        }
-      }
-      (w, h, out)
+    parseJpegComponents(p).collect { case (w, h, comps) if comps.length == 3 =>
+      (w, h, jpegRgbOf(w, h, comps))
     }
+
+  private def jpegRgbOf(w: Int, h: Int, comps: Array[JpegComp]): Array[Byte] = {
+    val planes = comps.map(jpegPlaneOf)
+    val out = new Array[Byte](w * h * 3)
+    val hmax = comps.map(_.hs).max; val vmax = comps.map(_.vs).max
+    val pws = comps.map(_.blocksW * 8)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        def samp(c: Int): Int =
+          planes(c)((y * comps(c).vs / vmax) * pws(c) + x * comps(c).hs / hmax)
+        val yy = samp(0).toDouble
+        val cb = samp(1) - 128.0; val cr = samp(2) - 128.0
+        def clamp(d: Double): Byte = {
+          val v = math.round(d).toInt
+          (if (v < 0) 0 else if (v > 255) 255 else v).toByte
+        }
+        val o = (y * w + x) * 3
+        out(o) = clamp(yy + 1.402 * cr)
+        out(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
+        out(o + 2) = clamp(yy + 1.772 * cb)
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
 
   /** Encode three components' quantized coefficient blocks (4:4:4,
     * zigzag order, raster block order per component) into a complete
@@ -3230,36 +2997,124 @@ object Multimodal {
     }
   }
 
-  /** REAL nearest-neighbor resize for baseline grayscale JPEGs —
-    * decode through Huffman+IDCT, remap, re-encode through
-    * FDCT+Huffman with the SOURCE file's own quant table (quality
-    * preserved). Lossy by the DCT round-trip (bounded by the quant
-    * step — exact to ±2 gray levels under the all-ones table, spec-
-    * pinned); non-JPEG payloads pass through untouched. Map-only. */
-  def resizeJpegNearest(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
+  // ----------------------------------------------------------------
+  // One pixel path over the four image codecs: a magic-byte dispatcher
+  // decodes any supported payload to an Image — one Int per pixel plus
+  // a re-encoder in the SOURCE format — and the stats, resize and
+  // perceptual-hash operators are written once on top of it. The
+  // per-pixel work stays hand-written integer arithmetic.
+  // ----------------------------------------------------------------
+
+  /** One decoded image. `px` holds one Int per pixel, row-major: a
+    * packed 0xRRGGBB, or — when `palette` is non-null — an index into
+    * it (GIF's color table; grayscale JPEG uses the gray ramp, so its
+    * pixels are gray levels). `encode` writes a raster of the same
+    * kind back in the source format (GIF keeps the palette, JPEG the
+    * source quant table); None where no pixel encoder exists (color
+    * JPEG). */
+  private[ops] final case class Image(w: Int, h: Int, px: Array[Int],
+      palette: Array[Int], encode: Option[(Int, Int, Array[Int]) => Array[Byte]])
+
+  private val grayRamp: Array[Int] = Array.tabulate(256)(_ * 0x010101)
+
+  private def packRgb(rgb: Array[Byte]): Array[Int] = {
+    val out = new Array[Int](rgb.length / 3)
+    var i = 0
+    while (i < out.length) {
+      out(i) = (u8(rgb(i * 3)) << 16) | (u8(rgb(i * 3 + 1)) << 8) | u8(rgb(i * 3 + 2))
+      i += 1
+    }
+    out
+  }
+
+  /** Decode any supported image by its magic bytes — 24bpp BMP, GIF,
+    * 8-bit truecolor PNG, baseline JPEG (gray or color) — through
+    * that format's one decoder. None when no codec accepts it. A
+    * resized PNG is re-filtered with Sub on every row. */
+  private[ops] def decodeImage(p: Array[Byte]): Option[Image] =
+    if (p.length < 8) None
+    else if (p(0) == 'B' && p(1) == 'M')
+      bmpRgb(p).map { case (w, h, rgb) => Image(w, h, rgb, null, Some(bmpFromRgb _)) }
+    else if (p(0) == 'G' && p(1) == 'I' && p(2) == 'F')
+      parseGif(p).map { case (w, h, pal, idx) =>
+        Image(w, h, idx, pal, Some(gifFromIndices(_, _, _, pal)))
+      }
+    else if (u8(p(0)) == 0x89 && p(1) == 'P')
+      parsePng(p).map { case (w, h, rgb) =>
+        Image(w, h, packRgb(rgb), null, Some(pngFromRgb(_, _, _, _ => 1)))
+      }
+    else if (u8(p(0)) == 0xff && u8(p(1)) == 0xd8)
+      parseJpegComponents(p).map { case (w, h, comps) =>
+        if (comps.length == 1)
+          Image(w, h, jpegGrayOf(w, h, comps(0)), grayRamp,
+            Some(jpegFromGray(_, _, _, comps(0).quant)))
+        else Image(w, h, packRgb(jpegRgbOf(w, h, comps)), null, None)
+      }
+    else None
+
+  case class PixelStats(media_id: Long, width: Int, height: Int,
+    sum_b: Long, sum_g: Long, sum_r: Long, n_px: Long)
+
+  /** Per-image channel sums over the decoded pixels, in image
+    * coordinates; the all-(-1) sentinel (the sniff convention) when
+    * no codec decodes the payload. */
+  private[ops] def pixelStats(id: Long, p: Array[Byte]): PixelStats =
+    decodeImage(p) match {
+      case None => PixelStats(id, -1, -1, -1L, -1L, -1L, -1L)
+      case Some(img) =>
+        val px = img.px; val pal = img.palette
+        var sr = 0L; var sg = 0L; var sb = 0L
+        var i = 0
+        while (i < px.length) {
+          val c = if (pal == null) px(i) else pal(px(i))
+          sr += (c >> 16) & 0xff; sg += (c >> 8) & 0xff; sb += c & 0xff
+          i += 1
+        }
+        PixelStats(id, img.w, img.h, sb, sg, sr, img.w.toLong * img.h)
+    }
+
+  /** Pixel-level decode — the q207/q214/q216 surface. Same scale
+    * shape as [[decodeHeader]]: map-only, payload bytes never leave
+    * their partition, output is a handful of scalar columns per image. */
+  def decodePixels(media: Dataset[MediaRow]): Dataset[PixelStats] = {
+    import media.sparkSession.implicits._
+    media.mapPartitions(_.map(r => pixelStats(r.media_id, r.payload)))
+  }
+
+  /** Nearest-neighbor remap of a row-major raster: dst(x, y) =
+    * src(x·w div newW, y·h div newH), exact integer arithmetic. */
+  private[ops] def nearest(w: Int, h: Int, src: Array[Int],
+      newW: Int, newH: Int): Array[Int] = {
+    val dst = new Array[Int](newW * newH)
+    var y = 0
+    while (y < newH) {
+      val row = (y * h / newH) * w
+      var x = 0
+      while (x < newW) { dst(y * newW + x) = src(row + x * w / newW); x += 1 }
+      y += 1
+    }
+    dst
+  }
+
+  /** REAL nearest-neighbor resize: decode each payload, remap its
+    * pixels by [[nearest]], and re-encode a complete file in the SAME
+    * format — a BMP with fresh row padding, a GIF with the source
+    * palette and remapped indices through the LZW coder, a PNG through
+    * Sub filtering and deflate, a grayscale JPEG through FDCT+Huffman
+    * under the source quant table (lossy by the DCT round-trip: ±3
+    * gray levels under the all-ones table, spec-pinned). q212/q215/q217
+    * gate the resized pixels against the planted functions composed
+    * with the same index map. Payloads no codec can decode and
+    * re-encode pass through UNTOUCHED; the caller's filter decides
+    * what enters a resize stage. Map-only. */
+  def resizeNearest(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
     require(newW > 0 && newH > 0, "target dims must be positive")
     import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { row =>
-        parseJpegBlocks(row.payload) match {
-          case None => row
-          case Some((w, h, q, blocks)) =>
-            val src = jpegPixelsOf(w, h, q, blocks)
-            val dst = new Array[Int](newW * newH)
-            var y = 0
-            while (y < newH) {
-              val sy = y * h / newH
-              var x = 0
-              while (x < newW) {
-                dst(y * newW + x) = src(sy * w + x * w / newW)
-                x += 1
-              }
-              y += 1
-            }
-            row.copy(payload = jpegFromGray(newW, newH, dst, q))
-        }
-      }
-    }
+    media.mapPartitions(_.map { row =>
+      decodeImage(row.payload)
+        .flatMap(img => img.encode.map(_(newW, newH, nearest(img.w, img.h, img.px, newW, newH))))
+        .fold(row)(p => row.copy(payload = p))
+    })
   }
 
   // ----------------------------------------------------------------
@@ -3273,69 +3128,20 @@ object Multimodal {
   // exact dedup and text near-dup are both structurally blind to.
   // ----------------------------------------------------------------
 
-  /** Full 24bpp BMP pixel decode → (w, h, row-major RGB triples), or
-    * None (same validation set as [[bmpPixelStats]]). */
-  private[ops] def bmpRgb(p: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
-    val off = rLe32(p, 10)
-    val dibSize = rLe32(p, 14)
-    val w = rLe32(p, 18)
-    val hRaw = rLe32(p, 22)
-    val planes = rLe16(p, 26); val bpp = rLe16(p, 28)
-    val compression = rLe32(p, 30)
-    val h = math.abs(hRaw)
-    val strideL = (w.toLong * 3 + 3) / 4 * 4
-    if (dibSize < 40 || w <= 0 || h == 0 || planes != 1 || bpp != 24 ||
-        compression != 0 || off < 54 || strideL > Int.MaxValue ||
-        p.length < off.toLong + strideL * h) return None
-    val stride = strideL.toInt
-    val out = new Array[Byte](w * h * 3)
-    var r = 0
-    while (r < h) {
-      val y = if (hRaw < 0) r else h - 1 - r // storage row r → image row y
-      var x = 0
-      val base = off + r * stride
-      while (x < w) {
-        val o = (y * w + x) * 3
-        out(o) = p(base + x * 3 + 2)     // R
-        out(o + 1) = p(base + x * 3 + 1) // G
-        out(o + 2) = p(base + x * 3)     // B
-        x += 1
-      }
-      r += 1
-    }
-    Some((w, h, out))
-  }
-
   /** Decode ANY of the four supported image formats to row-major gray
     * pixels (integer luma: (299·R + 587·G + 114·B) / 1000). */
-  private[ops] def imageGrayAny(p: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    def luma(r: Int, g: Int, b: Int) = (299 * r + 587 * g + 114 * b) / 1000
-    if (p.length < 8) None
-    else if (p(0) == 'B' && p(1) == 'M')
-      bmpRgb(p).map { case (w, h, rgb) =>
-        (w, h, Array.tabulate(w * h)(i =>
-          luma(rgb(i * 3) & 0xff, rgb(i * 3 + 1) & 0xff, rgb(i * 3 + 2) & 0xff)))
+  private[ops] def imageGrayAny(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    decodeImage(p).map { img =>
+      val px = img.px; val pal = img.palette
+      val gray = new Array[Int](px.length)
+      var i = 0
+      while (i < gray.length) {
+        val c = if (pal == null) px(i) else pal(px(i))
+        gray(i) = (299 * ((c >> 16) & 0xff) + 587 * ((c >> 8) & 0xff) + 114 * (c & 0xff)) / 1000
+        i += 1
       }
-    else if (p(0) == 'G' && p(1) == 'I' && p(2) == 'F')
-      parseGif(p).map { case (w, h, palette, idx) =>
-        (w, h, Array.tabulate(w * h) { i =>
-          val c = palette(idx(i))
-          luma((c >> 16) & 0xff, (c >> 8) & 0xff, c & 0xff)
-        })
-      }
-    else if ((p(0) & 0xff) == 0x89 && p(1) == 'P')
-      parsePng(p).map { case (w, h, rgb) =>
-        (w, h, Array.tabulate(w * h)(i =>
-          luma(rgb(i * 3) & 0xff, rgb(i * 3 + 1) & 0xff, rgb(i * 3 + 2) & 0xff)))
-      }
-    else if ((p(0) & 0xff) == 0xff && (p(1) & 0xff) == 0xd8)
-      jpegRgb(p).map { case (w, h, rgb) =>
-        (w, h, Array.tabulate(w * h)(i =>
-          luma(rgb(i * 3) & 0xff, rgb(i * 3 + 1) & 0xff, rgb(i * 3 + 2) & 0xff)))
-      }
-    else None
-  }
+      (img.w, img.h, gray)
+    }
 
   /** 64-bit difference hash: sample a 9×8 grid by nearest index
     * (sx = x·w div 9, sy = y·h div 8), bit (y·8+x) — MSB first — set
@@ -3372,10 +3178,18 @@ object Multimodal {
     }.toDF("id", "hl")
   }
 
+  /** [[plantedRgb]] with the dHash sample pixel (4w/9, 3h/8) inverted
+    * on all three channels — the q224 near-dup twin's content. */
+  private[ops] def plantedRgbPerturbed(id: Long, w: Int, h: Int): Array[Int] = {
+    val px = plantedRgb(id, w, h)
+    px((3 * h / 8) * w + 4 * w / 9) ^= 0xffffff
+    px
+  }
+
   /** The q224 corpus: for every doc, FOUR payloads of the same
     * planted content — the BMP original, the same pixels re-encoded
     * as PNG (byte-disjoint, content-identical), the original pushed
-    * through the REAL resizeBmpNearest to 18×16 (the 2× index map
+    * through the REAL [[resizeNearest]] to 18×16 (the 2× index map
     * composes exactly, so the dHash samples the same source pixels),
     * and a perturbed twin with ONE sampled pixel inverted (flips at
     * most two comparisons per sampling row — a planted NEAR-dup at
@@ -3387,35 +3201,12 @@ object Multimodal {
       Seq(
         MediaRow(id * 4, "image", bmpWithPixels(id, w, h)),
         MediaRow(id * 4 + 1, "image", pngWithPixels(id, w, h)),
-        MediaRow(id * 4 + 3, "image", bmpWithPixelsPerturbed(id, w, h)))
+        MediaRow(id * 4 + 3, "image", bmpFromRgb(w, h, plantedRgbPerturbed(id, w, h))))
     }
-    val resized = resizeBmpNearest(
+    val resized = resizeNearest(
       base.filter(r => r.media_id % 4 == 0), 18, 16)
       .map(r => r.copy(media_id = r.media_id + 2))
     base.union(resized)
-  }
-
-  /** [[bmpWithPixels]] with the dHash sample pixel (4w/9, 3h/8)
-    * inverted on all three channels. */
-  private[ops] def bmpWithPixelsPerturbed(id: Long, w: Int, h: Int): Array[Byte] = {
-    val stride = ((w * 3 + 3) / 4) * 4
-    val body = new Array[Byte](stride * h)
-    val px = 4 * w / 9; val py = 3 * h / 8
-    var r = 0
-    while (r < h) {
-      val y = h - 1 - r
-      var x = 0
-      while (x < w) {
-        val o = r * stride + x * 3
-        val inv = x == px && y == py
-        body(o) = (if (inv) 255 - plantedB(id, x, y) else plantedB(id, x, y)).toByte
-        body(o + 1) = (if (inv) 255 - plantedG(id, x, y) else plantedG(id, x, y)).toByte
-        body(o + 2) = (if (inv) 255 - plantedR(id, x, y) else plantedR(id, x, y)).toByte
-        x += 1
-      }
-      r += 1
-    }
-    bmpHeader(w, h, body.length) ++ body
   }
 
   /** Frame sampling for "video" payloads: every k-th 16-byte chunk of

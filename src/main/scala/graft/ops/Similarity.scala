@@ -453,7 +453,11 @@ object Similarity {
     * crawl with nothing new, realistic for the recurring pipeline this
     * targets) yields an empty codes frame instead of throwing on
     * `.first()` (round-6 ADVICE). Delta vectors of the wrong
-    * dimensionality are a caller error, as with any standing index. */
+    * dimensionality are a caller error, as with any standing index.
+    * The width is read once as a Scala Int because `subVectors` cuts
+    * the m slices from the embedding frame BEFORE it meets the
+    * codebooks; as an expression it would first need the model's
+    * width joined onto every vector row. */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int = 8): DataFrame = {
     val subDim = codebooks.select(size(col("cw"))).first().getInt(0)
@@ -474,27 +478,29 @@ object Similarity {
     * use the batch `pqEncode`. */
   def pqEncodeStreaming(emb: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame): DataFrame = {
-    val subDim = codebooks.select(size(col("cw"))).first().getInt(0)
-    val m = codebooks.agg(countDistinct(col("s")).cast("int")).first().getInt(0)
     val cb = codebooks.agg(
       collect_list(struct(col("s"), col("code"), col("cw"))).as("_cb"))
     normalized(emb, idCol, vecCol)
       .crossJoin(broadcast(cb))
       .select(col("id"), explode(
-        // a subspace ABSENT from the model keeps the Long.MaxValue
-        // seed and is filtered out — matching the batch form, whose
-        // inner join emits no row for a missing (s) rather than a
-        // fabricated code
+        // the subspace ids and their width are read from the broadcast
+        // model itself, so no side job runs on the codebooks; a
+        // subspace with no finite distance keeps the Long.MaxValue seed
+        // and is filtered out rather than emitting a fabricated code
         filter(
-          transform(sequence(lit(0), lit(m - 1)), s =>
-            struct(s.cast("int").as("s"),
+          transform(array_sort(array_distinct(
+              transform(col("_cb"), e => e.getField("s").cast("int")))), s =>
+            struct(s.as("s"),
               aggregate(
                 filter(col("_cb"), e => e.getField("s") === s),
                 lit(Long.MaxValue),
-                (acc, e) => least(acc,
-                  round(squaredL2(slice(col("ve"), s * subDim + 1, lit(subDim)),
-                    e.getField("cw")) * 1e6).cast("long") * Pack
-                    + e.getField("code"))).as("p"))),
+                (acc, e) => {
+                  val subDim = size(e.getField("cw"))
+                  least(acc,
+                    round(squaredL2(slice(col("ve"), s * subDim + 1, subDim),
+                      e.getField("cw")) * 1e6).cast("long") * Pack
+                      + e.getField("code"))
+                }).as("p"))),
           sc => sc.getField("p") =!= Long.MaxValue)).as("_sc"))
       .select(col("id"), col("_sc.s").as("s"),
         (col("_sc.p") % Pack).as("code"))
@@ -976,12 +982,12 @@ object Similarity {
   def pqServe(emb: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, k: Int, cb: DataFrame, codes: DataFrame,
       shortlist: Int = 100): DataFrame = {
-    val subDim = cb.select(size(col("cw"))).first().getInt(0)
+    val subDim = size(col("cw"))
     val nrm = normalized(emb, idCol, vecCol).persist()
     val q = nrm.filter(queryPred).select(col("id").as("q_id"), col("ve").as("qe"))
     val tab = q.crossJoin(broadcast(cb))
       .select(col("q_id"), col("s"), col("code"),
-        d2i(slice(col("qe"), col("s") * subDim + 1, lit(subDim)), col("cw")).as("d2i"))
+        d2i(slice(col("qe"), col("s") * subDim + 1, subDim), col("cw")).as("d2i"))
     val scored = codes.join(broadcast(tab), Seq("s", "code"))
       .filter(col("id") =!= col("q_id"))
       .groupBy(col("q_id"), col("id"))

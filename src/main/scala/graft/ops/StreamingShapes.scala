@@ -55,55 +55,48 @@ object StreamingShapes {
     srcDir.toString
   }
 
-  /** Scale the STREAM's shuffle/state-store partition count to the
-    * source, for the duration of `body` (round-16, guide §2: streaming
-    * plans get no AQE coalescing, so the session's fixed
-    * shuffle.partitions — sized for batch parallelism — becomes the
-    * state-store count no matter how small the replay is: 32 stores ×
-    * (delta file + snapshot + commit) per micro-batch for a 5k-row
+  /** A session for one bounded stream: a clone of `s` (shared
+    * SparkContext and catalog, its own SQL conf) seeded with `s`'s
+    * runtime conf, with two stream-only settings that never touch the
+    * caller's session.
+    *
+    * Shuffle/state-store partitions are scaled to the source (round-16:
+    * streaming plans get no AQE coalescing, so the session's
+    * fixed shuffle.partitions — sized for batch parallelism — becomes
+    * the state-store count no matter how small the replay is: 32 stores
+    * × (delta file + snapshot + commit) per micro-batch for a 5k-row
     * corpus was pure file-I/O overhead in the q232/q233 gates). One
     * partition per ~128 MB input split, floor 2, capped at the
     * session's own setting so a production-sized source keeps its full
-    * configured width — derived from data, not a local constant. The
-    * session value is restored before any downstream batch work.
+    * configured width.
     *
-    * CALLER CONTRACT (round-17 ADVICE): this mutates the SESSION-global
-    * shuffle.partitions for the duration of `body` — callers must not
-    * plan concurrent batch work on the same session inside that window
-    * (the gates run their streams sequentially, and the overlapped-
-    * write Future patterns elsewhere never run inside it). A deployment
-    * needing concurrency would set the conf on a cloned session
-    * (`s.newSession()`). */
-  private def withStreamShufflePartitions[A](s: SparkSession, dir: String)(
-      body: => A): A = {
-    // file-OR-directory walk (round-17 ADVICE): Files.size of a
-    // directory is meaningless, which would collapse the sizing rule
-    // to the floor of 2 if the source ever became a multi-file dataset
+    * No-data micro-batches are off: a BOUNDED availableNow replay never
+    * benefits from the trailing no-data batch — its only job is
+    * advancing the watermark to evict state, and these gates' dedup
+    * emits rows on arrival while the checkpoint is discarded when the
+    * run ends. Skipping it saves one full batch cycle (offset/commit
+    * log writes + a state-store load/commit per partition + re-execution
+    * of the static broadcast side) per gate. A CONTINUOUS deployment
+    * keeps the default: there the no-data batch is what bounds state
+    * size between arrivals. */
+  private def streamSession(s: SparkSession, dir: String): SparkSession = {
+    // file-OR-directory walk: Files.size of a directory is meaningless,
+    // which would collapse the sizing rule to the floor of 2 if the
+    // source ever became a multi-file dataset
     def bytesOf(p: java.nio.file.Path): Long =
       if (java.nio.file.Files.isDirectory(p)) {
         val st = java.nio.file.Files.list(p)
         try st.iterator().asScala.map(bytesOf).sum finally st.close()
       } else java.nio.file.Files.size(p)
     val srcBytes = bytesOf(java.nio.file.Paths.get(dir, "documents.parquet"))
-    val sess = s.conf.get("spark.sql.shuffle.partitions")
-    val parts = math.max(2L,
-      math.min(sess.toLong, srcBytes / (128L << 20) + 1L)).toInt
-    // Round-17: a BOUNDED availableNow replay never benefits from the
-    // trailing NO-DATA micro-batch — its only job is advancing the
-    // watermark to evict state, and these gates' dedup emits rows on
-    // arrival (append output lands in the data batch) while the
-    // checkpoint is discarded when the run ends. Skipping it saves one
-    // full batch cycle (offset/commit log writes + a state-store
-    // load/commit per partition + re-execution of the static broadcast
-    // side) per gate. A CONTINUOUS deployment keeps the default: there
-    // the no-data batch is what bounds state size between arrivals.
-    val noData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", sess)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData)
-    }
+    val parts = math.max(2L, math.min(
+      s.conf.get("spark.sql.shuffle.partitions").toLong,
+      srcBytes / (128L << 20) + 1L))
+    val ss = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (ss.conf.isModifiable(k)) ss.conf.set(k, v) }
+    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    ss
   }
 
   /** Run `pipe` (a streaming frame over the documents file source) to
@@ -113,20 +106,19 @@ object StreamingShapes {
     * whole (single-trigger) run, so the stateful dedup sees the full
     * corpus — the correct semantics for a bounded replay. */
   private def landAvailableNow(s: SparkSession, dir: String, tag: String)(
-      pipe: DataFrame => DataFrame): DataFrame = {
+      pipe: (SparkSession, DataFrame) => DataFrame): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    withStreamShufflePartitions(s, dir) {
-      val src = s.readStream.schema(docs(s, dir).schema)
-        .parquet(stageSourceDir(tmp, dir))
-        .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
-      val q = pipe(src).writeStream.format("parquet")
-        .option("path", s"$tmp/docs")
-        .option("checkpointLocation", s"$tmp/cp")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
+    val ss = streamSession(s, dir)
+    val src = ss.readStream.schema(docs(ss, dir).schema)
+      .parquet(stageSourceDir(tmp, dir))
+      .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
+    val q = pipe(ss, src).writeStream.format("parquet")
+      .option("path", s"$tmp/docs")
+      .option("checkpointLocation", s"$tmp/cp")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
     s.read.parquet(s"$tmp/docs")
   }
 
@@ -149,8 +141,8 @@ object StreamingShapes {
     * near-dups — the full streaming production loop reaching exactly
     * the batch `CorpusPipeline.clean` end state. */
   def streamCleanGate(s: SparkSession, dir: String): DataFrame = {
-    val landed = landAvailableNow(s, dir, "q232")(
-      CorpusStream.cleanStream(_, "text", "ts", "1 minute"))
+    val landed = landAvailableNow(s, dir, "q232")((_, src) =>
+      CorpusStream.cleanStream(src, "text", "ts", "1 minute"))
     val canon = canonicalIds(landed, docs(s, dir))
     CorpusStream.compactNearDups(canon, "doc_id", "text")
       .select(col("doc_id"), col("lang"), col("n_tokens"))
@@ -167,10 +159,10 @@ object StreamingShapes {
     * hash the batch recipe uses — identical by construction. */
   def streamRecipeGate(s: SparkSession, dir: String): DataFrame = {
     val cfg = CorpusPipeline.RecipeConfig()
-    val d = docs(s, dir)
-    val benchmark = d.filter(pmod(col("doc_id"), lit(20)) === 0)
-    val corpusDomain = d.filter(pmod(col("doc_id"), lit(20)) =!= 0)
-    val landed = landAvailableNow(s, dir, "q233") { src =>
+    val corpusDomain = docs(s, dir).filter(pmod(col("doc_id"), lit(20)) =!= 0)
+    val landed = landAvailableNow(s, dir, "q233") { (ss, src) =>
+      // the static side is planned on the stream's own session
+      val benchmark = docs(ss, dir).filter(pmod(col("doc_id"), lit(20)) === 0)
       CorpusStream.recipeStream(
         src.filter(pmod(col("doc_id"), lit(20)) =!= 0), benchmark,
         "doc_id", "text", "ts", "1 minute", cfg)
@@ -192,12 +184,11 @@ object StreamingShapes {
     * verdict from the accumulated partials alone. */
   def streamReleaseGate(s: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_q234").toString
-    withStreamShufflePartitions(s, dir) {
-      val src = s.readStream.schema(docs(s, dir).schema)
-        .parquet(stageSourceDir(tmp, dir))
-      val q = CorpusStream.releaseGateStream(src, s"$tmp/stats", s"$tmp/cp")
-      try { q.processAllAvailable() } finally q.stop()
-    }
+    val ss = streamSession(s, dir)
+    val src = ss.readStream.schema(docs(ss, dir).schema)
+      .parquet(stageSourceDir(tmp, dir))
+    val q = CorpusStream.releaseGateStream(src, s"$tmp/stats", s"$tmp/cp")
+    try { q.processAllAvailable() } finally q.stop()
     CorpusStream.releaseGateFromPartials(s, s"$tmp/stats")
   }
 

@@ -135,60 +135,193 @@ class MultimodalSpec extends SparkSpec {
     assert(topk.length == 6) // 2 queries × 3 neighbors
   }
 
-  test("bmpPixelStats: real pixel walk — planted sums, top-down rows, corrupt-pad reject") {
-    // bottom-up (positive height), w=5 forces a non-trivial stride (16)
-    val id = 42L; val w = 5; val h = 3
-    val p = Multimodal.bmpWithPixels(id, w, h)
-    val expB = (for (x <- 0 until w; y <- 0 until h)
-      yield Multimodal.plantedB(id, x, y).toLong).sum
-    val expG = (for (x <- 0 until w; y <- 0 until h)
-      yield Multimodal.plantedG(id, x, y).toLong).sum
-    val expR = (for (x <- 0 until w; y <- 0 until h)
-      yield Multimodal.plantedR(id, x, y).toLong).sum
-    assert(Multimodal.bmpPixelStats(p) == ((w, h, expB, expG, expR, 15L)))
-    // TOP-DOWN variant (negative DIB height) must read the same sums:
-    // reverse the rows and flip the stored height's sign
+  /** One row per image format: the names of its stats and resize
+    * cases, its planted payload at (id, w, h), its planted (r, g, b)
+    * at image coordinate (x, y), its planted synthesizer, the dims
+    * that synthesizer plants per id, re-layouts of the planted stats
+    * payload that must read the same stats, and corrupt payloads that
+    * must read the sentinel. JPEG plants coefficients, not pixels, so
+    * it has no pixel truth: its stats are checked against the decoded
+    * gray raster and its resize against the decoded source (±3). */
+  private case class ImageFormat(name: String, statsCase: String, resizeCase: String,
+      payload: (Long, Int, Int) => Array[Byte],
+      truth: Option[(Long, Int, Int) => (Int, Int, Int)],
+      synth: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[Multimodal.MediaRow],
+      dims: Long => (Int, Int),
+      sameStats: Array[Byte] => Seq[(String, Array[Byte])],
+      rejects: Array[Byte] => Seq[(String, Array[Byte])])
+
+  // w=5 forces a non-trivial BMP stride (16); h=6 cycles all five PNG
+  // filter types
+  private val statsId = 42L
+  private val statsW = 5
+  private val statsH = 6
+
+  /** The same BMP stored TOP-DOWN: rows reversed, negative DIB height. */
+  private def bmpTopDown(bmp: Array[Byte], h: Int): Array[Byte] = {
     val stride = 16
-    val topDown = p.take(54) ++
-      (h - 1 to 0 by -1).flatMap(r => p.slice(54 + r * stride, 54 + (r + 1) * stride))
+    val topDown = bmp.take(54) ++
+      (h - 1 to 0 by -1).flatMap(r => bmp.slice(54 + r * stride, 54 + (r + 1) * stride))
     val negH = -h
     topDown(22) = negH.toByte; topDown(23) = (negH >> 8).toByte
     topDown(24) = (negH >> 16).toByte; topDown(25) = (negH >> 24).toByte
-    assert(Multimodal.bmpPixelStats(topDown) == ((w, h, expB, expG, expR, 15L)))
-    // corrupt-row-pad reject: a bitmap short its final PAD byte is
-    // corrupt — sentinel, never a partial read (round-13 VERDICT item)
-    assert(Multimodal.bmpPixelStats(p.dropRight(1))._1 == -1)
-    // non-24bpp and compressed bitmaps are sentinel too
-    val bpp8 = p.clone(); bpp8(28) = 8
-    assert(Multimodal.bmpPixelStats(bpp8)._1 == -1)
-    val rle = p.clone(); rle(30) = 1
-    assert(Multimodal.bmpPixelStats(rle)._1 == -1)
+    topDown
   }
 
-  test("resizeBmpNearest: REAL resize — output pixels are the nearest-neighbor source reads") {
-    val media = Multimodal.synthesizeBmpPixels(docs.limit(30))
-    val resized = Multimodal.decodeBmpPixels(
-      Multimodal.resizeBmpNearest(media, 8, 6)).collect()
-    assert(resized.length == 30)
-    resized.foreach { st =>
-      val id = st.media_id
-      val w = (id % 21 + 4).toInt; val h = (id % 17 + 4).toInt
-      val pts = for (x <- 0 until 8; y <- 0 until 6)
-        yield (x * w / 8, y * h / 6)
-      assert(st.width == 8 && st.height == 6 && st.n_px == 48L)
-      assert(st.sum_b == pts.map { case (sx, sy) =>
-        Multimodal.plantedB(id, sx, sy).toLong }.sum, s"sum_b of $id")
-      assert(st.sum_g == pts.map { case (sx, sy) =>
-        Multimodal.plantedG(id, sx, sy).toLong }.sum, s"sum_g of $id")
-      assert(st.sum_r == pts.map { case (sx, sy) =>
-        Multimodal.plantedR(id, sx, sy).toLong }.sum, s"sum_r of $id")
+  private val planted = (id: Long, x: Int, y: Int) =>
+    (Multimodal.plantedR(id, x, y), Multimodal.plantedG(id, x, y), Multimodal.plantedB(id, x, y))
+  private val imageFormats = Seq(
+    ImageFormat("bmp",
+      "bmpPixelStats: real pixel walk — planted sums, top-down rows, corrupt-pad reject",
+      "resizeBmpNearest: REAL resize — output pixels are the nearest-neighbor source reads",
+      Multimodal.bmpWithPixels, Some(planted),
+      Multimodal.synthesizeBmpPixels, id => ((id % 21 + 4).toInt, (id % 17 + 4).toInt),
+      bmp => Seq("top-down rows" -> bmpTopDown(bmp, statsH)),
+      { bmp =>
+        val bpp8 = bmp.clone(); bpp8(28) = 8
+        val rle = bmp.clone(); rle(30) = 1
+        // |Int.MinValue| stays negative: must reject, not allocate or walk
+        val minH = bmp.clone(); minH(22) = 0; minH(23) = 0; minH(24) = 0; minH(25) = 0x80.toByte
+        Seq("short its final pad byte" -> bmp.dropRight(1), "8bpp" -> bpp8, "RLE" -> rle,
+          "height Int.MinValue" -> minH)
+      }),
+    ImageFormat("gif",
+      "gifPixelStats: malformed payloads reject with the sentinel",
+      "resizeGifNearest: real LZW decode→remap→re-encode round-trip",
+      Multimodal.gifWithPixels, Some { (id: Long, x: Int, y: Int) =>
+        val i = Multimodal.plantedGifIdx(id, x, y)
+        (Multimodal.gifPaletteR(i), Multimodal.gifPaletteG(i), Multimodal.gifPaletteB(i))
+      }, Multimodal.synthesizeGifPixels, id => ((id % 19 + 4).toInt, (id % 13 + 4).toInt),
+      _ => Seq.empty,
+      { _ =>
+        val gif = Multimodal.gifWithPixels(9L, 6, 5)
+        Seq("truncated in GCT" -> gif.take(40), "truncated code stream" -> gif.dropRight(8),
+          "header only" -> "GIF89a".getBytes("US-ASCII"))
+      }),
+    ImageFormat("png",
+      "pngPixelStats: CRC and structure rejects",
+      "resizePngNearest: inflate→unfilter→remap→refilter→deflate round-trip",
+      Multimodal.pngWithPixels, Some(planted),
+      Multimodal.synthesizePngPixels, id => ((id % 23 + 4).toInt, (id % 11 + 4).toInt),
+      _ => Seq.empty,
+      { _ =>
+        val png = Multimodal.pngWithPixels(7L, 9, 6)
+        // flip one byte INSIDE the IDAT payload: the chunk CRC must catch it
+        val crcBad = png.clone(); crcBad(8 + 25 + 12) = (crcBad(8 + 25 + 12) ^ 0x01).toByte
+        val deep = png.clone(); deep(8 + 8 + 8) = 16
+        Seq("CRC flip" -> crcBad, "truncated" -> png.dropRight(6), "16-bit depth" -> deep)
+      }),
+    ImageFormat("jpeg",
+      "jpegPixelStats: decoded gray sums; malformed rejects",
+      "resizeJpegNearest: real Huffman/IDCT decode → remap → FDCT re-encode round-trip",
+      Multimodal.jpegWithCoefficients, None,
+      Multimodal.synthesizeJpegPixels, Multimodal.plantedJpegDims,
+      _ => Seq.empty,
+      { _ =>
+        val jpeg = Multimodal.jpegWithCoefficients(5L, 12, 10)
+        val prog = jpeg.clone() // SOF0 → SOF2 (progressive): unsupported, not garbage
+        val sofAt = prog.indices.find(i => (prog(i) & 0xff) == 0xff &&
+          (prog(i + 1) & 0xff) == 0xc0).get
+        prog(sofAt + 1) = 0xc2.toByte
+        Seq("truncated entropy" -> jpeg.take(jpeg.length / 2),
+          "truncated header" -> jpeg.take(30), "progressive" -> prog)
+      }))
+
+  private def plantedStats(truth: (Long, Int, Int) => (Int, Int, Int), id: Long,
+      pts: Seq[(Int, Int)]): (Long, Long, Long) = {
+    val px = pts.map { case (x, y) => truth(id, x, y) }
+    (px.map(_._3.toLong).sum, px.map(_._2.toLong).sum, px.map(_._1.toLong).sum)
+  }
+
+  for (f <- imageFormats) test(f.statsCase) {
+    val (id, w, h) = (statsId, statsW, statsH)
+    val p = f.payload(id, w, h)
+    val expected = f.truth match {
+      case Some(truth) =>
+        val (sb, sg, sr) = plantedStats(truth, id, for (x <- 0 until w; y <- 0 until h) yield (x, y))
+        Multimodal.PixelStats(id, w, h, sb, sg, sr, w.toLong * h)
+      case None => // gray: every channel sums the decoded raster
+        val Some((gw, gh, gray)) = Multimodal.imageGrayAny(p)
+        val s = gray.map(_.toLong).sum
+        Multimodal.PixelStats(id, gw, gh, s, s, s, gw.toLong * gh)
     }
-    // non-BMP payloads pass through untouched
-    val passthrough = Multimodal.resizeBmpNearest(
-      Multimodal.synthesize(docs.limit(4)), 8, 6).collect()
-    val original = Multimodal.synthesize(docs.limit(4)).collect()
-    assert(passthrough.map(_.payload.toSeq).toSet ==
-      original.map(_.payload.toSeq).toSet)
+    assert(expected.width == w && expected.height == h, f.name)
+    assert(Multimodal.pixelStats(id, p) == expected, f.name)
+    f.sameStats(p).foreach { case (what, q) =>
+      assert(Multimodal.pixelStats(id, q) == expected, s"${f.name} $what")
+    }
+    // rejects: the all-(-1) sentinel, never a partial read
+    f.rejects(p).foreach { case (what, q) =>
+      assert(Multimodal.pixelStats(3L, q) ==
+        Multimodal.PixelStats(3L, -1, -1, -1L, -1L, -1L, -1L), s"${f.name} $what")
+    }
+  }
+
+  for (f <- imageFormats) test(f.resizeCase) {
+    val media = f.synth(docs.limit(20))
+    val sources = media.collect().map(r =>
+      r.media_id -> Multimodal.imageGrayAny(r.payload).get).toMap
+    val resized = Multimodal.resizeNearest(media, 8, 6).collect()
+    assert(resized.length == 20)
+    val stats = Multimodal.decodePixels(Multimodal.resizeNearest(media, 8, 6)).collect()
+    assert(stats.length == 20)
+    stats.foreach { st =>
+      val id = st.media_id
+      val (w, h) = f.dims(id)
+      val pts = for (x <- 0 until 8; y <- 0 until 6) yield (x * w / 8, y * h / 6)
+      assert(st.width == 8 && st.height == 6 && st.n_px == 48L, s"$id")
+      f.truth.foreach { truth =>
+        val (sb, sg, sr) = plantedStats(truth, id, pts)
+        assert((st.sum_b, st.sum_g, st.sum_r) == ((sb, sg, sr)), s"sums of $id")
+      }
+    }
+    // per pixel against the decoded source through the same map; the
+    // lossy JPEG gets one extra FDCT/IDCT round-trip under the
+    // preserved all-ones table: rounding error only
+    val tol = if (f.truth.isEmpty) 3 else 0
+    resized.foreach { r =>
+      val (w, h, src) = sources(r.media_id)
+      val Some((gw, gh, got)) = Multimodal.imageGrayAny(r.payload)
+      assert(Multimodal.sniff(r.payload) == ((f.name, 8, 6)) && (gw, gh) == ((8, 6)))
+      for (y <- 0 until 6; x <- 0 until 8) {
+        val expect = src((y * h / 6) * w + x * w / 8)
+        assert(math.abs(got(y * 8 + x) - expect) <= tol, s"id=${r.media_id} ($x,$y)")
+      }
+    }
+  }
+
+  test("resizeNearest: mixed formats resize in place; GRFT passes") {
+    val ids = docs.limit(6)
+    val mixed = imageFormats.map(_.synth(ids)).reduce(_ union _)
+      .union(Multimodal.synthesize(ids))
+    // keyed by (id, format): a resize that changed a payload's format
+    // would leave its key unmatched
+    def byKey(rows: Array[Multimodal.MediaRow]) =
+      rows.map(r => (r.media_id, Multimodal.sniff(r.payload)._1) -> r.payload).toMap
+    val before = byKey(mixed.collect())
+    val after = byKey(Multimodal.resizeNearest(mixed, 8, 6).collect())
+    assert(before.size == 30 && after.keySet == before.keySet)
+    before.foreach { case (key @ (id, fmt), b) =>
+      val a = after(key)
+      if (fmt == "grft") assert(a.sameElements(b), s"GRFT stub $id must pass through")
+      else {
+        assert(Multimodal.sniff(a) == ((fmt, 8, 6)), s"$fmt $id")
+        val src = Multimodal.decodeImage(b).get
+        val dst = Multimodal.decodeImage(a).get
+        fmt match {
+          case "gif" => // palette and indices survive: only the raster is remapped
+            assert(dst.palette.toSeq == src.palette.toSeq)
+            assert(dst.px.toSeq ==
+              Multimodal.nearest(src.w, src.h, src.px, 8, 6).toSeq)
+          case "jpeg" => // re-encoded under the source's quant table
+            val q = (p: Array[Byte]) => Multimodal.parseJpegComponents(p).get._3(0).quant.toSeq
+            assert(q(a) == q(b))
+          case _ =>
+            assert(dst.px.toSeq == Multimodal.nearest(src.w, src.h, src.px, 8, 6).toSeq)
+        }
+      }
+    }
+    assert(before.keySet.map(_._2) == Set("bmp", "gif", "grft", "jpeg", "png"))
   }
 
   test("LZW: encode∘decode identity across width bumps, dict reset, KwKwK") {
@@ -256,7 +389,7 @@ class MultimodalSpec extends SparkSpec {
       img.getRaster.setSample(x, y, 0, Multimodal.plantedGifIdx(id, x, y))
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "gif", bos))
-    val (gw, gh, sb, sg, sr, n) = Multimodal.gifPixelStats(bos.toByteArray)
+    val Multimodal.PixelStats(_, gw, gh, sb, sg, sr, n) = Multimodal.pixelStats(0L, bos.toByteArray)
     assert((gw, gh, n) == ((w, h, w.toLong * h)))
     val pts = for (x <- 0 until w; y <- 0 until h) yield Multimodal.plantedGifIdx(id, x, y)
     assert(sr == pts.map(i => Multimodal.gifPaletteR(i).toLong).sum)
@@ -285,7 +418,7 @@ class MultimodalSpec extends SparkSpec {
     }
     // our encoder → the JDK's independent decoder, per-pixel
     val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(Multimodal.gifFromIndices(w, h, idx)))
+      new java.io.ByteArrayInputStream(Multimodal.gifFromIndices(w, h, idx, Multimodal.gifPlantedPalette)))
     assert(img != null && img.getWidth == w && img.getHeight == h)
     for (y <- 0 until h; x <- 0 until w) {
       val i = idx(y * w + x)
@@ -311,37 +444,6 @@ class MultimodalSpec extends SparkSpec {
     assert(gw == w && gh == h)
     for (y <- 0 until h; x <- 0 until w)
       assert(got(y * w + x) == idx(y * w + x), s"our pixel ($x,$y)")
-  }
-
-  test("gifPixelStats: malformed payloads reject with the sentinel") {
-    val good = Multimodal.gifWithPixels(9L, 6, 5)
-    assert(Multimodal.gifPixelStats(good)._1 == 6)
-    assert(Multimodal.gifPixelStats(good.take(40))._1 == -1)   // truncated in GCT
-    assert(Multimodal.gifPixelStats(good.dropRight(8))._1 == -1) // truncated code stream
-    assert(Multimodal.gifPixelStats("GIF89a".getBytes("US-ASCII"))._1 == -1)
-    assert(Multimodal.gifPixelStats(Multimodal.bmpWithPixels(9L, 6, 5))._1 == -1)
-  }
-
-  test("resizeGifNearest: real LZW decode→remap→re-encode round-trip") {
-    val media = Multimodal.synthesizeGifPixels(docs.limit(25))
-    val resized = Multimodal.decodeGifPixels(
-      Multimodal.resizeGifNearest(media, 8, 6)).collect()
-    assert(resized.length == 25)
-    resized.foreach { st =>
-      val id = st.media_id
-      val w = (id % 19 + 4).toInt; val h = (id % 13 + 4).toInt
-      val pts = for (x <- 0 until 8; y <- 0 until 6)
-        yield Multimodal.plantedGifIdx(id, x * w / 8, y * h / 6)
-      assert(st.width == 8 && st.height == 6 && st.n_px == 48L)
-      assert(st.sum_r == pts.map(i => Multimodal.gifPaletteR(i).toLong).sum, s"sum_r of $id")
-      assert(st.sum_g == pts.map(i => Multimodal.gifPaletteG(i).toLong).sum, s"sum_g of $id")
-      assert(st.sum_b == pts.map(i => Multimodal.gifPaletteB(i).toLong).sum, s"sum_b of $id")
-    }
-    // non-GIF payloads pass through untouched
-    val bmp = Multimodal.synthesizeBmpPixels(docs.limit(4))
-    val through = Multimodal.resizeGifNearest(bmp, 8, 6).collect()
-    assert(through.map(_.payload.toSeq).toSet ==
-      bmp.collect().map(_.payload.toSeq).toSet)
   }
 
   test("PNG filters: unfilter∘filter identity for all five types, any prior") {
@@ -385,42 +487,6 @@ class MultimodalSpec extends SparkSpec {
       assert((rgb(o + 1) & 0xff) == Multimodal.plantedG(id, x, y), s"G ($x,$y)")
       assert((rgb(o + 2) & 0xff) == Multimodal.plantedB(id, x, y), s"B ($x,$y)")
     }
-  }
-
-  test("pngPixelStats: CRC and structure rejects") {
-    val good = Multimodal.pngWithPixels(7L, 9, 6)
-    assert(Multimodal.pngPixelStats(good)._1 == 9)
-    // flip one byte INSIDE the IDAT payload: the chunk CRC must catch it
-    val crcBad = good.clone()
-    crcBad(8 + 25 + 12) = (crcBad(8 + 25 + 12) ^ 0x01).toByte
-    assert(Multimodal.pngPixelStats(crcBad)._1 == -1)
-    assert(Multimodal.pngPixelStats(good.dropRight(6))._1 == -1)   // truncated
-    val deep = good.clone(); deep(8 + 8 + 8) = 16                  // 16-bit depth
-    assert(Multimodal.pngPixelStats(deep)._1 == -1)
-    assert(Multimodal.pngPixelStats(Multimodal.gifWithPixels(7L, 9, 6))._1 == -1)
-  }
-
-  test("resizePngNearest: inflate→unfilter→remap→refilter→deflate round-trip") {
-    val media = Multimodal.synthesizePngPixels(docs.limit(25))
-    val resized = Multimodal.decodePngPixels(
-      Multimodal.resizePngNearest(media, 8, 6)).collect()
-    assert(resized.length == 25)
-    resized.foreach { st =>
-      val id = st.media_id
-      val w = (id % 23 + 4).toInt; val h = (id % 11 + 4).toInt
-      val pts = for (x <- 0 until 8; y <- 0 until 6) yield (x * w / 8, y * h / 6)
-      assert(st.width == 8 && st.height == 6 && st.n_px == 48L)
-      assert(st.sum_r == pts.map { case (sx, sy) =>
-        Multimodal.plantedR(id, sx, sy).toLong }.sum, s"sum_r of $id")
-      assert(st.sum_g == pts.map { case (sx, sy) =>
-        Multimodal.plantedG(id, sx, sy).toLong }.sum, s"sum_g of $id")
-      assert(st.sum_b == pts.map { case (sx, sy) =>
-        Multimodal.plantedB(id, sx, sy).toLong }.sum, s"sum_b of $id")
-    }
-    val gif = Multimodal.synthesizeGifPixels(docs.limit(4))
-    val through = Multimodal.resizePngNearest(gif, 8, 6).collect()
-    assert(through.map(_.payload.toSeq).toSet ==
-      gif.collect().map(_.payload.toSeq).toSet)
   }
 
   test("wavSampleStats: planted PCM recovered through the RIFF walk; rejects") {
@@ -752,7 +818,7 @@ class MultimodalSpec extends SparkSpec {
       assert((wp, hp) == ((w, h)))
       assert(Multimodal.dhash64(wp, hp, gp) == hOrig, s"png hash id=$id")
       // 2× nearest resize: index maps compose exactly → identical hash
-      val resized = Multimodal.resizeBmpNearest(
+      val resized = Multimodal.resizeNearest(
         Multimodal.synthesizeBmpPixels(docs.filter(col("doc_id") === id)), 18, 16)
         .collect().head.payload
       val Some((wr, hr, gr)) = Multimodal.imageGrayAny(resized)
@@ -761,7 +827,7 @@ class MultimodalSpec extends SparkSpec {
       // perturbed twin: at most 2 comparisons per sampling row touch
       // the inverted pixel → small positive-or-zero Hamming
       val Some((_, _, gq)) =
-        Multimodal.imageGrayAny(Multimodal.bmpWithPixelsPerturbed(id, w, h))
+        Multimodal.imageGrayAny(Multimodal.bmpFromRgb(w, h, Multimodal.plantedRgbPerturbed(id, w, h)))
       val d = java.lang.Long.bitCount(Multimodal.dhash64(w, h, gq) ^ hOrig)
       assert(d <= 4, s"perturbed hamming $d for id=$id")
     }
@@ -979,30 +1045,6 @@ class MultimodalSpec extends SparkSpec {
       assert(math.abs(((t >> 8) & 0xff) - (ours(o + 1) & 0xff)) <= 8, s"G ($x,$y)")
       assert(math.abs((t & 0xff) - (ours(o + 2) & 0xff)) <= 8, s"B ($x,$y)")
     }
-  }
-
-  test("resizeJpegNearest: real Huffman/IDCT decode → remap → FDCT re-encode round-trip") {
-    val media = Multimodal.synthesizeJpegPixels(docs.limit(20))
-    val originals = media.collect().map(r =>
-      r.media_id -> Multimodal.jpegGrayPixels(r.payload).get).toMap
-    val resized = Multimodal.resizeJpegNearest(media, 8, 6).collect()
-    assert(resized.length == 20)
-    resized.foreach { r =>
-      val (w, h, src) = originals(r.media_id)
-      val Some((gw, gh, got)) = Multimodal.jpegGrayPixels(r.payload)
-      assert(gw == 8 && gh == 6)
-      for (y <- 0 until 6; x <- 0 until 8) {
-        val expect = src((y * h / 6) * w + x * w / 8)
-        // one extra FDCT/IDCT round-trip under the preserved all-ones
-        // table: rounding error only
-        assert(math.abs(got(y * 8 + x) - expect) <= 3, s"id=${r.media_id} ($x,$y)")
-      }
-    }
-    // non-JPEG payloads pass through untouched
-    val bmp = Multimodal.synthesizeBmpPixels(docs.limit(4))
-    val through = Multimodal.resizeJpegNearest(bmp, 8, 6).collect()
-    assert(through.map(_.payload.toSeq).toSet ==
-      bmp.collect().map(_.payload.toSeq).toSet)
   }
 
   test("sampleFrames: every k-th 16-byte chunk, explode shape") {

@@ -356,6 +356,23 @@ class CorpusStreamSpec extends SparkSpec {
     assert(afterHalf == batch, "half-landed batch leaked into the verdict")
   }
 
+  test("release-gate rollup: overlapped partial writes over a local relation count every doc") {
+    // the five partial writes run as concurrent jobs; over a local
+    // relation each job evaluates the per-doc lambda expressions while
+    // planning, so a frame shared between two writes races on its
+    // lambda variables and drops quality passes
+    val passText = ((1 to 28).map(i => f"word$i%02d") ++ Seq("the", "a")).mkString(" ")
+    val rows = (0L until 3000L).map(i => (i, "s", if (i % 2 == 0) passText else s"z$i z$i z$i w"))
+    val stats = java.nio.file.Files.createTempDirectory("graft_gate_race").toString
+    (0L until 4L).foreach { b =>
+      CorpusStream.rollupBatch(rows.toDF("doc_id", "source", "text"), b, stats)
+    }
+    val got = spark.read.parquet(s"$stats/docs").orderBy(col("batch"))
+      .select(col("batch"), col("n"), col("p"), col("r3")).collect()
+      .map(r => (r.get(0).toString.toLong, r.getLong(1), r.getLong(2), r.getLong(3))).toList
+    assert(got == (0L until 4L).map(b => (b, 3000L, 1500L, 1500L)).toList)
+  }
+
   test("release-gate partials: legacy layout without ok/ markers still assembles") {
     // pre-round-13 rollupBatch never wrote completion markers; a stats
     // directory in that layout (no ok/ dir at all) must fall back to
