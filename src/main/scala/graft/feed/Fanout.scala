@@ -11,13 +11,19 @@ import org.apache.spark.sql.functions._
   * worker, worker.go:138-154 — NOT the mock's self-feed divergence,
   * internal/broker/mock_kafka.go:33-40; F4).
   *
-  * Scale: the edge table is the build side. When it fits memory it
-  * broadcasts (no shuffle of the post stream); otherwise Spark picks a
-  * shuffled hash/sort-merge join and AQE splits skewed followee
+  * Scale (batch callers): the edge table is the build side. When it
+  * fits memory it broadcasts (no shuffle of the posts); otherwise Spark
+  * picks a shuffled hash/sort-merge join and AQE splits skewed followee
   * partitions (celebrity fan-out — SURVEY §7 hard-part #2, replacing
   * the reference's fixed 20-goroutine cap worker.go:134). For
   * mega-authors beyond AQE's reach, `saltedFanout` spreads one hot key
   * over `salt` sub-partitions.
+  *
+  * Scale (the stream): the roles flip. `FeedStream` keeps the edges
+  * resident as `followerIndex` and broadcasts the micro-batch, whose
+  * size the source's per-trigger limit bounds (Kafka
+  * `maxOffsetsPerTrigger`), the reference worker's lookup of
+  * `followers_by_followee` per post.
   */
 object Fanout {
 
@@ -32,6 +38,14 @@ object Fanout {
       posts.select(posts("author_id").as("user_id"), posts("post_id"),
         posts("author_id"), posts("body"), posts("created_at")))
   }
+
+  /** The follower index of `FeedStream`: the distinct
+    * (user_id, followee_id) edges of `follows`, hash-partitioned by
+    * follower. A join that streams this side keeps that partitioning,
+    * so a later dedup on a key that contains `user_id` (the feed key)
+    * needs no exchange. */
+  def followerIndex(follows: DataFrame): DataFrame =
+    follows.select("user_id", "followee_id").repartition(col("user_id")).dropDuplicates()
 
   /** Skew-resistant variant: replicate each post row `salt` ways and
     * scatter edges by a deterministic hash so one celebrity followee's

@@ -2,12 +2,13 @@ package graft.feed
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** The streaming feed-materialization pipeline (SURVEY.md §3.2):
   *
   *   kafka-envelope stream → from_json → valid/dead-letter split →
-  *   fanout join vs follows → idempotent append into the feed table
+  *   broadcast fanout join vs the resident follower index →
+  *   idempotent append into the feed table
   *
   * Reference semantics carried over (§2.4):
   *   - ST1 at-least-once source + ST2 keyed dedup sink ⇒ effectively
@@ -63,7 +64,22 @@ object FeedStream {
 
   /** Start the full pipeline. `follows` is the static edge table
     * (stream-static join — F1). Each micro-batch: route dead letters,
-    * fan out valid posts, idempotent-append to the feed. */
+    * fan out valid posts, idempotent-append to the feed.
+    *
+    * The edges are read once per query: `Fanout.followerIndex(follows)`
+    * is persisted here, built by the first batch, and unpersisted when
+    * the query terminates, by a listener that then removes itself. The
+    * index is therefore a snapshot of `follows`; edges added later
+    * reach the stream at its next start (a file-backed `follows` is
+    * already a snapshot of its file listing). Two live queries over the
+    * same `follows` share one cache entry, and the first to stop drops
+    * it for both; the other then re-reads the edges every batch.
+    *
+    * Each batch is broadcast against the index. The broadcast side is
+    * one micro-batch, so the source's per-trigger limit (Kafka
+    * `maxOffsetsPerTrigger`) bounds it. The fanned-out rows stay
+    * partitioned by follower, so the sink's key dedup runs without a
+    * shuffle: a Fast-mode batch is one broadcast job and one write job. */
   def start(
       spark: SparkSession,
       raw: DataFrame,
@@ -73,7 +89,8 @@ object FeedStream {
       deadLetterPath: Option[String] = None,
       dedupMode: DedupMode = Exact): StreamingQuery = {
     val parsed = parse(raw)
-    parsed.writeStream
+    val index = Fanout.followerIndex(follows).persist()
+    val q = parsed.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -84,7 +101,7 @@ object FeedStream {
             .select(col("raw_value"), current_timestamp().as("rejected_at"))
           if (!dead.isEmpty) dead.write.mode("append").parquet(p)
         }
-        val feedRows = Fanout.fanout(valid, follows)
+        val feedRows = Fanout.fanout(broadcast(valid), index)
         dedupMode match {
           case Exact => IdempotentSink.appendDedup(spark, feedRows, feedPath, Schemas.feedKey)
           case Fast => IdempotentSink.appendOnce(spark, feedRows, batchId, feedPath, Schemas.feedKey)
@@ -92,5 +109,22 @@ object FeedStream {
         ()
       }
       .start()
+    unpersistOnTermination(q, index)
+    q
+  }
+
+  /** Unpersist `cached` once `q` terminates, then stop listening. A
+    * query that ended before the listener was added is handled here. */
+  private def unpersistOnTermination(q: StreamingQuery, cached: DataFrame): Unit = {
+    val streams = q.sparkSession.streams
+    def release(l: StreamingQueryListener): Unit = { cached.unpersist(); streams.removeListener(l) }
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.runId == q.runId) release(this)
+    }
+    streams.addListener(listener)
+    if (!q.isActive) release(listener)
   }
 }

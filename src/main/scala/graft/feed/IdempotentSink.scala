@@ -1,6 +1,6 @@
 package graft.feed
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ST2 — upsert-by-PK over an append-only parquet warehouse.
@@ -15,6 +15,11 @@ import org.apache.spark.sql.functions._
   *   2. left-anti join against the existing table's keys
   *      (cross-batch redelivery);
   *   3. append the survivors.
+  *
+  * Every append is one write job that also counts its rows
+  * (`Dataset.observe`); nothing is cached or counted first. An append
+  * of zero rows still runs the write and leaves at most one
+  * schema-only parquet file, which reads as 0 rows.
   *
   * Safe under a single serialized writer per table — exactly the
   * reference's one-consumer-group deployment, and Structured
@@ -61,14 +66,7 @@ object IdempotentSink {
     if (!crashed) java.nio.file.Files.createFile(inflight)
     val n =
       if (crashed) appendDedup(spark, batch, path, keys)
-      else {
-        val deduped = batch.dropDuplicates(keys).cache()
-        try {
-          val m = deduped.count()
-          if (m > 0) deduped.write.mode("append").parquet(path)
-          m
-        } finally { deduped.unpersist(); () }
-      }
+      else writeCounted(batch.dropDuplicates(keys), path)
     java.nio.file.Files.createFile(marker)
     java.nio.file.Files.deleteIfExists(inflight)
     n
@@ -79,20 +77,25 @@ object IdempotentSink {
   def appendDedup(spark: SparkSession, batch: DataFrame, path: String,
       keys: Seq[String]): Long = {
     val deduped = batch.dropDuplicates(keys)
-    val existing =
-      try Some(spark.read.parquet(path).select(keys.map(col): _*))
-      catch { case _: org.apache.spark.sql.AnalysisException => None } // first write
-    val fresh = existing match {
-      case Some(e) => deduped.join(e, keys, "left_anti")
-      case None => deduped
-    }
-    // Two actions on `fresh` (count + write) must agree; cache to pin.
-    fresh.cache()
-    try {
-      val n = fresh.count()
-      if (n > 0) fresh.write.mode("append").parquet(path)
-      n
-    } finally fresh.unpersist()
+    // A missing dir is the first write. An existing one is read with
+    // the batch's schema, so a dir without data files reads as empty
+    // rather than failing schema inference.
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fresh =
+      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) deduped
+      else deduped.join(spark.read.schema(deduped.schema).parquet(path)
+        .select(keys.map(col): _*), keys, "left_anti")
+    writeCounted(fresh, path)
+  }
+
+  /** Append `df` to parquet dir `path` and return its row count,
+    * observed by the write job itself: one action, no cache. An empty
+    * `df` still writes, so the dir then holds at most one schema-only
+    * file (Spark's file for partition 0) and reads as 0 rows. */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode("append").parquet(path)
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** S6 — CAS `INSERT IF NOT EXISTS` emulation for username claims

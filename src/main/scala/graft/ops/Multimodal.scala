@@ -1499,7 +1499,10 @@ object Multimodal {
     } else if (isGif) {
       ("gif", rLe16(p, 6), rLe16(p, 8))
     } else if (isBmp) {
-      ("bmp", rLe32(p, 18), rLe32(p, 22))
+      // a negative DIB height stores rows top-down (as `bmpRgb`
+      // decodes it); Int.MinValue has no absolute value: the sentinel
+      val h = rLe32(p, 22)
+      ("bmp", rLe32(p, 18), if (h == Int.MinValue) -1 else math.abs(h))
     } else if (isGrft) {
       ("grft", rBe16(p, 4), rBe16(p, 6))
     } else ("unknown", -1, -1)

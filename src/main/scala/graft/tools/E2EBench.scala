@@ -99,6 +99,8 @@ object E2EBench {
     println(s"""{"metric":"e2e_feed_pipeline","posts":$p,"users":$u,"follows_per_user":$f,""" +
       s""""feed_rows":$feedRows,"ingest_sec":${"%.2f".format(ingestSec)},""" +
       s""""posts_per_sec":${"%.1f".format(p / ingestSec)},""" +
+      s""""exact_ingest_sec":${"%.2f".format(ingestExactSec)},""" +
+      s""""exact_posts_per_sec":${"%.1f".format(p / ingestExactSec)},""" +
       s""""feed_rows_per_sec":${"%.1f".format(feedRows / ingestSec)},""" +
       s""""read_trimmed_mean_ms":${stats.get(0)},"read_p50_ms":${stats.get(1)},""" +
       s""""read_p90_ms":${stats.get(2)},"read_p99_ms":${stats.get(3)},""" +

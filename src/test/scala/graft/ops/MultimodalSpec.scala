@@ -34,6 +34,19 @@ class MultimodalSpec extends SparkSpec {
       assert(m.height == (m.media_id % 480 + 16).toInt, s"height of ${m.media_id}")
     }
     assert(meta.map(_.format).distinct.sorted.toSeq == Seq("bmp", "gif", "jpeg", "png"))
+    // a top-down BMP (negative DIB height) reports its absolute height,
+    // the height bmpRgb decodes; Int.MinValue, which bmpRgb rejects,
+    // reads as the -1 sentinel
+    val bmp = Multimodal.bmpFromRgb(statsW, statsH, Array.tabulate(statsW * statsH)(i => i * 997))
+    val minH = bmp.clone()
+    minH(22) = 0; minH(23) = 0; minH(24) = 0; minH(25) = 0x80.toByte
+    val odd = Seq(Multimodal.MediaRow(1L, "image", bmpTopDown(bmp, statsH)),
+      Multimodal.MediaRow(2L, "image", minH)).toDS()
+    val oddMeta = Multimodal.decodeHeader(odd).collect().sortBy(_.media_id)
+    assert(oddMeta.map(m => (m.format, m.width, m.height)).toSeq ==
+      Seq(("bmp", statsW, statsH), ("bmp", statsW, -1)))
+    assert(Multimodal.bmpRgb(bmpTopDown(bmp, statsH)).map(d => (d._1, d._2)) == Some((statsW, statsH)))
+    assert(Multimodal.bmpRgb(minH).isEmpty)
   }
 
   test("sniff: hand-byte contracts — endianness, JPEG SOF order, CRC, unknowns") {
