@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (driver default sf0.1). Stdout carries ONE
   * COMPACT (<1 KB) JSON line — totals, top-5 warm queries, load/GC
@@ -36,26 +34,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 69 queries × several codegen'd stages each blow far past the
-      // default 100-entry generated-class cache — every "warm" run was
-      // re-compiling its whole-stage code, a flat recompilation tax on
-      // each query in the full suite that an isolated run never pays.
-      // Measured at 206 queries (round 12): 1000 entries regressed the
-      // warm suite 317.8s vs 223.4s at 5000 (recompilation tax
-      // dominates any GC-scan cost of the pinned classes).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(appName = "bench")
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
 
     // Dev loop: SPARK_GRAFT_ONLY=q22,q55 restricts to queries whose
     // name starts with any of the prefixes (driver runs unfiltered).

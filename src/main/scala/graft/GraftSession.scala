@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's tuned defaults.
+/** The engine's one session builder and its one conf list.
   *
   * Designed for cluster scale even though tests run `local[N]`:
-  *   - AQE on (runtime shuffle coalescing + skew-join splitting — the
-  *     scale answer to the reference's fixed worker-pool sizing,
-  *     reference cmd/worker/worker.go:29-42).
-  *   - shuffle.partitions=32 matches local cores; on a real cluster this
+  *   - AQE on (runtime shuffle coalescing + skew-join splitting, both
+  *     on by default in Spark 4 — the scale answer to the reference's
+  *     fixed worker-pool sizing, reference cmd/worker/worker.go:29-42).
+  *   - shuffle.partitions equals the core count; on a real cluster this
   *     is overridden per-deploy (AQE coalesces the excess anyway).
   *   - Session TZ pinned UTC (reference stores UTC wall-clock,
   *     cmd/server/httphandlers.go:144).
@@ -25,17 +25,17 @@ object GraftSession {
   val textFrameLevel: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.DISK_ONLY
 
-  def local(
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      appName: String = "graft"): SparkSession = {
+  /** Local core count: `SPARK_GRAFT_CPUS`, else `min(32, nproc)`. */
+  private lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors))
+
+  def local(cores: Int = cpus, appName: String = "graft"): SparkSession = {
     val b = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // testdata events.ts is parquet TIMESTAMP(NANOS); Spark's
@@ -43,18 +43,17 @@ object GraftSession {
       // full precision and lets queries compare exactly against
       // DuckDB's epoch_ns().
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // 69 queries × several codegen'd stages each blow far past the
+      // default 100-entry generated-class cache — every "warm" run was
+      // re-compiling its whole-stage code, a flat recompilation tax on
+      // each query in the full suite that an isolated run never pays.
+      // Measured at 206 queries (round 12): 1000 entries regressed the
+      // warm suite 317.8s vs 223.4s at 5000 (recompilation tax
+      // dominates any GC-scan cost of the pinned classes).
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .withExtensions(new GraftExtensions) // dot_product/hamming as SQL functions
     quietBoundedWindowWarnings()
     b.getOrCreate()
-  }
-
-  /** Apply graft defaults to an externally-built session (driver's
-    * Verify/Bench mains create their own). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    quietBoundedWindowWarnings()
-    spark
   }
 
   /** The audit/report operators intentionally use GLOBAL

@@ -1,11 +1,10 @@
 package graft
 
-/** JSON string escaping for oracle_sql.json — shared by the driver
-  * contract main (`Verify`) and the single-query fast loop
-  * (`tools.QCheck`) so both emit exactly what `check_oracle.py` /
-  * the driver's `json.load` parse. Escapes backslash, quote, and ALL
-  * control chars (<0x20): a tab or CR in builder-authored SQL would
-  * otherwise silently zero a round's correctness. */
+/** JSON string escaping for oracle_sql.json, written by `Verify` —
+  * emits exactly what `check_oracle.py` / the driver's `json.load`
+  * parse. Escapes backslash, quote, and ALL control chars (<0x20): a
+  * tab or CR in builder-authored SQL would otherwise silently zero a
+  * round's correctness. */
 object OracleJson {
   def quote(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

@@ -31,16 +31,7 @@ object PlanCapture {
     * under the current audit key when audit mode is on. `tag` names the
     * checkpointed stage in audit output. */
   def checkpoint(df: DataFrame, tag: String): DataFrame = {
-    if (auditing.get) {
-      val plan =
-        try df.queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"<plan capture failed: ${e.getMessage}>" }
-      val key = current
-      recorded.updateWith(key) {
-        case Some(v) => Some(v :+ s"=== sub-plan [$tag] ===\n$plan")
-        case None    => Some(Vector(s"=== sub-plan [$tag] ===\n$plan"))
-      }
-    }
+    record(df, tag)
     df.localCheckpoint(true)
   }
 
@@ -49,18 +40,14 @@ object PlanCapture {
     * actions that never reach the final lineage (e.g. the per-iteration
     * gradient jobs of Classifier.train, which end in a driver
     * collect). No-op outside audit mode. */
-  def record(df: DataFrame, tag: String): Unit = {
+  def record(df: DataFrame, tag: String): Unit =
     if (auditing.get) {
       val plan =
         try df.queryExecution.executedPlan.toString
         catch { case e: Throwable => s"<plan capture failed: ${e.getMessage}>" }
-      val key = current
-      recorded.updateWith(key) {
-        case Some(v) => Some(v :+ s"=== sub-plan [$tag] ===\n$plan")
-        case None    => Some(Vector(s"=== sub-plan [$tag] ===\n$plan"))
-      }
+      val entry = s"=== sub-plan [$tag] ===\n$plan"
+      recorded.updateWith(current)(v => Some(v.getOrElse(Vector.empty) :+ entry))
     }
-  }
 
   /** Run `body` with audit mode on, recording checkpointed sub-plans
     * under `queryName`; returns the sub-plans captured for it. */
@@ -76,8 +63,4 @@ object PlanCapture {
       current = ""
     }
   }
-
-  /** Sub-plans recorded for a query in the last `audited` run. */
-  def plansFor(queryName: String): Vector[String] =
-    recorded.getOrElse(queryName, Vector.empty)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,8 @@ object Verify {
     // optional 3rd arg: comma-separated query names (fast local re-gate
     // of just-changed entries; the driver always passes 2 args)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(appName = "verify")
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
     new java.io.File(outDir).mkdirs()
     // Oracle SQL first, results second: the map depends only on
     // SparkEntry, so writing it up front means a Verify killed

@@ -113,19 +113,6 @@ object TextFunctions {
     }
   }
 
-  /** 16-bit SimHash over whitespace tokens, emitted as a bit string.
-    * Portable construction: token hash = md5; hex digit j ≥ '8' votes
-    * +1 for bit j, else −1; bit set iff vote sum > 0. Near-dup docs
-    * differ in few bits (Charikar similarity estimation). Column form
-    * here is the per-token vote; the full doc-level simhash lives in
-    * ops.Dedup.simhash (needs an explode + re-agg). */
-  def tokenBitVote(tokenHash: Column, j: Int): Column =
-    // digit ≥ '8' as a single char-code compare: md5 hex is lowercase
-    // [0-9a-f], and {'8','9','a'..'f'} is exactly ascii ≥ 56 there —
-    // one comparison instead of an 8-way string isin, evaluated
-    // 32 times per token in the SimHash aggregation.
-    when(ascii(substring(tokenHash, j + 1, 1)) >= 56, 1).otherwise(-1)
-
   /** SC7 — log-redaction chain from the reference logger
     * (internal/logger/logger.go:41-55): emails, bearer/JWT-ish
     * tokens, user_id=N. RE2-safe patterns. */

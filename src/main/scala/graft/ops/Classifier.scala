@@ -143,10 +143,6 @@ object Classifier {
     // ArrayData object, so all 24 iterations reuse one compiled class
     graft.functions.ClassifierExpressions.dotLong(col("c"), typedlit(w))
 
-  private[graft] def scoreColReference(w: IndexedSeq[Long]): Column =
-    aggregate(zip_with(col("c"), typedlit(w), (x, y) => x * y),
-      lit(0L), (a, x) => a + x)
-
   /** Hard-sigmoid link in 1e-6 units: clamp(0.5 + z/4, 0, 1). */
   private def pCol(s: Column): Column =
     least(lit(1000000L), greatest(lit(0L),

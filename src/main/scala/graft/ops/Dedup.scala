@@ -74,8 +74,8 @@ object Dedup {
     * exchange by BYTES — candidate pairs are two longs per row, so a
     * near-all-pairs gate corpus coalesced to 2 post-shuffle
     * partitions and the whole merge-count verify (the actual cost,
-    * invisible to the byte heuristic) ran on 2 tasks (StageProbe:
-    * 6.9 s CPU / 2 tasks = q122's entire warm cost). An explicit
+    * invisible to the byte heuristic) ran on 2 tasks (measured per
+    * stage: 6.9 s CPU / 2 tasks = q122's entire warm cost). An explicit
     * numPartitions pins the width against coalescing; derived from
     * the session's core count, not a constant — and at real scale the
     * verify is compute-bound linear work, so compute width remains
@@ -568,28 +568,6 @@ object Dedup {
         .distinct()
     }
   }
-
-  /** Production-hash MinHash signatures: xxhash64 seeded per hash
-    * index — ~an order of magnitude cheaper than md5 strings (8-byte
-    * longs, codegen'd hash). Same uniformity argument, NOT
-    * oracle-portable (DuckDB has no xxhash64): the md5 variant stays
-    * as the gate-certified path; the spec asserts both find the same
-    * verified near-dup pairs. */
-  def minhashSignaturesFast(shingleSets: DataFrame, numHashes: Int): DataFrame = {
-    val hs = shingleSets.sparkSession.range(numHashes).select(col("id").cast("int").as("i"))
-    shingleSets.crossJoin(broadcast(hs))
-      .groupBy(col("id"), col("i"))
-      .agg(min(xxhash64(col("i"), col("sh"))).as("sigl"))
-  }
-
-  /** LSH bands over long signatures (fast path). */
-  def lshBandsFast(signatures: DataFrame, bandSize: Int): DataFrame =
-    signatures
-      .withColumn("b", expr(s"CAST(i DIV $bandSize AS INT)"))
-      .groupBy(col("id"), col("b"))
-      .agg(collect_list(struct(col("i"), col("sigl"))).as("ss"))
-      .select(col("id"), col("b"),
-        xxhash64(expr("transform(array_sort(ss), x -> x.sigl)")).as("key"))
 
   /** Fast-path MinHash+LSH dedup (xxhash64 end to end). */
   def minhashDedupFast(docs: DataFrame, idCol: String, textCol: String,

@@ -252,18 +252,6 @@ object Multimodal {
     }
   }
 
-  /** n digital-silence WAV clips (all-zero PCM) — the degenerate
-    * fingerprint family every clip of which hashes identically, i.e.
-    * the low-entropy regime `Dedup.audioNearDupsCapped` exists for
-    * (round-16 MicroBench row, VERDICT r15 item 6). `samples` defaults
-    * to two full fingerprint windows (65·2). */
-  def synthesizeSilenceCorpus(spark: org.apache.spark.sql.SparkSession,
-      n: Int, samples: Int = 130): Dataset[MediaRow] = {
-    import spark.implicits._
-    val payload = wavFromSamples(8000, new Array[Int](samples))
-    spark.range(n.toLong).as[Long].map(id => MediaRow(id, "audio", payload))
-  }
-
   case class SampleStats(media_id: Long, sample_rate: Int, channels: Int,
     n_samples: Long, sum_s: Long, sum_sq: Long, peak: Long)
 

@@ -674,7 +674,7 @@ object Similarity {
     // The two n·k assignment grids below evaluate the codegen'd
     // distance ON sub's partitions (broadcast-hash join on s) — a
     // single-file embeddings scan leaves sub at 1 partition and the
-    // grids on ONE task (round-17 JobProbe: 2×1.7 s of a 4.3 s warm
+    // grids on ONE task (round 17, per-job timing: 2×1.7 s of a 4.3 s warm
     // q95). Guide §2.5: unsplittable input → spread right after the
     // read. Scale-adaptive: only widens BELOW core count (at real
     // scale the scan already has more partitions than cores, so this

@@ -1268,7 +1268,8 @@ object TextAnalysis {
     * broadcast wins; at DEEP duplication (a depth-d re-crawl makes
     * ~(d−1)/d of all windows losers) the list is corpus-sized and must
     * shuffle instead — the corpus then moves once on id, the lineDedup
-    * reassembly shape (SubstrScaleProbe measures both). */
+    * reassembly shape (both measured at 1–64× re-crawl depth:
+    * docs/SUBSTR_PROBE_r7.jsonl). */
   private def removeCovered(tokensDf: DataFrame, idCol: String, textCol: String,
       loserStarts: DataFrame, k: Int, broadcastLosers: Boolean = true): DataFrame =
     tokensDf.join(

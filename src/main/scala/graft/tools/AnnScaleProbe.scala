@@ -39,7 +39,7 @@ object AnnScaleProbe {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val scales =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 8)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "ann-scale-probe")
+    val spark = GraftSession.local(appName = "ann-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = graft.Tables.load(spark, dir, "embeddings")

@@ -53,8 +53,7 @@ object ContainmentProbe {
     val dfFrac = sys.env.get("SPARK_GRAFT_DF_FRAC").map(_.toDouble).getOrElse(0.16)
     val reps = sys.env.get("SPARK_GRAFT_PROBE_REPS").map(_.toInt).getOrElse(3)
     val t = 0.5
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      "containment-probe")
+    val spark = GraftSession.local(appName = "containment-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     // a 400-doc slice with one shared boilerplate sentence appended to

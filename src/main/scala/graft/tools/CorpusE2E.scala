@@ -21,7 +21,7 @@ object CorpusE2E {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val numShards = args.lift(1).map(_.toInt).getOrElse(8)
     val maxRecs = args.lift(2).map(_.toLong).getOrElse(100000L)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "corpus-e2e")
+    val spark = GraftSession.local(appName = "corpus-e2e")
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed[T](f: => T): (T, Double) = {

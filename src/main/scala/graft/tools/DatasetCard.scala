@@ -241,7 +241,7 @@ object DatasetCard {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "dataset-card")
+    val spark = GraftSession.local(appName = "dataset-card")
     spark.sparkContext.setLogLevel("ERROR")
     println(card(spark, dir))
     spark.stop()

@@ -29,7 +29,7 @@ object E2EBench {
     val u = args.lift(0).map(_.toInt).getOrElse(500)
     val f = args.lift(1).map(_.toInt).getOrElse(10)
     val p = args.lift(2).map(_.toInt).getOrElse(5000)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "e2e-bench")
+    val spark = GraftSession.local(appName = "e2e-bench")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -4,15 +4,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 
 import graft.{GraftSession, SparkEntry}
 
-/** Round-17 floor probe: the 180+ sub-second queries cost ~0.3 s each
-  * (~67 s of the warm suite) and the bench can't say WHERE — this
-  * splits each warm rep into
+/** Per-query dev timer: splits each rep of a query into
   *   build  — query-fn call (DataFrame construction, any eager
   *            index-build/collect work inside the fn),
   *   plan   — analysis + optimization + physical planning
   *            (queryExecution.executedPlan forced),
-  *   exec   — the count() action (scheduling + tasks + AQE replans),
-  * and stamps jobs/stages/tasks per rep, so the fixed floor is
+  *   exec   — the full result written to the noop sink (the write
+  *            command's planning on top of the analyzed frame, then
+  *            scheduling + tasks + AQE replans); `count()` would let
+  *            Catalyst prune the columns the gate checks,
+  * and stamps jobs/stages/tasks per rep, so a query's cost is
   * attributable to planning vs scheduling vs task work.
   *
   * Usage: runMain graft.tools.FloorProbe <sfDir> <reps> <query> [query...]
@@ -22,9 +23,7 @@ object FloorProbe {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        math.min(32, Runtime.getRuntime.availableProcessors).toString), "floorprobe")
+    val spark = GraftSession.local(appName = "floorprobe")
     spark.sparkContext.setLogLevel("WARN")
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -44,7 +43,7 @@ object FloorProbe {
         val t1 = System.nanoTime()
         df.queryExecution.executedPlan // force analysis→physical plan
         val t2 = System.nanoTime()
-        df.count()
+        df.write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

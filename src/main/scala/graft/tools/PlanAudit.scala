@@ -88,7 +88,7 @@ object PlanAudit {
     val mode = args.find(_.startsWith("--")).getOrElse("")
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.local("8", "plan-audit")
+    val spark = GraftSession.local(8, "plan-audit")
     if (sys.env.get("SPARK_GRAFT_INJECT_BROADCAST_OFF").contains("1"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")

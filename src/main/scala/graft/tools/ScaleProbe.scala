@@ -42,7 +42,7 @@ object ScaleProbe {
       sys.env.get("SPARK_GRAFT_MAX_BUCKET").map(_.toInt).getOrElse(10000))
     val scales =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 16)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "scale-probe")
+    val spark = GraftSession.local(appName = "scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = graft.Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))

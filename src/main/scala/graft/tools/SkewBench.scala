@@ -17,7 +17,7 @@ object SkewBench {
     val hot = args.lift(0).map(_.toInt).getOrElse(200000)
     val posts = args.lift(1).map(_.toInt).getOrElse(200)
     val salt = args.lift(2).map(_.toInt).getOrElse(16)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "skew-bench")
+    val spark = GraftSession.local(appName = "skew-bench")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -10,7 +10,7 @@ import graft.{GraftSession, SparkEntry}
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "smoke")
+    val spark = GraftSession.local(appName = "smoke")
     spark.sparkContext.setLogLevel("WARN")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")

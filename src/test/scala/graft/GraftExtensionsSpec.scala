@@ -7,6 +7,16 @@ import org.apache.spark.sql.functions._
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
+  test("the spec session carries the one conf list of GraftSession.local") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.shuffle.partitions").toInt ==
+      spark.sparkContext.defaultParallelism)
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sql("SELECT dot_product(array(1.0f, 2.0f), array(3.0f, 4.0f))")
+      .head().getDouble(0) == 11.0)
+  }
+
   test("dot_product and hamming callable from SQL") {
     Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f), "0101", "0001"))
       .toDF("a", "b", "h1", "h2")

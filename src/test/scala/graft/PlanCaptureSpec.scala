@@ -14,7 +14,11 @@ class PlanCaptureSpec extends SparkSpec {
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     val out = PlanCapture.checkpoint(df.filter(col("id") > 0), "t0")
     assert(out.count() == 2)
-    assert(PlanCapture.plansFor("never-audited").isEmpty)
+    // nothing recorded outside audit mode reaches the next audited query
+    val (_, plans) = PlanCapture.audited("after-unaudited") {
+      PlanCapture.checkpoint(df, "inside").count()
+    }
+    assert(plans.size == 1 && plans.head.contains("[inside]"))
   }
 
   test("audited records one sub-plan per checkpoint, keyed by query") {
@@ -29,7 +33,6 @@ class PlanCaptureSpec extends SparkSpec {
     assert(plans.head.contains("[stage-a]") && plans(1).contains("[stage-b]"))
     // the aggregation's shuffle is visible pre-checkpoint
     assert(plans(1).contains("Exchange") || plans(1).contains("HashAggregate"))
-    assert(PlanCapture.plansFor("pc_two").size == 2)
   }
 
   test("a checkpointing operator audits with non-empty sub-plans") {
@@ -50,7 +53,7 @@ class PlanCaptureSpec extends SparkSpec {
   test("audited re-run replaces, not appends, a query's recorded plans") {
     val df = Seq((1, "x")).toDF("id", "v")
     PlanCapture.audited("pc_rerun") { PlanCapture.checkpoint(df, "only").count() }
-    PlanCapture.audited("pc_rerun") { PlanCapture.checkpoint(df, "only").count() }
-    assert(PlanCapture.plansFor("pc_rerun").size == 1)
+    val (_, plans) = PlanCapture.audited("pc_rerun") { PlanCapture.checkpoint(df, "only").count() }
+    assert(plans.size == 1)
   }
 }

@@ -16,7 +16,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = GraftSession.local("4", "graft-test")
+    val s = GraftSession.local(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every `graft.tools` main is a documented command: a tool that no
+  * CLAUDE.md command runs is dead code that still has to compile,
+  * carries its own session conf, and drifts from the harnesses that
+  * replaced it. */
+class ToolCommandsSpec extends AnyFunSuite {
+  private val toolsDir = Paths.get("src/main/scala/graft/tools")
+
+  /** Names of the objects under `tools/` that declare a `main`. */
+  private def toolMains: Seq[String] = {
+    val obj = """\bobject\s+(\w+)""".r
+    val files = Files.list(toolsDir).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+    files.flatMap { f =>
+      val src = Files.readString(f)
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(src).flatMap { m =>
+        obj.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption.map(_.group(1))
+      }
+    }.distinct
+  }
+
+  test("every graft.tools main is run by a CLAUDE.md command") {
+    val doc = Files.readString(Paths.get("CLAUDE.md"))
+    val commands = doc.substring(doc.indexOf("## Commands"))
+      .split("\n## ", 2).head
+    val mains = toolMains
+    assert(mains.contains("Smoke") && mains.contains("PlanAudit"),
+      s"tool scan found ${mains.mkString(", ")}")
+    val orphans = mains.filterNot(n => commands.contains(s"graft.tools.$n"))
+    assert(orphans.isEmpty,
+      s"tools no CLAUDE.md command runs: ${orphans.mkString(", ")}")
+  }
+}
