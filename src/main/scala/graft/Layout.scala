@@ -38,33 +38,39 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** Write `df` z-clustered on two numeric dimensions: rank-normalize
-    * with the provided bounds, split the z-curve into `numFiles`
-    * equal-count ranges, shuffle each row to its range's file, sort
-    * within each, drop the helper columns.
+  /** `df` shuffled into `n` partitions by equal-count ranges of the
+    * numeric column `c`, range i in partition i.
     *
     * The split points come from one deterministic quantile pass, not
     * from `repartitionByRange`: Spark's range sampler seeds itself
-    * with the RDD id, so the file boundaries (and the pruning a test
-    * or a reader sees) would change with whatever ran earlier in the
-    * same SparkContext. */
+    * with the RDD id, so the boundaries (the files a writer cuts, and
+    * the pruning a test or a reader sees) would change with whatever
+    * ran earlier in the same SparkContext. */
+  def rangeShuffle(df: DataFrame, c: String, n: Int): DataFrame = {
+    val cuts = if (n < 2) Array.empty[Double]
+      else df.stat.approxQuantile(c,
+        Array.tabulate(n - 1)(i => (i + 1).toDouble / n), 1.0 / (n * 100)).distinct
+    val keyed = df.withColumn("_range",
+      cuts.foldLeft(lit(0))((k, x) => k + when(col(c) >= x, 1).otherwise(0)))
+    val range = keyed.schema.fieldIndex("_range")
+    // an Int key hashes to itself: range i lands in partition i
+    val rows = keyed.rdd.keyBy(_.getInt(range))
+      .partitionBy(new org.apache.spark.HashPartitioner(n)).values
+    df.sparkSession.createDataFrame(rows, keyed.schema).drop("_range")
+  }
+
+  /** Write `df` z-clustered on two numeric dimensions: rank-normalize
+    * with the provided bounds, split the z-curve into `numFiles`
+    * equal-count ranges ([[rangeShuffle]]), sort within each, drop the
+    * helper column. */
   def writeZOrdered(df: DataFrame, dim1: String, lo1: Long, hi1: Long,
       dim2: String, lo2: Long, hi2: Long, outDir: String,
       numFiles: Int): Unit = {
     val z = df.withColumn("_z",
       zValue(rank16(col(dim1), lo1, hi1), rank16(col(dim2), lo2, hi2)))
-    val cuts = z.stat.approxQuantile("_z",
-      Array.tabulate(numFiles - 1)(i => (i + 1).toDouble / numFiles),
-      1.0 / (numFiles * 100)).distinct
-    val keyed = z.withColumn("_file",
-      cuts.foldLeft(lit(0))((n, c) => n + when(col("_z") >= c, 1).otherwise(0)))
-    val file = keyed.schema.fieldIndex("_file")
-    // an Int key hashes to itself: range i lands in partition i
-    val rows = keyed.rdd.keyBy(_.getInt(file))
-      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
-    df.sparkSession.createDataFrame(rows, keyed.schema)
+    rangeShuffle(z, "_z", numFiles)
       .sortWithinPartitions(col("_z"))
-      .drop("_z", "_file")
+      .drop("_z")
       .write.mode("overwrite").parquet(outDir)
   }
 

@@ -16,16 +16,9 @@ import org.apache.spark.sql.functions._
 object TextFunctions {
 
   /** Whitespace token count; empty/blank → 0. One-pass codegen'd
-    * kernel (round-17); value-identical to the builtin composition
-    * below, spec-pinned in TextStatKernelSpec. */
+    * kernel (round-17); value-identical to the builtin composition it
+    * replaced, spec-pinned in TextStatKernelSpec. */
   def tokenCount(c: Column): Column = TextStatExpressions.tokenCount(c)
-
-  /** The pre-round-17 builtin composition — kept as the equivalence
-    * spec's reference implementation (and the documented semantics:
-    * Spark trim = ASCII 0x20, Java `\s+` split with limit −1). */
-  private[graft] def tokenCountReference(c: Column): Column =
-    when(length(trim(c)) === 0, lit(0))
-      .otherwise(size(split(trim(c), "\\s+")))
 
   /** BPE-ish token count: letter runs, digit runs, single other
     * non-space (the pre-tokenizer shape used by byte-pair encoders). */
@@ -64,21 +57,8 @@ object TextFunctions {
     * used by web-scale corpus pipelines). One-pass codegen'd kernel
     * (round-17): one split + two regex scans per row instead of three
     * splits and two match-materializing regexp_counts. Value-identical
-    * to the reference composition (TextStatKernelSpec). */
+    * to the builtin composition it replaced (TextStatKernelSpec). */
   def qualityScore(c: Column): Column = TextStatExpressions.qualityScore(c)
-
-  private[graft] def qualityScoreReference(c: Column): Column = {
-    val nTok = tokenCountReference(c).cast("double")
-    val stopRatio = stopwordCount(c) / nullif(nTok, lit(0.0))
-    val punctRatio = punctCount(c) / nullif(length(c).cast("double"), lit(0.0))
-    coalesce(
-      round(
-        lit(0.5) * least(lit(1.0), nTok / lit(50.0)) +
-          lit(0.3) * (lit(1.0) - least(lit(1.0), punctRatio * lit(10.0))) +
-          lit(0.2) * least(lit(1.0), stopRatio * lit(5.0)),
-        6),
-      lit(0.0))
-  }
 
   /** Document fingerprint: md5 of the exact text (the exact-dedup
     * key). */
@@ -101,17 +81,9 @@ object TextFunctions {
   def ngramArray(tokens: Column, n: Int): Column =
     NgramExpressions.wordNgrams(tokens, n)
   // One-pass codegen'd kernel (round-17): the aligned-slices zip_with
-  // chain below was the re-evaluation-safe HOF form, but zip_with
-  // still evaluates interpreted per element. Value parity spec-pinned
-  // (NgramKernelSpec) against the reference:
-
-  private[graft] def ngramArrayReference(tokens: Column, n: Int): Column = {
-    require(n >= 1, "n must be >= 1")
-    val cnt = size(tokens) - (n - 1)
-    (2 to n).foldLeft(slice(tokens, lit(1), cnt)) { (acc, j) =>
-      zip_with(acc, slice(tokens, lit(j), cnt), (a, b) => concat(a, lit(" "), b))
-    }
-  }
+  // chain was the re-evaluation-safe HOF form, but zip_with still
+  // evaluates interpreted per element. Value parity spec-pinned
+  // (NgramKernelSpec) against that chain.
 
   /** SC7 — log-redaction chain from the reference logger
     * (internal/logger/logger.go:41-55): emails, bearer/JWT-ish

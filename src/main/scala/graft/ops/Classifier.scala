@@ -78,12 +78,6 @@ object Classifier {
     * (score ≥ 0.8 ⟺ n_tokens ≥ 50 — integer on both engines). */
   val LABEL_MIN_TOKENS = 50
 
-  /** Portable token→bucket hash: first 4 md5 hex digits mod D (the
-    * md5-only portable-hash convention; both engines see nonnegative
-    * ints, so `%` agrees). */
-  private def bucketOf(tok: Column): Column =
-    conv(substring(md5(tok), 1, 4), 16, 10).cast("int") % D
-
   /** Featurized corpus: (id, c: array<bigint> of length D+1 — dense
     * per-bucket token counts with the bias pseudo-count B at index D —
     * label). Map-only, one pass, no shuffle; absent buckets hold 0, so
@@ -95,7 +89,9 @@ object Classifier {
     // 65-slot accumulator array per TOKEN interpreted (O(tokens × D)
     // lambda dispatches per doc; the q102 featurize stage was 0.85 s
     // of single-task CPU at sf0.1). Value parity spec-pinned
-    // (ClassifierKernelSpec) against featurizeReference.
+    // (ClassifierKernelSpec) against that fold. A token's bucket is
+    // its first 4 md5 hex digits mod D (the md5-only portable-hash
+    // convention; both engines see nonnegative ints, so `%` agrees).
     docsDf
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol), toks.as("_toks"))
@@ -103,28 +99,6 @@ object Classifier {
         col(idCol),
         graft.functions.ClassifierExpressions
           .bucketCounts(col("_toks"), D, B.toLong).as("c"),
-        when(size(col("_toks")) >= LABEL_MIN_TOKENS, lit(1)).otherwise(lit(0))
-          .as("label"))
-  }
-
-  /** The pre-round-17 Column composition — the equivalence spec's
-    * reference. The fold shape mattered then (CollapseProject pitfall:
-    * an earlier map_from_entries + per-index element_at draft re-ran
-    // the whole sparse build 65× per row — featurize 2.5 s → 12 s);
-    * the kernel sidesteps the question entirely. */
-  private[graft] def featurizeReference(docsDf: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val toks = split(trim(col(textCol)), WS)
-    docsDf
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol), toks.as("_toks"))
-      .withColumn("_bs", transform(col("_toks"), t => bucketOf(t)))
-      .select(
-        col(idCol),
-        concat(
-          aggregate(col("_bs"), array_repeat(lit(0L), D),
-            (acc, b) => transform(acc, (v, i) => when(i === b, v + 1L).otherwise(v))),
-          array(lit(B).cast("long"))).as("c"),
         when(size(col("_toks")) >= LABEL_MIN_TOKENS, lit(1)).otherwise(lit(0))
           .as("label"))
   }

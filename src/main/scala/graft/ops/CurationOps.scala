@@ -328,9 +328,9 @@ object CurationOps {
     * every recurring-ingest pipeline runs before re-deduping a delta.
     *
     * 100 TB shape: text is fingerprinted in place and ONLY (id, md5)
-    * shuffles into the full-outer join — the corpus never moves, the
-    * same discipline as `exactSurvivorsByFingerprint`. Emits only the
-    * non-unchanged rows (delta-sized, not corpus-sized). */
+    * shuffles into the full-outer join — the corpus never moves.
+    * Emits only the non-unchanged rows (delta-sized, not
+    * corpus-sized). */
   def corpusDiff(prev: DataFrame, cur: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val p = prev.select(col(idCol), md5(col(textCol)).as("_fp_prev"))

@@ -17,9 +17,10 @@ import graft.functions.TextFunctions
   *   - The exact-Jaccard self-join is quadratic in docs sharing a
   *     shingle — usable for verification of candidates, never as the
   *     100 TB path.
-  *   - MinHash+LSH is the scale path: signatures are one shuffle
-  *     (groupBy doc), band keys one more, and the candidate join only
-  *     touches docs sharing a band bucket — the classic
+  *   - MinHash+LSH is the scale path: per-doc shingle arrays are one
+  *     shuffle (groupBy doc), signatures and band keys derive from
+  *     them map-side, and the candidate step only touches docs
+  *     sharing a band bucket — the classic
   *     shingle→minhash→band→bucket-join pipeline. Verification then
   *     runs exact Jaccard on the (tiny) candidate set only.
   */
@@ -355,28 +356,17 @@ object Dedup {
     prefixFilterContainmentCapped(shingleSets, minContainment,
       containmentDfCap(shingleSets, dfFrac))
 
-  /** MinHash signatures: numHashes md5-string minima per doc.
-    * (Portable stand-in for the usual (a·x+b) mod p permutations —
-    * identical uniformity argument, and string-comparable across
-    * engines.) */
-  def minhashSignatures(shingleSets: DataFrame, numHashes: Int): DataFrame = {
-    val hs = shingleSets.sparkSession.range(numHashes).select(col("id").cast("int").as("i"))
-    shingleSets.crossJoin(broadcast(hs))
-      .groupBy(col("id"), col("i"))
-      .agg(min(md5(concat(col("i").cast("string"), lit("|"), col("sh")))).as("sig"))
-  }
-
   /** Band keys computed map-side from the doc shingle ARRAYS: each
     * signature is `array_min(transform(shs, s -> hash(i, s)))`, band
     * keys hash adjacent signatures, and the row explodes to
     * (id, b, key) — zero shuffles after docShingleArrays.
     *
-    * Same sig/key VALUES as the long-form minhashSignatures→lshBands
-    * (md5 of "i|shingle"; band key md5 of sigs concatenated in hash
-    * order): array_min and the min() aggregate use the same string
-    * ordering. The long form shuffled O(shingles · numHashes) rows
-    * through a crossJoin; this touches each shingle string numHashes
-    * times inside one projection and shuffles nothing. */
+    * Signature i is the min of md5("i|shingle") over the doc's
+    * shingles (a portable stand-in for the usual (a·x+b) mod p
+    * permutations — identical uniformity argument, and string-
+    * comparable across engines); a band key is the md5 of its
+    * signatures concatenated in hash order. Each shingle string is
+    * touched numHashes times inside one projection; nothing shuffles. */
   private def bandsFromArrays(docSets: DataFrame, numHashes: Int, bandSize: Int,
       sigOf: Int => Column, keyOf: Seq[Column] => Column,
       skeyOf: Option[Seq[Column] => Column] = None): DataFrame = {
@@ -394,19 +384,11 @@ object Dedup {
       (if (skeyOf.isDefined) Seq(col("_skey")) else Nil): _*)
   }
 
-  /** md5 band keys from doc arrays — value-identical to
-    * lshBands(minhashSignatures(sh, n), bandSize). */
+  /** md5 band keys from doc arrays. */
   def lshBandsFromArrays(docSets: DataFrame, numHashes: Int, bandSize: Int): DataFrame =
     bandsFromArrays(docSets, numHashes, bandSize,
       i => array_min(transform(col("shs"), s => md5(concat(lit(s"$i|"), s)))),
       sigs => md5(concat(sigs: _*)))
-
-  /** xxhash64 band keys from doc arrays (fast path, not
-    * oracle-portable). */
-  def lshBandsFastFromArrays(docSets: DataFrame, numHashes: Int, bandSize: Int): DataFrame =
-    bandsFromArrays(docSets, numHashes, bandSize,
-      i => array_min(transform(col("shs"), s => xxhash64(lit(i), s))),
-      sigs => xxhash64(sigs: _*))
 
   /** md5 band keys PLUS a per-doc signature sort key `_skey`: the first
     * 8 hex chars of every signature concatenated in hash order.
@@ -414,7 +396,7 @@ object Dedup {
     * lexicographic order on `_skey` the members of a near-dup family
     * sort ADJACENT within a bucket — the sorted-neighborhood key that
     * lets `lshCandidatesCapped` generate O(n) hot-bucket candidates
-    * without the min-id star's recall collapse. 8 chars/component keeps
+    * that keep each family connected. 8 chars/component keeps
     * the key at numHashes·8 bytes (prefix-collision odds 2^-32 per
     * component — locality-equivalent to the full 32-char strings). */
   def lshBandsFromArraysKeyed(docSets: DataFrame, numHashes: Int, bandSize: Int): DataFrame =
@@ -423,33 +405,15 @@ object Dedup {
       sigs => md5(concat(sigs: _*)),
       Some(sigs => concat(sigs.map(s => substring(s, 1, 8)): _*)))
 
-  /** xxhash64 twin of lshBandsFromArraysKeyed (fast path): skey from
-    * zero-padded hex of the long signatures — same lexicographic
-    * locality argument. */
-  def lshBandsFastFromArraysKeyed(docSets: DataFrame, numHashes: Int, bandSize: Int): DataFrame =
-    bandsFromArrays(docSets, numHashes, bandSize,
-      i => array_min(transform(col("shs"), s => xxhash64(lit(i), s))),
-      sigs => xxhash64(sigs: _*),
-      Some(sigs => concat(sigs.map(s => lpad(hex(s), 16, "0")): _*)))
-
-  /** LSH band keys: md5 of the band's signatures concatenated in
-    * hash order. */
-  def lshBands(signatures: DataFrame, bandSize: Int): DataFrame =
-    signatures
-      .withColumn("b", expr(s"CAST(i DIV $bandSize AS INT)"))
-      .groupBy(col("id"), col("b"))
-      .agg(collect_list(struct(col("i"), col("sig"))).as("ss"))
-      .select(col("id"), col("b"),
-        md5(expr("array_join(transform(array_sort(ss), x -> x.sig), '')")).as("key"))
-
   /** Candidate pairs: docs sharing any band bucket. Runs as the
-    * uncapped case of the single-plan bucket aggregation — one shuffle
-    * over the bands, pairs exploded map-side — which both reads the
-    * band table ONCE (the self-join form scanned it twice) and keeps
-    * the whole step lazy inside the caller's plan. Output is the
-    * all-pairs candidate set, identical to the band self-join. */
+    * uncapped case of [[lshCandidatesBucketDropped]]'s single-plan
+    * bucket aggregation — one shuffle over the bands, pairs exploded
+    * map-side — which both reads the band table ONCE (the self-join
+    * form scanned it twice) and keeps the whole step lazy inside the
+    * caller's plan. Output is the all-pairs candidate set, identical
+    * to the band self-join. */
   def lshCandidates(bands: DataFrame): DataFrame =
-    lshCandidatesCapped(bands, Int.MaxValue)
+    lshCandidatesBucketDropped(bands, Int.MaxValue)
 
   /** Calibration-grade bounded candidates: all-pairs WITHIN buckets of
     * size in [2, bucketCap]; buckets over the cap are DROPPED entirely
@@ -459,11 +423,11 @@ object Dedup {
     * Worst-case per-bucket work is cap², independent of corpus size.
     * With `bucketCap = Int.MaxValue` the filter never binds and this
     * IS `lshCandidates`. Use `lshCandidatesCapped` where RECALL
-    * matters (dedup candidate generation — star/chain keeps O(k) edges
+    * matters (dedup candidate generation — its chain keeps O(k) edges
     * into hot buckets); use this where an unbiased bounded spectrum
     * matters more than hot-bucket coverage (estimator-calibration
-    * audits: a star-reduced hot bucket would skew the per-agreement
-    * Jaccard distribution toward the hub doc). */
+    * audits: a chain-reduced hot bucket would skew the per-agreement
+    * Jaccard distribution toward adjacent signatures). */
   def lshCandidatesBucketDropped(bands: DataFrame, bucketCap: Int): DataFrame = {
     require(bucketCap >= 2, "bucketCap must be >= 2")
     bands.groupBy(col("b"), col("key"))
@@ -484,99 +448,49 @@ object Dedup {
     * find) emits k² pairs from a single reducer. A 1M-doc bucket is
     * 10¹² pairs — the job never finishes.
     *
-    * Mitigation, two generations of it:
-    *
-    * - min-id STAR (every member vs the bucket's min id, O(k)) — the
-    *   legacy form, used when the bands carry no sort key. Its flaw,
-    *   measured by the round-6 deep-replication probe: candidates are
-    *   VERIFIED by exact Jaccard downstream, and in a heterogeneous
-    *   hot bucket (several distinct near-dup families co-bucketed —
-    *   the norm when banding is coarse) the star's edges run from the
-    *   bucket-global min to members of OTHER families, verification
-    *   rejects them, and whole families lose their internal edges:
-    *   16% of known near-dups escaped at 16× replication, 22% at 64×,
-    *   vs 0.01% uncapped.
-    *
-    * - SORTED NEIGHBORHOOD (the fix, used when the bands carry a
-    *   `_skey` signature sort key from `lshBandsFromArraysKeyed`):
-    *   sort the bucket by (skey, id) and emit only CONSECUTIVE pairs
-    *   — still O(k), but near-identical docs agree on most signature
-    *   components, so a family forms a lexicographic run and its
-    *   members connect in a verified chain that keep-canonical /
-    *   connected-components closes transitively. Cross-family edges
-    *   (the run boundaries) are rejected by verification exactly as
-    *   before — they cost one wasted Jaccard each, not lost recall.
+    * Above `maxBucket`, SORTED NEIGHBORHOOD: sort the bucket by the
+    * `_skey` signature sort key (from `lshBandsFromArraysKeyed`), then
+    * id, and emit only CONSECUTIVE pairs — O(k), and near-identical
+    * docs agree on most signature components, so a family forms a
+    * lexicographic run and its members connect in a verified chain
+    * that keep-canonical / connected-components closes transitively.
+    * Cross-family edges (the run boundaries) are rejected by exact
+    * verification downstream — they cost one wasted Jaccard each, not
+    * lost recall. (A min-id star, the earlier topology, lost 16–22% of
+    * known near-dups in heterogeneous hot buckets in the round-6
+    * replication probe: its edges ran from the bucket-global min into
+    * other families and verification rejected them.)
     *
     * Buckets at or under `maxBucket` keep the exact all-pairs
-    * behavior (identical to lshCandidates) in both forms. Returns
-    * (id_a, id_b), id_a < id_b.
-    *
-    * Topology inference keys on the RESERVED column `_skey`, emitted
-    * only by the keyed band builders (`lshBandsFromArraysKeyed` /
-    * `lshBandsFastFromArraysKeyed`) — the underscore prefix marks it
-    * internal, so an unrelated user column can no longer silently
-    * switch candidate topology (round-6 ADVICE). */
-  def lshCandidatesCapped(bands: DataFrame, maxBucket: Int): DataFrame =
-    lshCandidatesCapped(bands, maxBucket,
-      sortedNeighborhood = bands.columns.contains("_skey"))
-
-  /** Explicit-mode form: callers on the keyed band builders pass
-    * `sortedNeighborhood = true` so the capped semantics are a stated
-    * choice, not an inference from a column name. */
-  def lshCandidatesCapped(bands: DataFrame, maxBucket: Int,
-      sortedNeighborhood: Boolean): DataFrame = {
-    require(!sortedNeighborhood || bands.columns.contains("_skey"),
-      "sortedNeighborhood candidate generation needs the _skey column " +
+    * behavior (identical to lshCandidates). Returns (id_a, id_b),
+    * id_a < id_b. */
+  def lshCandidatesCapped(bands: DataFrame, maxBucket: Int): DataFrame = {
+    require(bands.columns.contains("_skey"),
+      "sorted-neighborhood candidate generation needs the _skey column " +
         "(build bands with lshBandsFromArraysKeyed)")
     // Single-plan form: ONE shuffle (groupBy bucket) collects each
     // bucket's sorted member list, then pair generation is a map-side
     // array expression. No self-join, no window pass, no intermediate
     // to persist; the whole thing stays lazy inside the caller's
-    // plan. Memory bound: one bucket's members must fit in a row —
-    // ~10⁷ bare ids (80 MB) or ~10⁶ (id, skey) structs with the
-    // 8·numHashes-byte sort key; the pair EXPLOSION (the actual
-    // quadratic risk) is capped regardless.
-    if (sortedNeighborhood) {
-      val buckets = bands.groupBy(col("b"), col("key"))
-        .agg(sort_array(collect_list(struct(col("_skey"), col("id")))).as("ms"))
-        .filter(size(col("ms")) >= 2)
-      val pairsCol = when(size(col("ms")) <= maxBucket,
-        expr("""flatten(transform(ms, (x, i) ->
-                transform(slice(ms, i + 2, size(ms) - i - 1),
-                          y -> struct(least(x.id, y.id) AS id_a,
-                                      greatest(x.id, y.id) AS id_b))))"""))
-        .otherwise(expr(
-          """transform(slice(ms, 1, size(ms) - 1), (x, i) ->
-             struct(least(x.id, element_at(ms, i + 2).id) AS id_a,
-                    greatest(x.id, element_at(ms, i + 2).id) AS id_b))"""))
-      buckets.select(explode(pairsCol).as("p"))
-        .select(col("p.id_a"), col("p.id_b"))
-        .filter(col("id_a") =!= col("id_b"))
-        .distinct()
-    } else {
-      val buckets = bands.groupBy(col("b"), col("key"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-      val pairsCol = when(size(col("ids")) <= maxBucket,
-        expr("""flatten(transform(ids, (x, i) ->
-                transform(slice(ids, i + 2, size(ids) - i - 1),
-                          y -> struct(x AS id_a, y AS id_b))))"""))
-        .otherwise(expr(
-          "transform(slice(ids, 2, size(ids) - 1), y -> struct(element_at(ids, 1) AS id_a, y AS id_b))"))
-      buckets.select(explode(pairsCol).as("p"))
-        .select(col("p.id_a"), col("p.id_b"))
-        .distinct()
-    }
-  }
-
-  /** Fast-path MinHash+LSH dedup (xxhash64 end to end). */
-  def minhashDedupFast(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 8, bandSize: Int = 2, minJaccard: Double = 0.5): DataFrame = {
-    val sets = docShingleArrays(wordBigrams(docs, idCol, textCol))
-      .persist(graft.GraftSession.textFrameLevel) // text-sized: shingle arrays (r15 GC audit)
-    materializeAndFree(
-      jaccardForCandidates(sets, lshCandidates(lshBandsFastFromArrays(sets, numHashes, bandSize)),
-        minJaccard), sets)
+    // plan. Memory bound: one bucket's (id, skey) structs must fit in
+    // a row — ~10⁶ with the 8·numHashes-byte sort key; the pair
+    // EXPLOSION (the actual quadratic risk) is capped regardless.
+    val buckets = bands.groupBy(col("b"), col("key"))
+      .agg(sort_array(collect_list(struct(col("_skey"), col("id")))).as("ms"))
+      .filter(size(col("ms")) >= 2)
+    val pairsCol = when(size(col("ms")) <= maxBucket,
+      expr("""flatten(transform(ms, (x, i) ->
+              transform(slice(ms, i + 2, size(ms) - i - 1),
+                        y -> struct(least(x.id, y.id) AS id_a,
+                                    greatest(x.id, y.id) AS id_b))))"""))
+      .otherwise(expr(
+        """transform(slice(ms, 1, size(ms) - 1), (x, i) ->
+           struct(least(x.id, element_at(ms, i + 2).id) AS id_a,
+                  greatest(x.id, element_at(ms, i + 2).id) AS id_b))"""))
+    buckets.select(explode(pairsCol).as("p"))
+      .select(col("p.id_a"), col("p.id_b"))
+      .filter(col("id_a") =!= col("id_b"))
+      .distinct()
   }
 
   /** Full MinHash+LSH near-dup pipeline with exact verification of
@@ -612,8 +526,7 @@ object Dedup {
       .persist(graft.GraftSession.textFrameLevel) // text-sized: shingle arrays (r15 GC audit)
     materializeAndFree(
       jaccardForCandidates(sets,
-        lshCandidatesCapped(lshBandsFromArraysKeyed(sets, numHashes, bandSize), maxBucket,
-          sortedNeighborhood = true),
+        lshCandidatesCapped(lshBandsFromArraysKeyed(sets, numHashes, bandSize), maxBucket),
         minJaccard), sets)
   }
 
@@ -653,24 +566,6 @@ object Dedup {
       shiftright(c, 4 * (len - 1 - (j - st)) + 3).bitwiseAND(lit(1L))
     }
     packedVoteSimhash(toks, bits, bitCol)
-  }
-
-  /** Production-hash SimHash: per-token bit votes come from ONE
-    * codegen'd xxhash64 long (bit j = bit 63−j of xxhash64(tok))
-    * instead of md5 hex strings decoded through conv — the md5 cost
-    * was profiled as q44's floor (round-2 note), and this removes it
-    * while keeping the identical packed-lane vote aggregation. Same
-    * uniformity argument as the md5 construction; NOT oracle-portable
-    * (DuckDB has no xxhash64), so the md5 path stays the gate-certified
-    * form and DedupSimilaritySpec asserts both find the same verified
-    * near-dup pair set on a planted corpus. */
-  def simhashBitsFast(docs: DataFrame, idCol: String, textCol: String, bits: Int): DataFrame = {
-    require(bits >= 1 && bits <= 64, "bits must be in [1, 64]")
-    val toks = docs
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("xh", xxhash64(col("tok")))
-    packedVoteSimhash(toks, bits,
-      j => shiftright(col("xh"), 63 - j).bitwiseAND(lit(1L)))
   }
 
   /** Shared vote-aggregation scaffolding of the simhash family: pack
@@ -859,15 +754,10 @@ object Dedup {
     * cross-family edges the Hamming filter killed (semantics spec'd in
     * DedupSimilaritySpec). */
   def simhashNearDupsCapped(docs: DataFrame, idCol: String, textCol: String,
-      bits: Int = 64, maxHamming: Int = 3, maxBucket: Int = 256,
-      fast: Boolean = false): DataFrame = {
+      bits: Int = 64, maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
     require(bits % 4 == 0 && bits <= 64, "bits must be a multiple of 4, at most 64")
     require(maxHamming <= 3, "4-band pigeonhole only guarantees recall for maxHamming <= 3")
-    val bandBits = bits / 4
-    // fast = xxhash64 token votes (production; ~10× cheaper per token),
-    // default = the md5 construction the DuckDB oracle certifies.
-    val sh = if (fast) simhashBitsFast(docs, idCol, textCol, bits)
-             else simhashBits(docs, idCol, textCol, bits)
+    val sh = simhashBits(docs, idCol, textCol, bits)
     // ONE lazy two-shuffle plan, like simhashNearDups: the packed-long
     // fingerprint rides INTO the bucket aggregation, so the Hamming
     // test runs inside the per-bucket array transform and nothing
@@ -1090,8 +980,7 @@ object Dedup {
     * document; the standing corpus text is never re-read, let alone
     * re-shingled. Persist partitioned/bucketed by `key` so the delta
     * join co-locates. md5 construction = the oracle-certified q31
-    * banding (use lshBandsFastFromArrays for the xxhash64 production
-    * twin). */
+    * banding. */
   def minhashIndex(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, bandSize: Int = 2): DataFrame =
     lshBandsFromArrays(docShingleArrays(wordBigrams(docs, idCol, textCol)),
@@ -1183,7 +1072,7 @@ object Dedup {
 
     // Within-delta near-dup components → non-canonical members.
     val withinPairs = jaccardForCandidates(dSets,
-      lshCandidatesCapped(dBands, maxBucket, sortedNeighborhood = true), minJaccard)
+      lshCandidatesCapped(dBands, maxBucket), minJaccard)
     val losers = connectedComponents(withinPairs)
       .filter(col("comp") =!= col("id")).select(col("id"))
 

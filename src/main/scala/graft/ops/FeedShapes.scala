@@ -183,35 +183,27 @@ object FeedShapes {
     *
     * Scale shape (Pregel-by-hand): edges are the big side — partition
     * them ONCE by src and cache; each iteration is a rank⋈edge join on
-    * src (rank frame is O(nodes) and re-shuffles, edges do not move)
-    * followed by one map-side-combined groupBy on dst. Hub skew (the
-    * %97 graph is all hubs) is AQE's skew-join case; when the node
-    * frame fits an executor, broadcast it and the per-iteration
-    * shuffle drops to the dst reduction alone. */
-  def pageRank(edges: DataFrame, iterations: Int = 3,
-      broadcastRanks: Boolean = false): DataFrame = {
+    * src followed by one map-side-combined groupBy on dst. The rank and
+    * contrib frames are O(nodes) and are broadcast, so the cached edge
+    * frame never moves or re-sorts and each hop is one map-side join
+    * plus one dst reduction. Limit: the node frame must fit a
+    * broadcast. */
+  def pageRank(edges: DataFrame, iterations: Int = 3): DataFrame = {
     val e = edges.select(col("u"), col("v")).repartition(col("u")).persist()
     val nodes = e.select(col("u")).unionByName(e.select(col("v").as("u")))
       .distinct().persist()
-    // rank/contrib frames are O(nodes); when that fits an executor
-    // (anything up to ~10^7 hosts) broadcasting them removes the
-    // per-iteration sort-merge join — the cached edge frame then never
-    // re-sorts and each hop is one map-side join + one dst reduction.
-    // At web scale (10^8+ nodes) leave false: rank shuffles to meet the
-    // src-partitioned edges, which is the correct Pregel shape.
-    def side(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     try {
       val deg = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
       var rank = nodes.select(col("u"), lit(1000000L).as("r"))
       for (_ <- 1 to iterations) {
         val contrib = e
-          .join(side(rank), Seq("u"))
-          .join(side(deg), Seq("u"))
+          .join(broadcast(rank), Seq("u"))
+          .join(broadcast(deg), Seq("u"))
           .select(col("v"),
             floor(col("r") / col("d").cast("double")).cast("long").as("m"))
           .groupBy(col("v")).agg(sum(col("m")).as("s"))
         rank = nodes
-          .join(side(contrib), nodes("u") === contrib("v"), "left")
+          .join(broadcast(contrib), nodes("u") === contrib("v"), "left")
           .select(nodes("u"),
             (lit(150000L) + floor(lit(0.85) * coalesce(col("s"), lit(0L)))
               .cast("long")).as("r"))
@@ -232,7 +224,7 @@ object FeedShapes {
     val edges = c.select(col("u"), (col("u") % 97).as("v"))
       .unionByName(c.select(col("u"), ((col("u") * 3 + 1) % 97).as("v")))
       .filter(col("u") =!= col("v")).distinct()
-    pageRank(edges, iterations = 3, broadcastRanks = true)
+    pageRank(edges, iterations = 3)
       .select(col("u"), col("r").as("rank_fx"))
       .orderBy(col("rank_fx").desc, col("u"))
       .limit(30)
@@ -278,15 +270,14 @@ object FeedShapes {
     * the key each half-step consumes (u for the hub→authority
     * gather, v for the authority→hub gather — the LPA/k-core round-9
     * lesson: partition on the key the join actually uses, or the
-    * edge frame re-shuffles every round). Score frames are O(nodes):
-    * broadcast them (default) and no edge-sized data moves after the
-    * two initial partitionings; the per-iteration shuffle is the
-    * map-side-combined degree reduction alone. */
-  def hits(edges: DataFrame, iterations: Int = 2,
-      broadcastScores: Boolean = true): DataFrame = {
+    * edge frame re-shuffles every round). Score frames are O(nodes) and
+    * are broadcast, so no edge-sized data moves after the two initial
+    * partitionings; the per-iteration shuffle is the map-side-combined
+    * degree reduction alone. Limit: the node frame must fit a
+    * broadcast. */
+  def hits(edges: DataFrame, iterations: Int = 2): DataFrame = {
     val eU = edges.select(col("u"), col("v")).repartition(col("u")).persist()
     val eV = edges.select(col("u"), col("v")).repartition(col("v")).persist()
-    def side(df: DataFrame) = if (broadcastScores) broadcast(df) else df
     try {
       val nodes = eU.select(col("u"))
         .unionByName(eU.select(col("v").as("u"))).distinct().persist()
@@ -298,27 +289,27 @@ object FeedShapes {
         // prior trajectory per consumer (the q146 round-9 lesson:
         // 68 exchanges → single digits)
         val araw = graft.PlanCapture.checkpoint(
-          eU.join(side(hub), Seq("u"))
+          eU.join(broadcast(hub), Seq("u"))
             .groupBy(col("v")).agg(sum(col("h")).as("s")), s"hits-a$it")
         val amax = araw.agg(max(col("s")).as("mx"))
         auth = graft.PlanCapture.checkpoint(nodes
-          .join(side(araw.select(col("v").as("u"), col("s"))), Seq("u"), "left")
+          .join(broadcast(araw.select(col("v").as("u"), col("s"))), Seq("u"), "left")
           .crossJoin(broadcast(amax))
           .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("a")),
           s"hits-auth$it")
         val hraw = graft.PlanCapture.checkpoint(
-          eV.join(side(auth.select(col("u").as("v"), col("a"))), Seq("v"))
+          eV.join(broadcast(auth.select(col("u").as("v"), col("a"))), Seq("v"))
             .groupBy(col("u")).agg(sum(col("a")).as("s")), s"hits-h$it")
         val hmax = hraw.agg(max(col("s")).as("mx"))
         hub = graft.PlanCapture.checkpoint(
-          nodes.join(side(hraw), Seq("u"), "left")
+          nodes.join(broadcast(hraw), Seq("u"), "left")
             .crossJoin(broadcast(hmax))
             .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("h")),
           s"hits-hub$it")
       }
       // both sides are node-sized checkpoints — broadcast one so the
       // close is a BHJ, not a sort-merge of two tiny frames
-      graft.PlanCapture.checkpoint(hub.join(side(auth), Seq("u")), "hits-final")
+      graft.PlanCapture.checkpoint(hub.join(broadcast(auth), Seq("u")), "hits-final")
     } finally {
       eU.unpersist(blocking = false)
       eV.unpersist(blocking = false)
@@ -333,7 +324,7 @@ object FeedShapes {
     val edges = c.select(col("u"), (col("u") % 97).as("v"))
       .unionByName(c.select(col("u"), ((col("u") * 3 + 1) % 97).as("v")))
       .filter(col("u") =!= col("v")).distinct()
-    hits(edges, iterations = 2, broadcastScores = true)
+    hits(edges, iterations = 2)
       .select(col("u"), col("h").as("hub_fx"), col("a").as("auth_fx"))
       .orderBy(col("auth_fx").desc, col("hub_fx").desc, col("u"))
       .limit(30)
@@ -510,35 +501,21 @@ object FeedShapes {
     * is oracle-certifiable — unlike the asynchronous formulation.
     *
     * Scale shape (the q103 Pregel-by-hand pattern): the undirected
-    * adjacency is built once and cached partitioned on the key each
-    * round's vote join consumes — `v` on the shuffle path (the join
-    * keys on v, so the adjacency sort-merges IN PLACE and only the
-    * O(nodes) label frame shuffles to meet it), `u` on the broadcast
-    * path (the vote join is map-side regardless, and u-partitioning
-    * lets the groupBy(u, lab) + argmax window run exchange-free).
-    * Per round the moving data is node-bounded: the label frame plus
-    * the map-side-combined (u, lab, cnt) vote frame — the edge-sized
-    * adjacency never re-shuffles after the initial build (round-9
-    * ADVICE: the earlier u-partitioned cache DID re-shuffle edge-sized
-    * data by v every round on the shuffle default).
-    * `broadcastLabels` mirrors q103 pageRank's `broadcastRanks`: the
-    * DEFAULT (false) is the web-scale shape — at 10^8+ nodes a
-    * per-round broadcast of the label frame OOMs the driver. Pass
-    * true only when the node frame fits an executor (≲10^7 nodes):
-    * each round's vote join then collapses to a map-side hash join. */
-  def labelPropagation(edges: DataFrame, iterations: Int = 3,
-      broadcastLabels: Boolean = false): DataFrame = {
-    def side(df: DataFrame) = if (broadcastLabels) broadcast(df) else df
+    * adjacency is built once and cached partitioned on `u`; the
+    * O(nodes) label frame is broadcast, so each round's vote join is
+    * map-side and the groupBy(u, lab) + argmax window run
+    * exchange-free. The edge-sized adjacency never re-shuffles after
+    * the initial build. Limit: the node frame must fit a broadcast. */
+  def labelPropagation(edges: DataFrame, iterations: Int = 3): DataFrame = {
     // adjacency and node set are each consumed every round — material-
-    // ize once (the Pregel edge-partition-once contract); partitioned
-    // on the per-round join key (see scale-shape note above) —
+    // ize once (the Pregel edge-partition-once contract);
     // localCheckpoint preserves outputPartitioning, so every round
     // reuses it without an exchange
     val und = graft.PlanCapture.checkpoint(
       edges.select(col("u"), col("v"))
         .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
         .distinct()
-        .repartition(if (broadcastLabels) col("u") else col("v")),
+        .repartition(col("u")),
       "lpa-adjacency").persist()
     val nodes = graft.PlanCapture.checkpoint(
       und.select(col("u")).distinct(), "lpa-nodes").persist()
@@ -546,7 +523,7 @@ object FeedShapes {
       var lab = nodes.select(col("u"), col("u").cast("long").as("lab"))
       for (_ <- 1 to iterations) {
         val votes = und
-          .join(side(lab.withColumnRenamed("u", "v")), Seq("v"))
+          .join(broadcast(lab.withColumnRenamed("u", "v")), Seq("v"))
           .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("cnt"))
         val best = votes
           .withColumn("rk", row_number().over(
@@ -558,8 +535,8 @@ object FeedShapes {
         // so round N+1's plan starts from labels, not the full lineage
         lab = graft.PlanCapture.checkpoint(
           nodes
-            .join(side(lab), Seq("u"))
-            .join(side(best), Seq("u"), "left")
+            .join(broadcast(lab), Seq("u"))
+            .join(broadcast(best), Seq("u"), "left")
             .select(col("u"), coalesce(col("new_lab"), col("lab")).as("lab")),
           "lpa-labels")
       }
@@ -575,10 +552,7 @@ object FeedShapes {
     val edges = c.select(col("u"), (col("u") % 97).as("v"))
       .unionByName(c.select(col("u"), ((col("u") * 3 + 1) % 97).as("v")))
       .filter(col("u") =!= col("v"))
-    // 97-label graph over sf customers — node frame is tiny, take the
-    // broadcast fast path (the shuffle default is specced equal in
-    // GraphDualPathSpec)
-    labelPropagation(edges, iterations = 3, broadcastLabels = true)
+    labelPropagation(edges, iterations = 3)
       .orderBy(col("u"))
   }
 
@@ -614,31 +588,21 @@ object FeedShapes {
     * (peeling converges in O(peel-depth) rounds; the spec pins
     * convergence on a known graph). Scale shape mirrors q146's LPA
     * contract: the undirected adjacency is built ONCE, checkpointed
-    * partitioned on the per-round semi-join key (`v` on the shuffle
-    * default, `u` on the broadcast path); each round the v-side
-    * semi-join runs against the adjacency IN PLACE, the count is
-    * map-side-combined, and the u-side alive restriction is applied
-    * AFTER aggregation on the node-bounded degree frame (restricting
-    * u after counting v-alive neighbors gives the identical induced
-    * degree — see induceDeg) — so nothing edge-sized shuffles after
-    * the initial build (round-9 ADVICE: the earlier form semi-joined
-    * the edge frame on u THEN v and re-shuffled it every round).
-    * Returns the surviving nodes with their degree in the final
-    * induced subgraph.
-    * `broadcastAlive` mirrors q103 pageRank's flag: DEFAULT false is
-    * the web-scale shape (the O(nodes) alive set shuffles to meet the
-    * v-partitioned adjacency as a sort-merge semi-join); true is the
-    * small-graph fast path (alive set fits an executor → map-side
-    * hash semi-join, no per-round shuffle at all: u-partitioning
-    * carries through the broadcast semi-join into the groupBy). */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-      broadcastAlive: Boolean = false): DataFrame = {
-    def side(df: DataFrame) = if (broadcastAlive) broadcast(df) else df
+    * partitioned on `u`; the O(nodes) alive set is broadcast, so each
+    * round's v-side semi-join is map-side, u-partitioning carries
+    * through it into the groupBy, and the u-side alive restriction is
+    * applied AFTER aggregation on the node-bounded degree frame
+    * (restricting u after counting v-alive neighbors gives the
+    * identical induced degree — see induceDeg) — so nothing
+    * edge-sized shuffles after the initial build. Limit: the node
+    * frame must fit a broadcast. Returns the surviving nodes with
+    * their degree in the final induced subgraph. */
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val und = graft.PlanCapture.checkpoint(
       edges.select(col("u"), col("v"))
         .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
         .distinct()
-        .repartition(if (broadcastAlive) col("u") else col("v")),
+        .repartition(col("u")),
       "kcore-adjacency").persist()
     try {
       // induced degree of ALIVE u = # alive neighbors v. Count over
@@ -647,9 +611,9 @@ object FeedShapes {
       // identical result to filtering both endpoints before counting,
       // but the u-side restriction never touches edge-sized data.
       def induceDeg(alive: DataFrame): DataFrame = und
-        .join(side(alive.withColumnRenamed("u", "v")), Seq("v"), "left_semi")
+        .join(broadcast(alive.withColumnRenamed("u", "v")), Seq("v"), "left_semi")
         .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .join(side(alive), Seq("u"), "left_semi")
+        .join(broadcast(alive), Seq("u"), "left_semi")
       var alive = graft.PlanCapture.checkpoint(
         und.select(col("u")).distinct(), "kcore-nodes")
       for (_ <- 1 to rounds) {
@@ -674,9 +638,7 @@ object FeedShapes {
       .unionByName(c.filter(col("u") % 3 === 0)
         .select(col("u"), ((col("u") * 13 + 5) % 431).as("v")))
       .filter(col("u") =!= col("v"))
-    // sf-customer node frame is tiny → broadcast fast path; the
-    // shuffle default is specced equal in GraphDualPathSpec
-    kCore(edges, k = 3, rounds = 4, broadcastAlive = true).orderBy(col("u"))
+    kCore(edges, k = 3, rounds = 4).orderBy(col("u"))
   }
 
   val followKCoreSql: String = {

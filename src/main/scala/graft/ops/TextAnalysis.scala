@@ -340,22 +340,6 @@ object TextAnalysis {
   def dup3Frac(textCol: Column): Column =
     graft.functions.TextStatExpressions.dup3Frac(textCol)
 
-  /** The pre-round-17 HOF composition — the equivalence spec's
-    * reference implementation. The kernel replaces it because HOFs
-    * evaluate interpreted (CodegenFallback) even in this
-    * re-evaluation-safe aligned-slices form. */
-  private[graft] def dup3FracReference(textCol: Column): Column = {
-    val ts = split(trim(textCol), "\\s+")
-    val n3 = size(ts) - 2
-    // gram count is size(ts)−2 by construction, so the gram array is
-    // referenced exactly once (distinct size) and only under the
-    // guard (CaseWhen branches evaluate lazily — slice needs n3 ≥ 1).
-    when(n3 > 0,
-      round((n3 - size(array_distinct(ngramArray(ts, 3))))
-        / n3.cast("double"), 6))
-      .otherwise(lit(0.0))
-  }
-
   /** Most-frequent-token fraction (map-only Column, see dup3Frac).
     *
     * Computed as the longest equal-run in the SORTED token array via a
@@ -367,19 +351,6 @@ object TextAnalysis {
     * evaluation — measured 50× slower on the corpus filter. */
   def topTokFrac(textCol: Column): Column =
     graft.functions.TextStatExpressions.topTokFrac(textCol)
-
-  private[graft] def topTokFracReference(textCol: Column): Column = {
-    val ts = split(trim(textCol), "\\s+")
-    val best = aggregate(
-      array_sort(ts),
-      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1).otherwise(lit(1))
-        struct(x.as("prev"), run.as("run"), greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    round(best / size(ts).cast("double"), 6)
-  }
 
   /** The Gopher-style repetitive flag as a reusable predicate. */
   def repetitiveFlag(textCol: Column,
@@ -1142,8 +1113,8 @@ object TextAnalysis {
     * tokens are dropped. Lines under `minLineTokens` tokens (blank
     * separators and the like) never enter the dedup.
     *
-    * Scale shape (the exactSurvivorsByFingerprint pattern at line
-    * granularity): pass 1 shuffles only (md5(line), id, line_no) to
+    * Scale shape (fingerprint-only shuffle at line granularity):
+    * pass 1 shuffles only (md5(line), id, line_no) to
     * rank occurrences — the corpus text does NOT move; the loser
     * list, O(#duplicate lines), broadcasts into a (id, line_no)
     * anti-join; the reassembly groupBy is the one shuffle that moves

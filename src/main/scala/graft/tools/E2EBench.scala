@@ -2,6 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.feed._
@@ -22,6 +25,10 @@ import graft.sources.Connectors
   * follows/user, P posts (e2e_bench.go:44-49 defaults 50/10/100).
   * Seeded generation → deterministic.
   *
+  * Every scratch dir (feed tables, stream checkpoints, warehouse copy)
+  * lives under one `e2e-*` temp root, and all of it but the latency
+  * CSV — whose path the result line prints — is deleted on exit.
+  *
   * Usage: runMain graft.tools.E2EBench [U F P]
   */
 object E2EBench {
@@ -31,6 +38,21 @@ object E2EBench {
     val p = args.lift(2).map(_.toInt).getOrElse(5000)
     val spark = GraftSession.local(appName = "e2e-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    val root = Files.createTempDirectory("e2e-")
+    def scratch(name: String): String = Files.createDirectory(root.resolve(name)).toString
+    val csvDir = root.resolve("lat")
+    try run(spark, u, f, p, scratch, csvDir.toString)
+    finally {
+      spark.stop()
+      val children = Files.list(root)
+      try children.iterator().asScala.filter(_ != csvDir)
+        .foreach(d => FileUtils.deleteDirectory(d.toFile))
+      finally children.close()
+    }
+  }
+
+  private def run(spark: SparkSession, u: Int, f: Int, p: Int,
+      scratch: String => String, csvDir: String): Unit = {
     import spark.implicits._
 
     val rnd = new scala.util.Random(42)
@@ -49,11 +71,11 @@ object E2EBench {
     val batches = json.grouped(500).toSeq
 
     def runPipeline(mode: FeedStream.DedupMode): (String, Double) = {
-      val feedPath = Files.createTempDirectory(s"e2e-feed-$mode").toString
+      val feedPath = scratch(s"feed-$mode")
       val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String](
         implicitly[org.apache.spark.sql.Encoder[String]], spark)
       val q = FeedStream.start(spark, input.toDF(), followsDf, feedPath,
-        Files.createTempDirectory("e2e-ck").toString, dedupMode = mode)
+        scratch(s"ck-$mode"), dedupMode = mode)
       val t = System.nanoTime()
       try batches.foreach { b => input.addData(b); q.processAllAvailable() }
       finally q.stop()
@@ -77,7 +99,7 @@ object E2EBench {
     // per-user top-K read latency against the production read path —
     // the bucket-partitioned Warehouse layout (pruned scans). Stats
     // via the engine's own A2/A3. 5 untimed warm-ups absorb codegen.
-    val whPath = Files.createTempDirectory("e2e-wh").toString
+    val whPath = scratch("wh")
     graft.Warehouse.writeFeed(feed, whPath)
     val table = graft.Warehouse.openFeed(spark, whPath)
     (0 until 5).foreach(i => graft.Warehouse.feedTopK(table, s"user-$i", 50).collect())
@@ -93,7 +115,6 @@ object E2EBench {
       round(expr("percentile(latency_ms, 0.9)"), 3).as("p90_ms"),
       round(expr("percentile(latency_ms, 0.99)"), 3).as("p99_ms")).head()
 
-    val csvDir = Files.createTempDirectory("e2e-lat").toString
     Connectors.csvExport(lat, csvDir)
 
     println(s"""{"metric":"e2e_feed_pipeline","posts":$p,"users":$u,"follows_per_user":$f,""" +
@@ -105,6 +126,5 @@ object E2EBench {
       s""""read_trimmed_mean_ms":${stats.get(0)},"read_p50_ms":${stats.get(1)},""" +
       s""""read_p90_ms":${stats.get(2)},"read_p99_ms":${stats.get(3)},""" +
       s""""delivery_failures":$deliveryFailures,"latency_csv":"$csvDir"}""")
-    spark.stop()
   }
 }

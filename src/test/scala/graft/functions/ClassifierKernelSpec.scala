@@ -32,7 +32,7 @@ class ClassifierKernelSpec extends SparkSpec {
 
   test("featurize kernel == reference fold (c and label)") {
     val k = Classifier.featurize(df, "doc_id", "text")
-    val r = Classifier.featurizeReference(df, "doc_id", "text")
+    val r = KernelReferences.featurizeReference(df, "doc_id", "text")
     val joined = k.alias("k").join(r.alias("r"), "doc_id")
       .select(col("doc_id"), col("k.c").as("kc"), col("r.c").as("rc"),
         col("k.label").as("kl"), col("r.label").as("rl"))

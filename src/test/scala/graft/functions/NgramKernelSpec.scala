@@ -42,7 +42,7 @@ class NgramKernelSpec extends SparkSpec {
       val rows = guarded.select(
         col("text"),
         TextFunctions.ngramArray(ts, n).as("k"),
-        TextFunctions.ngramArrayReference(ts, n).as("r")).collect()
+        KernelReferences.ngramArrayReference(ts, n).as("r")).collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -51,7 +51,7 @@ class NgramKernelSpec extends SparkSpec {
       // the size = n-1 edge: both forms yield an empty array
       val edge = df.filter(size(ts) === n - 1)
         .select(TextFunctions.ngramArray(ts, n).as("k"),
-          TextFunctions.ngramArrayReference(ts, n).as("r")).collect()
+          KernelReferences.ngramArrayReference(ts, n).as("r")).collect()
       edge.foreach { r =>
         assert(r.getSeq[String](0).isEmpty && r.getSeq[String](1).isEmpty)
       }

@@ -90,13 +90,13 @@ class TextStatKernelSpec extends SparkSpec {
       val both = df.select(
         c.as("t"),
         TextFunctions.tokenCount(c).as("k_tok"),
-        TextFunctions.tokenCountReference(c).as("r_tok"),
+        KernelReferences.tokenCountReference(c).as("r_tok"),
         TextFunctions.qualityScore(c).as("k_q"),
-        TextFunctions.qualityScoreReference(c).as("r_q"),
+        KernelReferences.qualityScoreReference(c).as("r_q"),
         TextAnalysis.dup3Frac(c).as("k_d3"),
-        TextAnalysis.dup3FracReference(c).as("r_d3"),
+        KernelReferences.dup3FracReference(c).as("r_d3"),
         TextAnalysis.topTokFrac(c).as("k_tt"),
-        TextAnalysis.topTokFracReference(c).as("r_tt"))
+        KernelReferences.topTokFracReference(c).as("r_tt"))
       val rows = both.collect()
       assert(rows.length >= adversarial.length)
       rows.foreach { r =>

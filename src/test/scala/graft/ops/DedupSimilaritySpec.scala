@@ -40,63 +40,21 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(exact.nonEmpty)
   }
 
-  test("fast (xxhash64) minhash finds the same verified near-dup pairs as the md5 path") {
-    val d = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val md5Pairs = Dedup.minhashDedup(d, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val fastPairs = Dedup.minhashDedupFast(d, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(md5Pairs.nonEmpty && fastPairs == md5Pairs,
-      s"fast missed ${md5Pairs -- fastPairs}, extra ${fastPairs -- md5Pairs}")
-  }
-
-  test("fast (xxhash64) simhash finds the same near-dup pair set as the md5 path on planted dups") {
-    // planted near-dups: every 7th doc gets a byte-identical copy at
-    // id+10000 — hamming 0 under ANY token hash, so both fingerprint
-    // families must report exactly these pairs (organic docs on this
-    // corpus sit far apart at 64 bits / hamming ≤ 3)
-    val d = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val dups = d.filter(pmod(col("doc_id"), lit(7)) === 0)
-      .withColumn("doc_id", col("doc_id") + 10000)
-    val corpus = d.unionByName(dups)
-    val md5Pairs = Dedup.simhashNearDupsCapped(corpus, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val fastPairs = Dedup.simhashNearDupsCapped(corpus, "doc_id", "text", fast = true)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    // ground truth: every planted byte-identical pair MUST surface
-    // under both families (hamming 0 under any token hash)
-    val planted = d.filter(pmod(col("doc_id"), lit(7)) === 0)
-      .select("doc_id").as[Long].collect().map(i => (i, i + 10000)).toSet
-    assert(planted.subsetOf(md5Pairs), s"md5 missed planted ${planted -- md5Pairs}")
-    assert(planted.subsetOf(fastPairs), s"fast missed planted ${planted -- fastPairs}")
-    // beyond ground truth the two hash families legitimately disagree
-    // on BORDERLINE organic pairs (a doc at true distance ~threshold
-    // lands at hamming 3 under one token hash and 4 under another —
-    // inherent to ANN, not an implementation defect), so the contract
-    // is high agreement, not set equality
-    val agreement = (md5Pairs & fastPairs).size.toDouble / (md5Pairs ++ fastPairs).size
-    assert(agreement > 0.7, f"family agreement $agreement%.2f too low")
-    // and the fast fingerprint itself: identical docs → identical hash,
-    // 64 chars of 0/1
-    val fp = Dedup.simhashBitsFast(corpus, "doc_id", "text", 64)
-      .filter(col("id").isin(7L, 10007L)).select("simhash").as[String].collect()
-    assert(fp.length == 2 && fp(0) == fp(1) && fp(0).length == 64
-      && fp(0).forall(c => c == '0' || c == '1'))
-  }
-
-  test("lshCandidatesCapped: identical to lshCandidates under the cap; star not clique above it") {
-    // bucket X: 5 members (oversized at cap 3) → star around min id (4 pairs);
+  test("lshCandidatesCapped: clique under the cap, chain above it") {
+    // bucket X: 5 members (oversized at cap 3) → consecutive pairs in
+    // _skey order, not id order (4 pairs, not the 10-pair clique);
     // bucket Y: 2 members → exact pair; singleton bucket → nothing.
     val bands = (
-      (1 to 5).map(i => (i.toLong, 0, "X")) ++
-        Seq((10L, 0, "Y"), (11L, 0, "Y"), (20L, 1, "Z"))
-      ).toDF("id", "b", "key")
+      Seq((1L, 0, "X", "c"), (2L, 0, "X", "a"), (3L, 0, "X", "e"),
+        (4L, 0, "X", "b"), (5L, 0, "X", "d")) ++
+        Seq((10L, 0, "Y", "y"), (11L, 0, "Y", "y"), (20L, 1, "Z", "z"))
+      ).toDF("id", "b", "key", "_skey")
     val capped = Dedup.lshCandidatesCapped(bands, maxBucket = 3)
       .as[(Long, Long)].collect().toSet
-    assert(capped == Set((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (10L, 11L)))
-    // star keeps the bucket connected: one component over ids 1..5
-    // with 4 edges instead of the 10-edge clique.
-    val small = (1 to 3).map(i => (i.toLong, 0, "W")).toDF("id", "b", "key")
+    // skey order 2,4,1,5,3 — the chain keeps the bucket connected
+    assert(capped == Set((2L, 4L), (1L, 4L), (1L, 5L), (3L, 5L), (10L, 11L)))
+    val small = Seq((1L, 0, "W", "b"), (2L, 0, "W", "a"), (3L, 0, "W", "c"))
+      .toDF("id", "b", "key", "_skey")
     assert(Dedup.lshCandidatesCapped(small, 3).as[(Long, Long)].collect().toSet ==
       Dedup.lshCandidates(small).as[(Long, Long)].collect().toSet)
   }
@@ -436,7 +394,14 @@ class DedupSimilaritySpec extends SparkSpec {
     // idempotence: a second near-dup pass over the survivors finds nothing
     assert(Dedup.minhashDedup(cleaned, "doc_id", "text").isEmpty)
     cleaned.unpersist()
-    ()
+    // the exact stage keeps the min id per text: byte-identical copies
+    // planted at higher ids change nothing
+    val copies = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+      .withColumn("doc_id", col("doc_id") + 10000)
+    def exactIds(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      CorpusPipeline.exactSurvivors(d, "doc_id", "text")
+        .select("doc_id").as[Long].collect().toSet
+    assert(exactIds(docs.unionByName(copies)) == exactIds(docs))
   }
 
   test("capped LSH candidates (keyed) yield the same dedup survivor set as exact candidates") {
@@ -458,7 +423,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def survivors(cand: org.apache.spark.sql.DataFrame): Set[Long] =
       Dedup.dedupCorpus(d, "doc_id", Dedup.jaccardForCandidates(sets, cand, 0.5))
         .as[(Long, String)].collect().map(_._1).toSet
-    val exactCand = Dedup.lshCandidates(bands.drop("_skey"))
+    val exactCand = Dedup.lshCandidates(bands)
     val cappedCand = Dedup.lshCandidatesCapped(bands, maxBucket = 2)
     assert(cappedCand.count() < exactCand.count()) // chain < clique
     assert(survivors(cappedCand) == survivors(exactCand))
@@ -467,10 +432,10 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("sorted-neighborhood capped candidates chain families a star would lose") {
     // One hot bucket holding TWO interleaved-by-id near-dup families,
-    // separated by skey. The min-id star (legacy, no skey) pairs
-    // everything with id 1 — its family-B edges would all fail
-    // verification, orphaning family B. Consecutive pairs in skey
-    // order keep each family internally connected.
+    // separated by skey. A min-id star would pair everything with
+    // id 1 — its family-B edges would all fail verification,
+    // orphaning family B. Consecutive pairs in skey order keep each
+    // family internally connected.
     val bands = Seq(
       (1L, 0, "H", "aaaa"), (3L, 0, "H", "aaab"), (5L, 0, "H", "aaac"),
       (2L, 0, "H", "zzzx"), (4L, 0, "H", "zzzy"), (6L, 0, "H", "zzzz"))
@@ -481,9 +446,10 @@ class DedupSimilaritySpec extends SparkSpec {
     // family A {1,3,5} connected via (1,3),(3,5); family B {2,4,6} via
     // (2,4),(4,6); the lone cross-family edge (2,5) is the run
     // boundary — the one verification will reject.
-    val star = Dedup.lshCandidatesCapped(bands.drop("_skey"), maxBucket = 3)
-      .as[(Long, Long)].collect().toSet
-    assert(star == Set((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (1L, 6L)))
+    // Bands without the sort key are refused, not star-reduced.
+    intercept[IllegalArgumentException] {
+      Dedup.lshCandidatesCapped(bands.drop("_skey"), maxBucket = 3)
+    }
   }
 
   test("keyed capped dedup: replicated families keep survivor parity under a tiny cap") {

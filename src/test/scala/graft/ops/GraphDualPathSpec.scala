@@ -1,12 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Dual-path equality for the iterative graph ops (the q103/q109
-  * precedent): the scale-safe shuffle-join default and the
-  * small-graph broadcast fast path must produce identical results —
-  * the flag trades plan shape, never semantics. */
+/** The iterative graph ops (q103/q146/q158/q193) against physical
+  * config and hand-computed cases: each operator's rows must not move
+  * with `spark.sql.shuffle.partitions` — the broadcast node frames and
+  * u-partitioned adjacencies trade plan shape, never semantics. */
 class GraphDualPathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,22 +15,35 @@ class GraphDualPathSpec extends SparkSpec {
     (1L to 40L).filter(_ % 3 == 0).map(u => u -> ((u * 13 + 5) % 17)))
     .filter(p => p._1 != p._2)
 
-  test("labelPropagation: shuffle default equals broadcast fast path") {
-    val df = edges.toDF("u", "v")
-    val a = FeedShapes.labelPropagation(df, 3, broadcastLabels = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = FeedShapes.labelPropagation(df, 3, broadcastLabels = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b && a.nonEmpty)
+  /** `op`'s rows over the edge set on a fresh session at `parts`
+    * shuffle partitions (the caller's conf is never touched). */
+  private def rowsAt(parts: Int)(op: DataFrame => DataFrame): Set[Row] = {
+    val s: SparkSession = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+    op(s.createDataFrame(edges).toDF("u", "v")).collect().toSet
   }
 
-  test("kCore: shuffle default equals broadcast fast path") {
-    val df = edges.toDF("u", "v")
-    val a = FeedShapes.kCore(df, k = 3, rounds = 4, broadcastAlive = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = FeedShapes.kCore(df, k = 3, rounds = 4, broadcastAlive = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b && a.nonEmpty)
+  private def assertConfigInvariant(op: DataFrame => DataFrame): Unit = {
+    val one = rowsAt(1)(op)
+    val seven = rowsAt(7)(op)
+    assert(one.nonEmpty && one == seven,
+      s"only at 1: ${one -- seven}; only at 7: ${seven -- one}")
+  }
+
+  test("pageRank rows identical at shuffle partitions 1 and 7") {
+    assertConfigInvariant(FeedShapes.pageRank(_, 3))
+  }
+
+  test("hits rows identical at shuffle partitions 1 and 7") {
+    assertConfigInvariant(FeedShapes.hits(_, iterations = 2))
+  }
+
+  test("labelPropagation rows identical at shuffle partitions 1 and 7") {
+    assertConfigInvariant(FeedShapes.labelPropagation(_, 3))
+  }
+
+  test("kCore rows identical at shuffle partitions 1 and 7") {
+    assertConfigInvariant(FeedShapes.kCore(_, k = 3, rounds = 4))
   }
 
   test("labelPropagation converges on two disjoint cliques to per-clique labels") {
@@ -43,14 +56,6 @@ class GraphDualPathSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 4L).map(out).toSet.size == 1)
     assert((10L to 13L).map(out).toSet.size == 1)
-  }
-
-  test("hits: shuffle default equals broadcast fast path") {
-    val df = edges.toDF("u", "v")
-    def run(b: Boolean) = FeedShapes.hits(df, iterations = 2, broadcastScores = b)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    val a = run(false); val b = run(true)
-    assert(a == b && a.nonEmpty)
   }
 
   test("hits: hand-computed trajectory on a 4-node fan (3 is the authority, 1/2 the hubs)") {

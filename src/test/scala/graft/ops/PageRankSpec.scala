@@ -32,14 +32,4 @@ class PageRankSpec extends SparkSpec {
     assert(out(100L) == out.values.max)
     assert(out(100L) > out(1L))
   }
-
-  test("broadcast-rank mode is result-identical to the shuffle-join mode") {
-    val edges = ((1L to 20L).map(u => u -> (u % 7)) ++
-      (1L to 20L).map(u => u -> ((u * 3 + 1) % 7))).filter(p => p._1 != p._2)
-    val a = FeedShapes.pageRank(edges.toDF("u", "v"), 3, broadcastRanks = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = FeedShapes.pageRank(edges.toDF("u", "v"), 3, broadcastRanks = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b)
-  }
 }

@@ -114,29 +114,6 @@ class TextPipelineSpec extends SparkSpec {
     out.unpersist()
   }
 
-  test("exactSurvivorsByFingerprint ≡ exactSurvivors (the 100 TB form matches the window form)") {
-    // plant exact duplicates: every doc with id % 7 == 0 gets a copy at
-    // id + 10000 (same text), so min-id-per-fingerprint must keep the
-    // originals and drop every planted copy
-    val dups = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-      .withColumn("doc_id", col("doc_id") + 10000)
-    val corpus = docs.unionByName(dups)
-    val a = CorpusPipeline.exactSurvivors(corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    val b = CorpusPipeline.exactSurvivorsByFingerprint(corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(a == b, "fingerprint-only path must keep exactly the window path's survivors")
-    assert(a.forall(_ < 10000), "every planted copy must lose to its original")
-    // and the composed recipe is survivor-identical under either flag
-    val bench = docs.limit(0)
-    val w = CorpusPipeline.trainingRecipe(corpus, bench, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    val f = CorpusPipeline.trainingRecipe(corpus, bench, "doc_id", "text",
-      CorpusPipeline.RecipeConfig(base = CorpusPipeline.Config(exactByFingerprint = true)))
-      .select("doc_id").as[Long].collect().toSet
-    assert(w == f)
-  }
-
   test("trainingRecipe/clean leave no cached plans or persistent RDD blocks behind") {
     // the round-4 bench defect: pipeline operators leaked persisted
     // intermediates into the session. Contract: after evaluating the
@@ -325,6 +302,24 @@ class TextPipelineSpec extends SparkSpec {
           case _ =>
         }
     }
+  }
+
+  test("writeShards: manifest is independent of earlier jobs") {
+    // 2 input partitions of 10k ids: Spark's range sampler would draw
+    // ~600 of each partition's rows (4 shards × 100 points × 3 / 2),
+    // so split points taken from it would depend on its RDD-id seed,
+    // i.e. on how many RDDs the session built before the write
+    val ds = spark.range(0L, 20000L, 1L, 2).withColumnRenamed("id", "doc_id")
+    def manifest(out: String): Seq[(Long, Long, Long)] =
+      CorpusPipeline.writeShards(ds, "doc_id", out, numShards = 4,
+          maxRecordsPerFile = 100000L)
+        .as[(String, Long, Long, Long)].collect()
+        .map(r => (r._3, r._4, r._2)).sorted.toSeq
+    val first = manifest("/tmp/graft-shards-history-a")
+    (1 to 5).foreach(i => spark.range(1000L * i).selectExpr("sum(id)").collect())
+    val second = manifest("/tmp/graft-shards-history-b")
+    assert(first.length == 4 && first.map(_._3).sum == 20000L)
+    assert(first == second, s"manifest moved: $first vs $second")
   }
 
   test("unigramLogProb: hand-computed LM scores; rare-token docs score lower") {
