@@ -521,7 +521,7 @@ object MiscShapes {
   def wavSampleMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeWavSamples(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeWavSamples(media).toDF()
+    Multimodal.decodeSamples(media).toDF()
       .groupBy(col("channels").cast("long").as("channels"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_samples")).as("total_frames"),
@@ -569,7 +569,7 @@ object MiscShapes {
   def flacSampleMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeFlacSamples(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeFlacSamples(media).toDF()
+    Multimodal.decodeSamples(media).toDF()
       .groupBy(col("channels").cast("long").as("channels"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_samples")).as("total_frames"),
@@ -624,7 +624,7 @@ object MiscShapes {
   def flacPredSampleMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeFlacPredSamples(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeFlacSamples(media).toDF()
+    Multimodal.decodeSamples(media).toDF()
       .groupBy(col("channels").cast("long").as("channels"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_samples")).as("total_samples"),
@@ -844,7 +844,7 @@ object MiscShapes {
   def flacStereoSampleMeans(s: SparkSession, dir: String): DataFrame = {
     val media = Multimodal.synthesizeFlacStereoSamples(
       docs(s, dir).filter(col("doc_id") < 4000))
-    Multimodal.decodeFlacSamples(media).toDF()
+    Multimodal.decodeSamples(media).toDF()
       .groupBy(col("sample_rate").cast("long").as("sample_rate"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_samples")).as("total_samples"),

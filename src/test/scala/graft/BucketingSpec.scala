@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Co-located bucketed joins: same key + same bucket count ⇒ the join
@@ -13,9 +12,9 @@ class BucketingSpec extends SparkSpec {
     val orders = Tables.load(spark, dir, "orders")
     val customer = Tables.load(spark, dir, "customer")
     Bucketing.writeBucketed(orders, "orders_b",
-      Files.createTempDirectory("ob").toString, "o_custkey", 8)
+      tempDir("ob"), "o_custkey", 8)
     Bucketing.writeBucketed(customer.withColumnRenamed("c_custkey", "o_custkey"),
-      "customer_b", Files.createTempDirectory("cb").toString, "o_custkey", 8)
+      "customer_b", tempDir("cb"), "o_custkey", 8)
 
     // force the non-broadcast path so the exchange question is real
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Z-order layout: correctness of the curve arithmetic and the actual
@@ -33,8 +32,8 @@ class LayoutSpec extends SparkSpec {
     val (u0, u1, t0, t1) =
       (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2), bounds.getLong(3))
 
-    val zDir = Files.createTempDirectory("zord").toString
-    val flatDir = Files.createTempDirectory("flat").toString
+    val zDir = tempDir("zord")
+    val flatDir = tempDir("flat")
     Layout.writeZOrdered(events, "user_id", u0, u1, "ts", t0, t1, zDir, 16)
     events.repartition(16).write.mode("overwrite").parquet(flatDir)
 

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every `graft.tools` main is a documented command: a tool that no
   * CLAUDE.md command runs is dead code that still has to compile,
   * carries its own session conf, and drifts from the harnesses that
-  * replaced it. */
+  * replaced it. And every spec temp dir comes from `SparkSpec.tempDir`,
+  * which deletes it after the suite. */
 class ToolCommandsSpec extends AnyFunSuite {
   private val toolsDir = Paths.get("src/main/scala/graft/tools")
 
@@ -34,5 +35,19 @@ class ToolCommandsSpec extends AnyFunSuite {
     val orphans = mains.filterNot(n => commands.contains(s"graft.tools.$n"))
     assert(orphans.isEmpty,
       s"tools no CLAUDE.md command runs: ${orphans.mkString(", ")}")
+  }
+
+  test("specs create temp dirs only through SparkSpec.tempDir") {
+    // the patterns are written so that this file does not match them
+    val leak = """Files\.createTempDirectory|["]/tmp/""".r
+    val specs = Files.walk(Paths.get("src/test/scala")).iterator.asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "SparkSpec.scala")
+    val hits = specs.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if leak.findFirstIn(line).nonEmpty => s"$f:${i + 1}"
+      }
+    }
+    assert(specs.nonEmpty && hits.isEmpty,
+      s"temp dirs that no suite deletes: ${hits.mkString(", ")}")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.feed.FeedEntry
@@ -15,7 +14,7 @@ class WarehouseSpec extends SparkSpec {
       new Timestamp(1767225600000L + i * 1000L))).toDS.toDF
 
   test("partitioned write + single-user read: pruned scan, same result as flat filter") {
-    val path = Files.createTempDirectory("wh").toString
+    val path = tempDir("wh")
     val feed = mkFeed
     Warehouse.writeFeed(feed, path, buckets = 16)
 
@@ -34,8 +33,8 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("compact: streaming flat output -> partitioned layout, same content") {
-    val flat = Files.createTempDirectory("flat").toString
-    val wh = Files.createTempDirectory("whc").toString
+    val flat = tempDir("flat")
+    val wh = tempDir("whc")
     val feed = mkFeed
     // simulate two streaming micro-batch appends
     feed.filter(col("user_id") <= "user-2").write.mode("append").parquet(flat)
@@ -51,7 +50,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("bucket count bounds directories; every user readable") {
-    val path = Files.createTempDirectory("wh2").toString
+    val path = tempDir("wh2")
     Warehouse.writeFeed(mkFeed, path, buckets = 8)
     val dirs = new java.io.File(Warehouse.currentDataDir(path)).listFiles()
       .count(_.getName.startsWith("user_bucket="))
@@ -62,7 +61,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("versioned publish: open handle survives a concurrent compact; vacuum drops old versions") {
-    val path = Files.createTempDirectory("wh3").toString
+    val path = tempDir("wh3")
     val feed = mkFeed
     Warehouse.writeFeed(feed, path, buckets = 8)
     val before = Warehouse.openFeed(spark, path)

@@ -20,18 +20,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class FeedStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   private val goodJson =
     """{"id":"p-100","author_id":"u-nur","body":"Hello from Nur!","created":"2026-01-01T00:00:00Z"}"""
 
   private def runPipeline(messages: Seq[Seq[String]], follows: Seq[Follow],
       deadLetter: Boolean = false): (String, Option[String]) = {
-    val feedPath = tmp("feed")
-    val dlPath = if (deadLetter) Some(tmp("dl")) else None
+    val feedPath = tempDir("feed")
+    val dlPath = if (deadLetter) Some(tempDir("dl")) else None
     val input = memStream[String]
     val q = FeedStream.start(spark, input.toDF(), follows.toDS.toDF,
-      feedPath, tmp("ckpt"), dlPath)
+      feedPath, tempDir("ckpt"), dlPath)
     try {
       messages.foreach { batch => input.addData(batch); q.processAllAvailable() }
     } finally q.stop()
@@ -74,8 +72,8 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("restart from checkpoint does not duplicate feed rows (ST7)") {
-    val feedPath = tmp("feed")
-    val ckpt = tmp("ckpt")
+    val feedPath = tempDir("feed")
+    val ckpt = tempDir("ckpt")
     val follows = Seq(Follow("u-almaz", "u-nur")).toDS.toDF
     val input = memStream[String]
     val q1 = FeedStream.start(spark, input.toDF(), follows, feedPath, ckpt)
@@ -92,10 +90,10 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("Fast mode: in-batch dedup + batch replay markers give exactly-once (ST1/ST2)") {
-    val feedPath = tmp("feedfast")
+    val feedPath = tempDir("feedfast")
     val in = memStream[String]
     val q = FeedStream.start(spark, in.toDF(), Seq(Follow("u-almaz", "u-nur")).toDS.toDF,
-      feedPath, tmp("ckf"), dedupMode = FeedStream.Fast)
+      feedPath, tempDir("ckf"), dedupMode = FeedStream.Fast)
     try {
       in.addData(Seq(goodJson, goodJson)) // duplicate inside one batch
       q.processAllAvailable()
@@ -110,7 +108,7 @@ class FeedStreamSpec extends SparkSpec {
   test("sink failure leaves no commit marker; retry of the same batch succeeds (store-failure negative)") {
     // mirror of the reference's failing-store doubles (worker_test.go):
     // a write that throws must not mark the batch committed.
-    val base = tmp("failsink")
+    val base = tempDir("failsink")
     val blocker = java.nio.file.Paths.get(base, "feed")
     java.nio.file.Files.writeString(blocker, "not-a-directory") // poison target
     val rows = Seq(FeedEntry("u-1", "p-1", "a", "b",
@@ -127,7 +125,7 @@ class FeedStreamSpec extends SparkSpec {
   }
 
   test("Fast mode crash window: inflight marker triggers anti-join reconcile, no double append") {
-    val path = tmp("inflight")
+    val path = tempDir("inflight")
     val rows = Seq(FeedEntry("u-1", "p-1", "a", "b",
       Timestamp.valueOf("2026-01-01 00:00:00"))).toDS.toDF
     // simulate a crash AFTER a fully successful append but BEFORE the
@@ -216,7 +214,7 @@ class FeedStreamSpec extends SparkSpec {
     spark.listenerManager.register(planListener)
     sc.addSparkListener(jobListener)
     val in = memStream[String]
-    val q = FeedStream.start(spark, in.toDF(), follows, tmp("feedjobs"), tmp("ckjobs"),
+    val q = FeedStream.start(spark, in.toDF(), follows, tempDir("feedjobs"), tempDir("ckjobs"),
       dedupMode = FeedStream.Fast)
     try {
       (0 until 4).foreach { b =>
@@ -264,10 +262,10 @@ class FeedStreamSpec extends SparkSpec {
       // which Fast leaves to the producer (FeedStream.DedupMode)
       val second = if (mode == FeedStream.Exact) Seq(msg("p-1", "a-1"), msg("p-3", "a-1"))
         else Seq(msg("p-3", "a-1"), msg("p-3", "a-1"))
-      val feedPath = tmp("feedparts")
+      val feedPath = tempDir("feedparts")
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String](
         implicitly[org.apache.spark.sql.Encoder[String]], s)
-      val q = FeedStream.start(s, in.toDF(), follows, feedPath, tmp("ckparts"), dedupMode = mode)
+      val q = FeedStream.start(s, in.toDF(), follows, feedPath, tempDir("ckparts"), dedupMode = mode)
       try Seq(twice, second).foreach { b => in.addData(b); q.processAllAvailable() }
       finally q.stop()
       val expected = Fanout.fanout(s.createDataset(posts).toDF, follows)
@@ -286,7 +284,7 @@ class FeedStreamSpec extends SparkSpec {
     val follows = Seq(Follow("u-almaz", "u-nur")).toDS.toDF
     val nobody = Seq(Post("p-9", "u-nobody", "b", Timestamp.valueOf("2026-01-01 00:00:00"))).toDS.toDF
     val rows = Fanout.fanout(nobody, follows)
-    val fresh = tmp("emptybatch") + "/feed"
+    val fresh = tempDir("emptybatch") + "/feed"
     assert(IdempotentSink.appendOnce(spark, rows, 0L, fresh, Schemas.feedKey) == 0L)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh, "_graft_commits", "0")))
     assert(spark.read.parquet(fresh).count() == 0)
@@ -309,7 +307,7 @@ class FeedStreamSpec extends SparkSpec {
     val listeners = spark.streams.listListeners().length
     (0 until 3).foreach { i =>
       val in = memStream[String]
-      val q = FeedStream.start(spark, in.toDF(), follows, tmp("feedlife"), tmp("cklife"),
+      val q = FeedStream.start(spark, in.toDF(), follows, tempDir("feedlife"), tempDir("cklife"),
         dedupMode = if (i % 2 == 0) FeedStream.Fast else FeedStream.Exact)
       try {
         in.addData(Seq(goodJson))

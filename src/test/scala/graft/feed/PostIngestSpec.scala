@@ -10,13 +10,12 @@ import org.apache.spark.sql.functions._
 class PostIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
   private val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
 
   test("one post stream lands in both sinks exactly once, envelope decodes back") {
-    val topicDir = tmp("topic"); val postsTable = tmp("posts")
+    val topicDir = tempDir("topic"); val postsTable = tempDir("posts")
     val in = memStream[Post]
-    val q = PostIngest.start(spark, in.toDF(), topicDir, postsTable, tmp("ck"))
+    val q = PostIngest.start(spark, in.toDF(), topicDir, postsTable, tempDir("ck"))
     try {
       in.addData(Post("p-1", "u-nur", "Hello!", t0))
       q.processAllAvailable()
@@ -61,10 +60,10 @@ class PostIngestSpec extends SparkSpec {
   }
 
   test("startFromSubmissions: ids assigned in-batch; duplicate submission in a later batch is a new post") {
-    val topicDir = tmp("topic3"); val postsTable = tmp("posts3")
+    val topicDir = tempDir("topic3"); val postsTable = tempDir("posts3")
     val in = memStream[(String, String)]
     val q = PostIngest.startFromSubmissions(
-      spark, in.toDF().toDF("author_id", "body"), topicDir, postsTable, tmp("ck3"))
+      spark, in.toDF().toDF("author_id", "body"), topicDir, postsTable, tempDir("ck3"))
     try {
       in.addData(("u-nur", "Hello!"))
       q.processAllAvailable()
@@ -78,15 +77,15 @@ class PostIngestSpec extends SparkSpec {
   }
 
   test("file-source rate limiting: maxFilesPerTrigger bounds each micro-batch (F3/ST6 analog)") {
-    val in = tmp("ratelim")
+    val in = tempDir("ratelim")
     (1 to 4).foreach { i =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/f$i.txt"),
         s"""{"id":"p-$i","author_id":"u-nur","body":"b","created":"2026-01-01T00:00:0$i.000Z"}""")
     }
-    val feedPath = tmp("ratefeed")
+    val feedPath = tempDir("ratefeed")
     val raw = spark.readStream.option("maxFilesPerTrigger", "1").text(in)
     val q = FeedStream.start(spark, raw, Seq(Follow("u-almaz", "u-nur")).toDS.toDF,
-      feedPath, tmp("rateck"))
+      feedPath, tempDir("rateck"))
     try q.processAllAvailable() finally q.stop()
     assert(spark.read.parquet(feedPath).count() == 4)
     // 4 files × 1 file per trigger → at least 4 micro-batches ran
@@ -94,10 +93,10 @@ class PostIngestSpec extends SparkSpec {
   }
 
   test("full loop: ingest -> topic -> feed pipeline -> follower feed") {
-    val topicDir = tmp("topic2"); val postsTable = tmp("posts2")
-    val feedPath = tmp("feed2")
+    val topicDir = tempDir("topic2"); val postsTable = tempDir("posts2")
+    val feedPath = tempDir("feed2")
     val in = memStream[Post]
-    val q1 = PostIngest.start(spark, in.toDF(), topicDir, postsTable, tmp("ck1"))
+    val q1 = PostIngest.start(spark, in.toDF(), topicDir, postsTable, tempDir("ck1"))
     try {
       in.addData(Post("p-9", "u-nur", "loop", t0))
       q1.processAllAvailable()

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
@@ -65,7 +64,7 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("persisted bloom round-trips and prunes identically") {
-    val path = Files.createTempDirectory("bloom").toString
+    val path = tempDir("bloom")
     BloomIndex.writeBloom(bigOrders, "o_orderkey", 1 << 14, 5, path)
     val served = BloomIndex.readBloom(spark, path)
     val fromMem = BloomIndex.prefilter(lineitem, "l_orderkey",

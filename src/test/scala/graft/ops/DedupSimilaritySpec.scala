@@ -494,7 +494,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // self-contained form exactly (same model ⇒ same retrieval).
     val e = graft.Tables.load(spark, dir, "embeddings")
     val (cb, codes) = Similarity.pqModel(e, "vec_id", "embedding", m = 8, seedStep = 7)
-    val tmp = java.nio.file.Files.createTempDirectory("pq_model_").toString
+    val tmp = tempDir("pq_model_")
     cb.write.mode("overwrite").parquet(s"$tmp/codebooks")
     codes.write.mode("overwrite").parquet(s"$tmp/codes")
     val cbT = spark.read.parquet(s"$tmp/codebooks")
@@ -510,7 +510,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("servePqIndex off the persisted layout pins to ivfPqTopK; probed clusters prune files") {
     val e = graft.Tables.load(spark, dir, "embeddings")
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq_idx_").toString
+    val idx = tempDir("ivfpq_idx_")
     Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx,
       seedStepIvf = 37, nAssign = 2, m = 8, seedStepPq = 7)
     val queries = e.filter(col("vec_id") < 5)
@@ -534,7 +534,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // pass) shows up here as a count above the budget.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val e = graft.Tables.load(spark, dir01, "embeddings")
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq_jobs_").toString
+    val idx = tempDir("ivfpq_jobs_")
     Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -572,7 +572,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val e = graft.Tables.load(spark, dir01, "embeddings")
     val ed = e.withColumn("embedding", col("embedding").cast("array<double>"))
     def build(emb: org.apache.spark.sql.DataFrame, name: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(name).toString
+      val d = tempDir(name)
       Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", d)
       d
     }
@@ -590,7 +590,7 @@ class DedupSimilaritySpec extends SparkSpec {
         ("codebooks", "cw", "array<string>"),
         ("codes", "code", "string"),
         ("vectors", "ve", "array<string>"))) {
-      val bad = java.nio.file.Files.createTempDirectory(s"ivfpq_bad_$table").toString
+      val bad = tempDir(s"ivfpq_bad_$table")
       org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(fIdx), new java.io.File(bad))
       val t = spark.read.parquet(s"$fIdx/$table")
         .withColumn(column, col(column).cast(badType))
@@ -696,12 +696,12 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val base = emb.filter(col("vec_id") % 4 =!= 1)
     val delta = emb.filter(col("vec_id") % 4 === 1)
-    val dirA = java.nio.file.Files.createTempDirectory("ivfpq_append_a").toString
+    val dirA = tempDir("ivfpq_append_a")
     Similarity.writeIvfPqIndex(base, "vec_id", "embedding", dirA)
     Similarity.appendToIvfPqIndex(spark, dirA, delta, "vec_id", "embedding")
     // reference: the SAME model read back from the base index, tables
     // encoding the full corpus in one pass
-    val dirB = java.nio.file.Files.createTempDirectory("ivfpq_append_b").toString
+    val dirB = tempDir("ivfpq_append_b")
     val cents = spark.read.parquet(s"$dirA/centroids")
     val cb = spark.read.parquet(s"$dirA/codebooks")
     cents.write.parquet(s"$dirB/centroids")
@@ -736,8 +736,8 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val base = emb.filter(col("vec_id") % 4 =!= 1)
     val delta = emb.filter(col("vec_id") % 4 === 1)
-    val once = java.nio.file.Files.createTempDirectory("ivfpq_replay_1").toString
-    val twice = java.nio.file.Files.createTempDirectory("ivfpq_replay_2").toString
+    val once = tempDir("ivfpq_replay_1")
+    val twice = tempDir("ivfpq_replay_2")
     for (d <- Seq(once, twice)) {
       Similarity.writeIvfPqIndex(base, "vec_id", "embedding", d)
       Similarity.appendToIvfPqIndex(spark, d, delta, "vec_id", "embedding")
@@ -756,10 +756,10 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val base = emb.filter(col("vec_id") % 4 =!= 1)
     val delta = emb.filter(col("vec_id") % 4 === 1)
-    val src = java.nio.file.Files.createTempDirectory("ivfpq_cmp_src").toString
+    val src = tempDir("ivfpq_cmp_src")
     Similarity.writeIvfPqIndex(base, "vec_id", "embedding", src)
     Similarity.appendToIvfPqIndex(spark, src, delta, "vec_id", "embedding")
-    val dst = java.nio.file.Files.createTempDirectory("ivfpq_cmp_dst").toString
+    val dst = tempDir("ivfpq_cmp_dst")
     Similarity.compactIvfPqIndex(spark, src, dst)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))

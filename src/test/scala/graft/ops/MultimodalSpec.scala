@@ -8,8 +8,22 @@ import org.apache.spark.sql.functions._
   * sink round-trip. */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
+  import Multimodal.{FlacChannel, FlacPredicted, FlacVerbatim}
 
   private def docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+
+  private def silentWav(sr: Int, ch: Int, n: Int) =
+    Multimodal.wavFromSamples(sr, Array.fill(ch)(new Array[Int](n)))
+  private def plantedWav(id: Long, sr: Int, ch: Int, n: Int) =
+    Multimodal.wavFromSamples(sr, Array.tabulate(ch, n)((c, i) => Multimodal.plantedSample(id, i, c)))
+
+  /** A 76-byte mono WAV whose LIST chunk size reads 0x7FFFFFF8: an Int
+    * cursor wraps negative on it. */
+  private def wavOverflow: Array[Byte] = {
+    val p = plantedWav(1L, 8000, 1, 10)
+    p(40) = 0xf8.toByte; p(41) = 0xff.toByte; p(42) = 0xff.toByte; p(43) = 0x7f
+    p
+  }
 
   test("synthesize + decodeHeader: GRFT metadata round-trips, body length preserved") {
     val media = Multimodal.synthesize(docs.limit(20))
@@ -87,7 +101,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("sniffAudio: hand-byte contracts — RIFF chunk walk, odd-size pad, FLAC bit unpack") {
     // WAV: the LIST chunk between fmt and data forces a real walk
-    assert(Multimodal.sniffAudio(Multimodal.wavPayload(44100, 2, 100)) ==
+    assert(Multimodal.sniffAudio(silentWav(44100, 2, 100)) ==
       (("wav", 44100, 2, 16, 100L)))
     // odd-size chunk: a 5-byte junk chunk between WAVE and fmt carries
     // a pad byte — a walk that forgets word alignment lands off-by-one
@@ -95,14 +109,14 @@ class MultimodalSpec extends SparkSpec {
       "WAVE".getBytes("US-ASCII") ++
       "junk".getBytes("US-ASCII") ++ Array[Byte](5, 0, 0, 0) ++
       new Array[Byte](5 + 1) ++ // 5 payload + 1 pad
-      Multimodal.wavPayload(8000, 1, 10).drop(12)
+      silentWav(8000, 1, 10).drop(12)
     assert(Multimodal.sniffAudio(odd) == (("wav", 8000, 1, 16, 10L)))
     // FLAC: 20/3/5/36-bit fields unpack exactly, incl. a >32-bit
     // sample count crossing the byte boundary
     assert(Multimodal.sniffAudio(Multimodal.flacHeader(96000, 8, 24, 68719476735L)) ==
       (("flac", 96000, 8, 24, 68719476735L)))
     // truncation / corrupt magic degrade to unknown, never throw
-    assert(Multimodal.sniffAudio(Multimodal.wavPayload(8000, 1, 10).take(11))._1 == "unknown")
+    assert(Multimodal.sniffAudio(silentWav(8000, 1, 10).take(11))._1 == "unknown")
     assert(Multimodal.sniffAudio("RIFFxxxxNOPE".getBytes("US-ASCII"))._1 == "unknown")
     assert(Multimodal.sniffAudio(Multimodal.flacHeader(8000, 1, 16, 1L).take(20))._1 == "unknown")
   }
@@ -136,6 +150,14 @@ class MultimodalSpec extends SparkSpec {
     val broken = full.clone()
     broken(28 + 3) = -1 // inflate moov's declared size past the buffer
     assert(Multimodal.sniffVideo(broken)._1 == "unknown")
+    // a largesize box (size 1) whose 64-bit size has a nonzero high word
+    // is malformed: before moov the walk stops with nothing read; after
+    // moov the fields already read stand and the walk does not step back
+    val huge = Array[Byte](0, 0, 0, 1) ++ "free".getBytes("US-ASCII") ++
+      Array[Byte](0, 0, 0, 1, 0, 0, 0, 32) ++ new Array[Byte](16)
+    assert(Multimodal.sniffVideo(full.take(28) ++ huge ++ full.drop(28))._1 == "unknown")
+    assert(Multimodal.sniffVideo(full ++ huge ++ Multimodal.mp4Header(90000, 5L, 7, 9).drop(28)) ==
+      (("mp4", 600, 1200L, 320, 240)))
   }
 
   test("byteHistogram features are L1-normalized and feed Similarity unchanged") {
@@ -505,20 +527,41 @@ class MultimodalSpec extends SparkSpec {
   test("wavSampleStats: planted PCM recovered through the RIFF walk; rejects") {
     // id·7 % 65536 = 32697 — the planted run straddles the sign flip
     val id = 4671L; val sr = 22050; val ch = 2; val nf = 7
-    val p = Multimodal.wavWithSamples(id, sr, ch, nf)
+    val p = plantedWav(id, sr, ch, nf)
     val samples = for (i <- 0 until nf; c <- 0 until ch)
       yield Multimodal.plantedSample(id, i, c).toLong
-    val got = Multimodal.wavSampleStats(p)
+    val got = Multimodal.sampleStats(p)
     assert(got == ((sr, ch, nf.toLong, samples.sum,
       samples.map(s => s * s).sum, samples.map(math.abs).max)))
     // negative samples must sign-extend (planted fn spans both signs)
     assert(samples.exists(_ < 0) && samples.exists(_ > 0))
     // truncated data chunk: declared length no longer fits → reject
-    assert(Multimodal.wavSampleStats(p.dropRight(3))._1 == -1)
+    assert(Multimodal.sampleStats(p.dropRight(3))._1 == -1)
     // 8-bit depth and non-PCM format tag reject
-    val d8 = p.clone(); d8(34) = 8; assert(Multimodal.wavSampleStats(d8)._1 == -1)
-    val alaw = p.clone(); alaw(20) = 6; assert(Multimodal.wavSampleStats(alaw)._1 == -1)
-    assert(Multimodal.wavSampleStats("RIFFxxxx".getBytes("US-ASCII"))._1 == -1)
+    val d8 = p.clone(); d8(34) = 8; assert(Multimodal.sampleStats(d8)._1 == -1)
+    val alaw = p.clone(); alaw(20) = 6; assert(Multimodal.sampleStats(alaw)._1 == -1)
+    assert(Multimodal.sampleStats("RIFFxxxx".getBytes("US-ASCII"))._1 == -1)
+    // a LIST size of 0x7FFFFFF8 steps the walk past the payload: the
+    // sentinel, not an ArrayIndexOutOfBoundsException from a wrapped cursor
+    assert(wavOverflow.length == 76)
+    assert(Multimodal.sampleStats(wavOverflow)._1 == -1)
+  }
+
+  test("decodeSamples: one op over WAV and FLAC rows; a corrupt chunk size reads the sentinel row") {
+    val good = plantedWav(4671L, 22050, 2, 7)
+    val flac = Multimodal.flacWithSamples(77L)
+    val rows = Seq(Multimodal.MediaRow(0L, "audio", good), Multimodal.MediaRow(1L, "audio", wavOverflow),
+      Multimodal.MediaRow(2L, "audio", flac), Multimodal.MediaRow(3L, "audio", "not audio".getBytes("UTF-8")))
+    val got = Multimodal.decodeSamples(rows.toDS()).collect().sortBy(_.media_id)
+    assert(got.map(_.media_id).toSeq == Seq(0L, 1L, 2L, 3L))
+    for ((g, r) <- got.zip(rows)) {
+      val (sr, ch, n, sum, sq, peak) = Multimodal.sampleStats(r.payload)
+      assert((g.sample_rate, g.channels, g.n_samples, g.sum_s, g.sum_sq, g.peak) ==
+        ((sr, ch, n, sum, sq, peak)), s"row ${g.media_id}")
+    }
+    assert(got(0).sample_rate == 22050 && got(2).sample_rate == 22050)
+    val sentinel = Multimodal.SampleStats(1L, -1, -1, -1L, -1L, -1L, -1L)
+    assert(got(1) == sentinel && got(3) == sentinel.copy(media_id = 3L))
   }
 
   // ---- FLAC (round-14): constant/verbatim frame truth ----
@@ -526,7 +569,7 @@ class MultimodalSpec extends SparkSpec {
   test("flacSampleStats: planted constant+verbatim frames recovered through CRC'd headers") {
     for (id <- Seq(0L, 3L, 77L, 1234L)) {
       val p = Multimodal.flacWithSamples(id)
-      val (sr, ch, n, sum, sq, peak) = Multimodal.flacSampleStats(p)
+      val (sr, ch, n, sum, sq, peak) = Multimodal.sampleStats(p)
       val rates = Array(8000, 16000, 22050, 44100, 48000)
       val expCh = ((id / 2) % 2 + 1).toInt
       val nv = (id % 100 + 20).toInt
@@ -543,23 +586,23 @@ class MultimodalSpec extends SparkSpec {
 
   test("flacSampleStats: CRC flips, truncation, and unsupported subframes reject") {
     val p = Multimodal.flacWithSamples(9L)
-    assert(Multimodal.flacSampleStats(p)._1 > 0)
+    assert(Multimodal.sampleStats(p)._1 > 0)
     // flip one byte mid-frame → CRC-16 mismatch, sentinel not garbage
     val flip = p.clone(); flip(p.length - 10) = (flip(p.length - 10) ^ 0x01).toByte
-    assert(Multimodal.flacSampleStats(flip)._1 == -1)
+    assert(Multimodal.sampleStats(flip)._1 == -1)
     // flip a frame-header byte → CRC-8 catches it before any decode
     val hdrFlip = p.clone(); hdrFlip(42 + 4) = (hdrFlip(42 + 4) ^ 0x01).toByte
-    assert(Multimodal.flacSampleStats(hdrFlip)._1 == -1)
-    assert(Multimodal.flacSampleStats(p.dropRight(5))._1 == -1) // truncated
-    assert(Multimodal.flacSampleStats(p.take(42))._1 == -1)     // frames missing entirely
-    assert(Multimodal.flacSampleStats(Multimodal.bmpWithPixels(9L, 6, 5))._1 == -1)
+    assert(Multimodal.sampleStats(hdrFlip)._1 == -1)
+    assert(Multimodal.sampleStats(p.dropRight(5))._1 == -1) // truncated
+    assert(Multimodal.sampleStats(p.take(42))._1 == -1)     // frames missing entirely
+    assert(Multimodal.sampleStats(Multimodal.bmpWithPixels(9L, 6, 5))._1 == -1)
     // rewrite the first subframe header byte in place (to FIXED order 2,
     // type 0b001010) WITHOUT re-encoding the stream: since round 15 the
     // decoder understands FIXED subframes, but the tampered byte breaks
     // the frame CRC-16, so the stream still rejects — bit-flip safety is
     // CRC-owned, not type-gate-owned.
     val lpc = p.clone(); lpc(42 + 8) = 0x14
-    assert(Multimodal.flacSampleStats(lpc)._1 == -1)
+    assert(Multimodal.sampleStats(lpc)._1 == -1)
   }
 
   // ---- FLAC fixed/LPC + Rice (round-15, VERDICT r14 item 2) ----
@@ -575,8 +618,8 @@ class MultimodalSpec extends SparkSpec {
       val ch = ((id / 2) % 2 + 1).toInt
       val smp = Array.tabulate(ch, 32)((c, i) => Multimodal.flacPredVal(id, c, i))
       val p = Multimodal.flacHeader(44100, ch, 16, 32L) ++
-        Multimodal.flacPredFrame(0, smp, order, None, po)
-      val (sr, gotCh, n, sum, sq, peak) = Multimodal.flacSampleStats(p)
+        Multimodal.flacFrame(0, smp.map(FlacChannel(_, FlacPredicted(order, None, po))))
+      val (sr, gotCh, n, sum, sq, peak) = Multimodal.sampleStats(p)
       assert((sr, gotCh, n) == ((44100, ch, 32L)), s"id=$id order=$order po=$po hdr")
       val (es, eq, ep) = predStats(id, ch, 32)
       assert((sum, sq, peak) == ((es, eq, ep)), s"id=$id order=$order po=$po stats")
@@ -589,8 +632,8 @@ class MultimodalSpec extends SparkSpec {
       val n = (id % 104 + 16).toInt
       val smp = Array.tabulate(ch, n)((c, i) => Multimodal.flacPredVal(id, c, i))
       val p = Multimodal.flacHeader(8000, ch, 16, n.toLong) ++
-        Multimodal.flacPredFrame(0, smp, 2, Some((Array(3, -1), 4, 1)), 0)
-      val (_, gotCh, got, sum, sq, peak) = Multimodal.flacSampleStats(p)
+        Multimodal.flacFrame(0, smp.map(FlacChannel(_, FlacPredicted(2, Some((Array(3, -1), 4, 1))))))
+      val (_, gotCh, got, sum, sq, peak) = Multimodal.sampleStats(p)
       assert(gotCh == ch && got == n.toLong, s"id=$id hdr")
       val (es, eq, ep) = predStats(id, ch, n)
       assert((sum, sq, peak) == ((es, eq, ep)), s"id=$id lpc stats")
@@ -601,8 +644,8 @@ class MultimodalSpec extends SparkSpec {
     val id = 31L
     val smp = Array.tabulate(1, 32)((c, i) => Multimodal.flacPredVal(id, c, i))
     val p = Multimodal.flacHeader(16000, 1, 16, 32L) ++
-      Multimodal.flacPredFrame(0, smp, 1, None, 1, escape = true)
-    val (_, _, got, sum, sq, peak) = Multimodal.flacSampleStats(p)
+      Multimodal.flacFrame(0, smp.map(FlacChannel(_, FlacPredicted(1, None, 1, escape = true))))
+    val (_, _, got, sum, sq, peak) = Multimodal.sampleStats(p)
     assert(got == 32L)
     val (es, eq, ep) = predStats(id, 1, 32)
     assert((sum, sq, peak) == ((es, eq, ep)))
@@ -610,20 +653,20 @@ class MultimodalSpec extends SparkSpec {
 
   test("flac pred frames: CRC flips, truncation, and corpus round-trip") {
     val p = Multimodal.flacWithPredSamples(17L)
-    assert(Multimodal.flacSampleStats(p)._1 > 0)
+    assert(Multimodal.sampleStats(p)._1 > 0)
     // frame-header byte flip → CRC-8 reject before any residual decode
     val hdrFlip = p.clone(); hdrFlip(42 + 4) = (hdrFlip(42 + 4) ^ 0x01).toByte
-    assert(Multimodal.flacSampleStats(hdrFlip)._1 == -1)
+    assert(Multimodal.sampleStats(hdrFlip)._1 == -1)
     // mid-stream Rice-bits flip → CRC-16 reject, never silent corruption
     val flip = p.clone(); flip(p.length - 9) = (flip(p.length - 9) ^ 0x40).toByte
-    assert(Multimodal.flacSampleStats(flip)._1 == -1)
-    assert(Multimodal.flacSampleStats(p.dropRight(3))._1 == -1) // truncated mid-frame
+    assert(Multimodal.sampleStats(flip)._1 == -1)
+    assert(Multimodal.sampleStats(p.dropRight(3))._1 == -1) // truncated mid-frame
     // the q228 corpus decodes to the planted closed form
     for (id <- Seq(0L, 9L, 255L, 3999L)) {
       val ch = ((id / 2) % 2 + 1).toInt
       val total = 32 + (id % 104 + 16).toInt
       val (_, gotCh, n, sum, sq, peak) =
-        Multimodal.flacSampleStats(Multimodal.flacWithPredSamples(id))
+        Multimodal.sampleStats(Multimodal.flacWithPredSamples(id))
       assert(gotCh == ch && n == total.toLong, s"id=$id hdr")
       val (es, eq, ep) = predStats(id, ch, total)
       assert((sum, sq, peak) == ((es, eq, ep)), s"id=$id corpus stats")
@@ -633,7 +676,7 @@ class MultimodalSpec extends SparkSpec {
   test("flacStereoFrame: left-side / side-right / mid-side invert exactly (17-bit side)") {
     for (id <- Seq(0L, 13L, 501L, 3999L)) {
       val p = Multimodal.flacWithStereoSamples(id)
-      val (sr, ch, n, sum, sq, peak) = Multimodal.flacSampleStats(p)
+      val (sr, ch, n, sum, sq, peak) = Multimodal.sampleStats(p)
       assert(ch == 2 && n == 144L, s"id=$id hdr")
       val lr = (0 until 144).flatMap(i =>
         Seq(Multimodal.flacStereoL(id, i).toLong, Multimodal.flacStereoR(id, i).toLong))
@@ -641,19 +684,20 @@ class MultimodalSpec extends SparkSpec {
       assert(sq == lr.map(v => v * v).sum, s"id=$id sq")
       assert(peak == lr.map(math.abs).max, s"id=$id peak")
       // channel 0 of the reconstruction is LEFT for every mode
-      val ch0 = Multimodal.flacChannel0Samples(p)
+      val ch0 = Multimodal.decodePcm(p).get.channels(0)
       assert(ch0.length == 144)
       assert(ch0.zipWithIndex.forall { case (v, i) =>
         v == Multimodal.flacStereoL(id, i) }, s"id=$id left channel")
       // extreme-amplitude pair: side = L−R spans the full 17-bit range
       val lMax = Array.fill(48)(32767); val rMin = Array.fill(48)(-32768)
       val px = Multimodal.flacHeader(8000, 2, 16, 48L) ++
-        Multimodal.flacStereoFrame(0, lMax, rMin, 10)
-      val (_, _, nx, sumx, _, peakx) = Multimodal.flacSampleStats(px)
+        Multimodal.flacFrame(0, Seq(FlacChannel(lMax, FlacVerbatim()),
+          FlacChannel(rMin, FlacVerbatim())), stereo = 10)
+      val (_, _, nx, sumx, _, peakx) = Multimodal.sampleStats(px)
       assert(nx == 48L && sumx == 48L * (32767 - 32768) && peakx == 32768L)
       // CRC flip still rejects on decorrelated frames
       val flip = p.clone(); flip(p.length - 5) = (flip(p.length - 5) ^ 0x10).toByte
-      assert(Multimodal.flacSampleStats(flip)._1 == -1)
+      assert(Multimodal.sampleStats(flip)._1 == -1)
     }
   }
 
@@ -662,8 +706,8 @@ class MultimodalSpec extends SparkSpec {
     val s24 = Array.tabulate(1, 40)((_, i) =>
       ((3L * 1000003L * (i + 1) + 917L) % 16000000L).toInt - 8000000)
     val p24 = Multimodal.flacHeader(48000, 1, 24, 40L) ++
-      Multimodal.flacPredFrame(0, s24, 2, None, 0, escape = false, bps = 24)
-    val (_, _, n24, sum24, sq24, peak24) = Multimodal.flacSampleStats(p24)
+      Multimodal.flacFrame(0, s24.map(FlacChannel(_, FlacPredicted(2))), bps = 24)
+    val (_, _, n24, sum24, sq24, peak24) = Multimodal.sampleStats(p24)
     assert(n24 == 40L)
     assert(sum24 == s24(0).map(_.toLong).sum)
     assert(sq24 == s24(0).map(v => v.toLong * v).sum)
@@ -671,17 +715,17 @@ class MultimodalSpec extends SparkSpec {
     // 8-bit LPC
     val s8 = Array.tabulate(1, 40)((c, i) => Multimodal.flacPredVal(5L, c, i) % 120)
     val p8 = Multimodal.flacHeader(8000, 1, 8, 40L) ++
-      Multimodal.flacPredFrame(0, s8, 2, Some((Array(3, -1), 4, 1)), 0,
-        escape = false, bps = 8)
-    val (_, _, n8, sum8, _, peak8) = Multimodal.flacSampleStats(p8)
+      Multimodal.flacFrame(0, s8.map(FlacChannel(_, FlacPredicted(2, Some((Array(3, -1), 4, 1))))),
+        bps = 8)
+    val (_, _, n8, sum8, _, peak8) = Multimodal.sampleStats(p8)
     assert(n8 == 40L && sum8 == s8(0).map(_.toLong).sum &&
       peak8 == s8(0).map(v => math.abs(v.toLong)).max)
     // frame bps code disagreeing with STREAMINFO rejects
     val bad = Multimodal.flacHeader(8000, 1, 16, 40L) ++
-      Multimodal.flacPredFrame(0, s8, 0, None, 0, escape = false, bps = 24)
-    assert(Multimodal.flacSampleStats(bad)._1 == -1)
+      Multimodal.flacFrame(0, s8.map(FlacChannel(_, FlacPredicted(0))), bps = 24)
+    assert(Multimodal.sampleStats(bad)._1 == -1)
     // unsupported depth (12-bit STREAMINFO) rejects
-    assert(Multimodal.flacSampleStats(
+    assert(Multimodal.sampleStats(
       Multimodal.flacHeader(8000, 1, 12, 0L))._1 == -1)
   }
 
@@ -692,15 +736,15 @@ class MultimodalSpec extends SparkSpec {
       val smp = Array.tabulate(ch, 40)((c, i) =>
         (Multimodal.flacPredVal(id, c, i) >> wasted) << wasted)
       val p = Multimodal.flacHeader(22050, ch, 16, 40L) ++
-        Multimodal.flacWastedFrame(0, smp, wasted)
-      val (_, gotCh, n, sum, sq, peak) = Multimodal.flacSampleStats(p)
+        Multimodal.flacFrame(0, smp.map(FlacChannel(_, FlacVerbatim(wasted))))
+      val (_, gotCh, n, sum, sq, peak) = Multimodal.sampleStats(p)
       assert(gotCh == ch && n == 40L, s"id=$id wasted=$wasted hdr")
       val vals = smp.flatten.map(_.toLong)
       assert(sum == vals.sum && sq == vals.map(v => v * v).sum &&
         peak == vals.map(math.abs).max, s"id=$id wasted=$wasted stats")
       // CRC still owns bit-flip safety on the wasted path
       val flip = p.clone(); flip(p.length - 4) = (flip(p.length - 4) ^ 0x02).toByte
-      assert(Multimodal.flacSampleStats(flip)._1 == -1)
+      assert(Multimodal.sampleStats(flip)._1 == -1)
     }
   }
 
@@ -710,40 +754,42 @@ class MultimodalSpec extends SparkSpec {
     for (id <- Seq(0L, 7L, 131L, 1999L)) {
       val n = 65 * ((id % 4).toInt + 2)
       val s0 = Array.tabulate(n)(i => Multimodal.audioPlantedVal(id, i))
-      val wav = Multimodal.wavFromSamples(16000, s0)
+      val wav = Multimodal.wavFromSamples(16000, Array(s0))
       val fp = Multimodal.audioFp64(wav)
       assert(fp.isDefined, s"id=$id wav decodes")
       // lossless FLAC re-encode: zero shared bytes, equal fingerprint
       val flac = Multimodal.flacHeader(16000, 1, 16, n.toLong) ++
-        Multimodal.flacFrame(0, Array(s0), constant = false)
+        Multimodal.flacFrame(0, Seq(FlacChannel(s0, FlacVerbatim())))
       assert(Multimodal.audioFp64(flac) == fp, s"id=$id flac fp")
       // FLAC with FIXED/Rice encoding of the same samples: same fp too
       // (any 65-divisible split works; one frame keeps windows trivial)
       val flacPred = Multimodal.flacHeader(16000, 1, 16, n.toLong) ++
-        Multimodal.flacPredFrame(0, Array(s0), 2, None, 0)
+        Multimodal.flacFrame(0, Seq(FlacChannel(s0, FlacPredicted(2))))
       assert(Multimodal.audioFp64(flacPred) == fp, s"id=$id flac-pred fp")
       // 2× nearest upsample: window-aligned → every window energy
       // doubles → identical comparison bits
       val s2 = Array.tabulate(2 * n)(i => s0(i / 2))
-      assert(Multimodal.audioFp64(Multimodal.wavFromSamples(16000, s2)) == fp,
+      assert(Multimodal.audioFp64(Multimodal.wavFromSamples(16000, Array(s2))) == fp,
         s"id=$id resampled fp")
       // uniform volume scale (clamped to 16-bit range by construction)
       val loud = s0.map(v => v * 2)
       assert(loud.forall(v => v >= -32768 && v <= 32767))
-      assert(Multimodal.audioFp64(Multimodal.wavFromSamples(16000, loud)) == fp,
+      assert(Multimodal.audioFp64(Multimodal.wavFromSamples(16000, Array(loud))) == fp,
         s"id=$id volume fp")
       // one muted window: flips at most 2 bits (the two comparisons
       // that touch the window), so the pair stays Hamming-searchable
       val wz = (id % 63).toInt + 1
       val s3 = Array.tabulate(n)(i => if (i.toLong * 65 / n == wz) 0 else s0(i))
-      val fp3 = Multimodal.audioFp64(Multimodal.wavFromSamples(16000, s3))
+      val fp3 = Multimodal.audioFp64(Multimodal.wavFromSamples(16000, Array(s3)))
       assert(fp3.isDefined)
       assert(java.lang.Long.bitCount(fp.get ^ fp3.get) <= 2, s"id=$id muted hamming")
     }
     // undecodable / too-short clips drop, never hash
     assert(Multimodal.audioFp64("RIFFjunk".getBytes("US-ASCII")).isEmpty)
     assert(Multimodal.audioFp64(
-      Multimodal.wavFromSamples(8000, Array.fill(10)(5))).isEmpty) // < 65 samples
+      Multimodal.wavFromSamples(8000, Array(Array.fill(10)(5)))).isEmpty) // < 65 samples
+    // a corrupt chunk size reads as undecodable, never throws
+    assert(Multimodal.audioFp64(wavOverflow).isEmpty)
   }
 
   test("audioNearDupsCapped: equals uncapped below the cap; silence family stays chained") {
@@ -759,7 +805,7 @@ class MultimodalSpec extends SparkSpec {
     // the 780-pair clique.
     val silence = spark.createDataset((0L until 40L).map(i =>
       Multimodal.MediaRow(i, "audio",
-        Multimodal.wavFromSamples(8000, Array.fill(130)(0)))))(
+        Multimodal.wavFromSamples(8000, Array(Array.fill(130)(0))))))(
       org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
     val sil = pairSet(Dedup.audioNearDupsCapped(silence, maxBucket = 8))
     assert(sil == (0L until 39L).map(i => (i, i + 1, 0)).toSet)
@@ -1069,7 +1115,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("CSV export/source round-trip (S8)") {
-    val dir = java.nio.file.Files.createTempDirectory("csv").toString
+    val dir = tempDir("csv")
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
     graft.sources.Connectors.csvExport(df, dir)
     val back = graft.sources.Connectors.csvSource(spark, dir, df.schema)
@@ -1078,12 +1124,12 @@ class MultimodalSpec extends SparkSpec {
 
   test("ORC + JSON round-trips; JSON schema-on-read drops unknown fields") {
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
-    val orcDir = java.nio.file.Files.createTempDirectory("orc").toString
+    val orcDir = tempDir("orc")
     graft.sources.Connectors.orcExport(df, orcDir)
     assert(graft.sources.Connectors.orcSource(spark, orcDir)
       .orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
 
-    val jsonDir = java.nio.file.Files.createTempDirectory("json").toString
+    val jsonDir = tempDir("json")
     graft.sources.Connectors.jsonExport(df, jsonDir)
     // narrower explicit schema: unknown field `v` dropped, missing `extra` null
     val schema = org.apache.spark.sql.types.StructType(Seq(

@@ -266,7 +266,7 @@ class TextPipelineSpec extends SparkSpec {
   }
 
   test("writeShards: file cap respected, disjoint id ranges, manifest covers every row") {
-    val out = "/tmp/graft-shards-spec"
+    val out = tempDir("graft-shards-spec")
     val m = CorpusPipeline.writeShards(docs, "doc_id", out,
         numShards = 4, maxRecordsPerFile = 10L)
       .as[(String, Long, Long, Long)].collect()
@@ -315,9 +315,9 @@ class TextPipelineSpec extends SparkSpec {
           maxRecordsPerFile = 100000L)
         .as[(String, Long, Long, Long)].collect()
         .map(r => (r._3, r._4, r._2)).sorted.toSeq
-    val first = manifest("/tmp/graft-shards-history-a")
+    val first = manifest(tempDir("graft-shards-history-a"))
     (1 to 5).foreach(i => spark.range(1000L * i).selectExpr("sum(id)").collect())
-    val second = manifest("/tmp/graft-shards-history-b")
+    val second = manifest(tempDir("graft-shards-history-b"))
     assert(first.length == 4 && first.map(_._3).sum == 20000L)
     assert(first == second, s"manifest moved: $first vs $second")
   }
@@ -400,7 +400,7 @@ class TextPipelineSpec extends SparkSpec {
 
   test("serveBm25 off the persisted inverted index pins to bm25Search; term buckets prune files") {
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val idx = java.nio.file.Files.createTempDirectory("inv_idx_").toString
+    val idx = tempDir("inv_idx_")
     TextAnalysis.writeInvertedIndex(d, "doc_id", "text", idx)
     for (q <- Seq(Seq("table"), Seq("table", "scan", "merge"))) {
       val self = TextAnalysis.bm25Search(d, "doc_id", "text", q, k = 20)
@@ -421,9 +421,9 @@ class TextPipelineSpec extends SparkSpec {
     // serving the merged index must equal serving a one-shot full
     // build row for row
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val full = java.nio.file.Files.createTempDirectory("inv_full_").toString
+    val full = tempDir("inv_full_")
     TextAnalysis.writeInvertedIndex(d, "doc_id", "text", full)
-    val inc = java.nio.file.Files.createTempDirectory("inv_inc_").toString
+    val inc = tempDir("inv_inc_")
     TextAnalysis.writeInvertedIndex(
       d.filter(pmod(col("doc_id"), lit(4)) =!= 1), "doc_id", "text", inc)
     TextAnalysis.appendToInvertedIndex(spark, inc,
@@ -443,12 +443,12 @@ class TextPipelineSpec extends SparkSpec {
 
   test("compactInvertedIndex: serve-identical after append + compact") {
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val src = java.nio.file.Files.createTempDirectory("inv_cmp_src").toString
+    val src = tempDir("inv_cmp_src")
     TextAnalysis.writeInvertedIndex(
       d.filter(pmod(col("doc_id"), lit(4)) =!= 1), "doc_id", "text", src)
     TextAnalysis.appendToInvertedIndex(spark, src,
       d.filter(pmod(col("doc_id"), lit(4)) === 1), "doc_id", "text")
-    val dst = java.nio.file.Files.createTempDirectory("inv_cmp_dst").toString
+    val dst = tempDir("inv_cmp_dst")
     TextAnalysis.compactInvertedIndex(spark, src, dst)
     for (q <- Seq(Seq("table"), Seq("table", "scan", "merge"))) {
       val a = TextAnalysis.serveBm25(spark, src, q, k = 20).collect().map(_.toSeq).toSeq
@@ -476,9 +476,9 @@ class TextPipelineSpec extends SparkSpec {
     // posting rows, so tf/df/n_docs stay exact — serve and stats both
     // equal the one-shot full build after the replay
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val full = java.nio.file.Files.createTempDirectory("inv_rp_full").toString
+    val full = tempDir("inv_rp_full")
     TextAnalysis.writeInvertedIndex(d, "doc_id", "text", full)
-    val inc = java.nio.file.Files.createTempDirectory("inv_rp_inc").toString
+    val inc = tempDir("inv_rp_inc")
     TextAnalysis.writeInvertedIndex(
       d.filter(pmod(col("doc_id"), lit(4)) =!= 1), "doc_id", "text", inc)
     val delta = d.filter(pmod(col("doc_id"), lit(4)) === 1)
@@ -527,7 +527,7 @@ class TextPipelineSpec extends SparkSpec {
     val base = d.filter(pmod(col("doc_id"), lit(4)) =!= 1)
     val overlap = d.filter( // one genuinely-new slice + one re-crawl slice
       pmod(col("doc_id"), lit(4)) === 1 || pmod(col("doc_id"), lit(4)) === 2)
-    val inc = java.nio.file.Files.createTempDirectory("inv_gd_inc").toString
+    val inc = tempDir("inv_gd_inc")
     TextAnalysis.writeInvertedIndex(base, "doc_id", "text", inc)
     val ex = intercept[IllegalArgumentException] {
       TextAnalysis.appendToInvertedIndex(spark, inc, overlap, "doc_id", "text")
@@ -539,7 +539,7 @@ class TextPipelineSpec extends SparkSpec {
     // docs land, and the merged index serves exactly like a full build
     TextAnalysis.appendToInvertedIndex(spark, inc, overlap, "doc_id", "text",
       onExistingIds = "drop")
-    val full = java.nio.file.Files.createTempDirectory("inv_gd_full").toString
+    val full = tempDir("inv_gd_full")
     TextAnalysis.writeInvertedIndex(d, "doc_id", "text", full)
     for (q <- Seq(Seq("table"), Seq("table", "scan", "merge"))) {
       val a = TextAnalysis.serveBm25(spark, full, q, k = 20).collect().map(_.toSeq).toSeq
@@ -560,7 +560,7 @@ class TextPipelineSpec extends SparkSpec {
       pmod(col("doc_id"), lit(4)) === 3)
     val deltaA = d.filter(pmod(col("doc_id"), lit(4)) === 1)
     val deltaB = d.filter(pmod(col("doc_id"), lit(4)) === 2)
-    val inc = java.nio.file.Files.createTempDirectory("inv_ru_inc").toString
+    val inc = tempDir("inv_ru_inc")
     TextAnalysis.writeInvertedIndex(base, "doc_id", "text", inc)
     TextAnalysis.appendToInvertedIndex(spark, inc, deltaA, "doc_id", "text", "crawl1")
     val ex = intercept[IllegalArgumentException] {
@@ -569,7 +569,7 @@ class TextPipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("DIFFERENT content"))
     TextAnalysis.appendToInvertedIndex(spark, inc, deltaB, "doc_id", "text",
       "crawl1", force = true)
-    val full = java.nio.file.Files.createTempDirectory("inv_ru_full").toString
+    val full = tempDir("inv_ru_full")
     TextAnalysis.writeInvertedIndex(
       base.unionByName(deltaB), "doc_id", "text", full)
     for (q <- Seq(Seq("table"), Seq("table", "scan", "merge"))) {

@@ -231,8 +231,8 @@ class CorpusStreamSpec extends SparkSpec {
       (ts("2026-01-01 00:00:06"), 5L, nearDup))
     val bench = Seq((100L, "unrelated benchmark text with nothing shared here at all")).toDF("doc_id", "text")
 
-    val landed = java.nio.file.Files.createTempDirectory("graft_landed").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val landed = tempDir("graft_landed")
+    val ckpt = tempDir("graft_ckpt")
     val in = memStream[Doc]
     val q = CorpusStream.landSurvivors(
       CorpusStream.recipeStream(in.toDF(), bench, "doc_id", "text", "ts", "1 minute"),
@@ -272,7 +272,7 @@ class CorpusStreamSpec extends SparkSpec {
       "crossing a quiet winter road before dawn light arrives"
     val unique2 = "another entirely separate document mentioning eight blue herons " +
       "standing beside a warm summer lake at noon today"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndmask").toString
+    val dir = tempDir("graft_ndmask")
     val in = memStream[Doc]
     val q = CorpusStream.landNearDupMasked(
       CorpusStream.cleanStream(in.toDF(), "text", "ts", "1 minute"),
@@ -309,7 +309,7 @@ class CorpusStreamSpec extends SparkSpec {
       (3L, "s", passText)) ++
       (4L to 39L).map(i => (i, "s", s"short text v$i")))
     val full = rows.toDF("doc_id", "source", "text")
-    val stats = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    val stats = tempDir("graft_gate")
     // three micro-batches, split so the cross-batch checks matter: the
     // dup pair (2, 3) straddles batches 0/1, and the q66 train/val
     // token split straddles all three
@@ -363,7 +363,7 @@ class CorpusStreamSpec extends SparkSpec {
     // lambda variables and drops quality passes
     val passText = ((1 to 28).map(i => f"word$i%02d") ++ Seq("the", "a")).mkString(" ")
     val rows = (0L until 3000L).map(i => (i, "s", if (i % 2 == 0) passText else s"z$i z$i z$i w"))
-    val stats = java.nio.file.Files.createTempDirectory("graft_gate_race").toString
+    val stats = tempDir("graft_gate_race")
     (0L until 4L).foreach { b =>
       CorpusStream.rollupBatch(rows.toDF("doc_id", "source", "text"), b, stats)
     }
@@ -381,7 +381,7 @@ class CorpusStreamSpec extends SparkSpec {
     // partials). Marker discipline applies only once ok/ exists.
     val rows = (1L to 12L).map(i => (i, "s", s"legacy doc number $i"))
     val full = rows.toDF("doc_id", "source", "text")
-    val stats = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    val stats = tempDir("graft_legacy")
     Seq(rows.take(6), rows.drop(6)).zipWithIndex.foreach { case (b, i) =>
       CorpusStream.rollupBatch(b.toDF("doc_id", "source", "text"), i.toLong, stats)
     }
@@ -401,7 +401,7 @@ class CorpusStreamSpec extends SparkSpec {
       "crossing a quiet winter road before dawn light arrives"
     val unique2 = "another entirely separate document mentioning eight blue herons " +
       "standing beside a warm summer lake at noon today"
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val dir = tempDir("graft_replay")
     val docs = s"$dir/docs"; val idx = s"$dir/idx"
     val b0 = Seq((1L, good), (2L, other)).toDF("doc_id", "text")
     val b1 = Seq((3L, good + " truly"), (4L, unique2)).toDF("doc_id", "text")
