@@ -56,6 +56,23 @@ object GraftSession {
     b.getOrCreate()
   }
 
+  /** One root per JVM for scratch dirs, deleted at exit. Hadoop's hook
+    * manager runs hooks by priority, so 25 runs after Spark's (40),
+    * which stop the SparkContext and its streams. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 25)
+    root
+  }
+
+  /** A new empty dir under the per-JVM scratch root; the one place
+    * `src/main` makes temp dirs (`ToolCommandsSpec` guards this). Gate
+    * frames read their staged files lazily (q182–q185, q232–q234), so
+    * the dirs live until exit. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
   /** The audit/report operators intentionally use GLOBAL
     * (unpartitioned) window frames on post-aggregation results that
     * are bounded by construction — histograms, per-source summaries,

@@ -706,11 +706,9 @@ object Aggregates {
     // the cell-bounded contingency frame has FOUR consumers (row,
     // column, grand totals + the term join) — materialize it so the
     // events scan runs once
-    val observed = graft.PlanCapture.checkpoint(
-      events
-        .select(col(groupCol).as("g"), catCol.as("cat"), periodCol.as("per"))
-        .groupBy(col("g"), col("cat"), col("per")).agg(count(lit(1)).as("o")),
-      "chisq-cells")
+    val observed = events
+      .select(col(groupCol).as("g"), catCol.as("cat"), periodCol.as("per"))
+      .groupBy(col("g"), col("cat"), col("per")).agg(count(lit(1)).as("o")).localCheckpoint()
     // complete the grid: every (group, cat) × (group, per) observed
     // anywhere gets a cell, missing ones at O=0 (cell-bounded frames,
     // both broadcastable)

@@ -458,11 +458,9 @@ object Analytics {
     // (bounded by per-basket item count², never a self-join), so no
     // second corpus-sized exchange exists. The set frame has three
     // consumers (pairs, totals, basket count) — materialized once.
-    val sets = graft.PlanCapture.checkpoint(
-      items
-        .groupBy(col(basketCol).as("okey"))
-        .agg(sort_array(collect_set(col(itemCol))).as("bs")),
-      "basket-sets")
+    val sets = items
+      .groupBy(col(basketCol).as("okey"))
+      .agg(sort_array(collect_set(col(itemCol))).as("bs")).localCheckpoint()
     val totals = sets.select(explode(col("bs")).as("brand"))
       .groupBy(col("brand")).agg(count(lit(1)).as("n_brand"))
     val nOrd = sets.select(count(lit(1)).as("n_ord"))
@@ -963,8 +961,7 @@ object Analytics {
     }
     // the 1-row profile frame has one consumer PER COLUMN — checkpoint
     // so the events scan runs once, not |cols| times
-    val one = graft.PlanCapture.checkpoint(
-      e.agg(aggs.head, aggs.tail: _*), "profile-row")
+    val one = e.agg(aggs.head, aggs.tail: _*).localCheckpoint()
     val longForm = cols.map { c =>
       one.select(lit(c).as("column"), col(s"null_$c").as("n_null"),
         col(s"dist_$c").as("n_distinct"))
@@ -1309,11 +1306,9 @@ object Analytics {
     * per user, never corpus²), and the per-type audience totals
     * broadcast into the final exact-integer Jaccard. */
   def audienceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sets = graft.PlanCapture.checkpoint(
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(sort_array(collect_set(col("event_type"))).as("ts")),
-      "audience-sets")
+    val sets = Tables.events(s, dir)
+      .groupBy(col("user_id"))
+      .agg(sort_array(collect_set(col("event_type"))).as("ts")).localCheckpoint()
     val totals = sets.select(explode(col("ts")).as("et"))
       .groupBy(col("et")).agg(count(lit(1)).as("n"))
     val pairs = sets

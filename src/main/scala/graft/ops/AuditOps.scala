@@ -48,12 +48,10 @@ object AuditOps {
       else d.filter(
         substring(md5(concat(lit("cal|"), col("doc_id").cast("string"))), 1, 4)
           < lit(f"${(sampleFrac * 65536).toInt}%04x"))
-    val sets = graft.PlanCapture.checkpoint(
-      Dedup.docShingleArrays(Dedup.wordBigrams(dd, "doc_id", "text"))
-        .withColumn("sigs", array((0 until 8).map(i =>
-          array_min(transform(col("shs"), sh =>
-            md5(concat(lit(s"$i|"), sh))))): _*)),
-      "mh-calib-sets")
+    val sets = Dedup.docShingleArrays(Dedup.wordBigrams(dd, "doc_id", "text"))
+      .withColumn("sigs", array((0 until 8).map(i =>
+        array_min(transform(col("shs"), sh =>
+          md5(concat(lit(s"$i|"), sh))))): _*)).localCheckpoint()
     // Band keys from the STORED signatures (round-16, guide §1.2 step
     // 2): lshBandsFromArrays re-derives every per-component array_min
     // — 8 more interpreted md5 passes over every shingle of every doc

@@ -150,10 +150,6 @@ object Classifier {
         .select(col("_e"), posexplode(col("c")))
         .groupBy(col("pos"))
         .agg(sum(col("_e") * col("col")).as("g"))
-      // the training work ends in a driver collect and never reaches
-      // the final predict lineage — surface one representative
-      // iteration's plan to the audit (all T share the shape)
-      if (it == 1) graft.PlanCapture.record(gradDf, "gd-iteration")
       val grad = gradDf.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       w = IndexedSeq.tabulate(D + 1) { j =>
         val g = grad.getOrElse(j, 0L)

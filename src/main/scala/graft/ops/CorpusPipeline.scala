@@ -115,8 +115,7 @@ object CorpusPipeline {
     // checkpointed distributed frame either way.
     val pairs = Dedup.minhashDedupCapped(ex, idCol, textCol,
       cfg.base.numHashes, cfg.base.bandSize, cfg.base.minJaccard, cfg.base.maxBucket)
-    val keep = graft.PlanCapture.checkpoint(
-      Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs), "recipe-keep-ids")
+    val keep = Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs).localCheckpoint()
     // blocking: the suite runs the recipe family back-to-back, and an
     // async release lets stage blocks linger into the next query
     gated.unpersist(true)
@@ -187,15 +186,13 @@ object CorpusPipeline {
       .persist(graft.GraftSession.textFrameLevel)
     val pairs = Dedup.minhashDedupCapped(ex, idCol, textCol,
       b.base.numHashes, b.base.bandSize, b.base.minJaccard, b.base.maxBucket)
-    val keep0 = graft.PlanCapture.checkpoint(
-      Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs), "curation-keep-ids")
+    val keep0 = Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs).localCheckpoint()
     val keep = cfg.budgetTokens match {
       case Some(budget) =>
-        graft.PlanCapture.checkpoint(
-          CurationOps.budgetSample(
-            ex.join(broadcast(keep0), Seq(idCol), "left_semi"),
-            idCol, textCol, domainCol, budget, cfg.budgetSeed)
-            .select(col(idCol)), "curation-budget-ids")
+        CurationOps.budgetSample(
+          ex.join(broadcast(keep0), Seq(idCol), "left_semi"),
+          idCol, textCol, domainCol, budget, cfg.budgetSeed)
+          .select(col(idCol)).localCheckpoint()
       case None => keep0
     }
     gated.unpersist(true)
@@ -224,8 +221,7 @@ object CorpusPipeline {
       .persist(graft.GraftSession.textFrameLevel)
     val pairs = Dedup.minhashDedupCapped(ex, idCol, textCol,
       cfg.numHashes, cfg.bandSize, cfg.minJaccard, cfg.maxBucket)
-    val keep = graft.PlanCapture.checkpoint(
-      Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs), "clean-keep-ids")
+    val keep = Dedup.dedupCorpus(ex.select(col(idCol)), idCol, pairs).localCheckpoint()
     ex.unpersist()
     docs.join(broadcast(keep), Seq(idCol), "left_semi")
   }

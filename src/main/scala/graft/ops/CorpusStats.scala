@@ -119,7 +119,7 @@ object CorpusStats {
         "transform(sequence(1, size(ts) - 1), i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"))
         .as("gram"))
       .distinct()
-    val gramsCk = graft.PlanCapture.checkpoint(grams, "novelty-grams")
+    val gramsCk = grams.localCheckpoint()
     val firstDoc = gramsCk.groupBy(col("gram")).agg(min(col("doc_id")).as("first_doc"))
     val firstSrc = firstDoc.join(
       d.select(col("doc_id").as("first_doc"), col("source").as("first_source")),
@@ -315,10 +315,8 @@ object CorpusStats {
     val comp = emb.select(col(labelCol).as("label"),
         posexplode(col(vecCol)).as(Seq("dim", "x")))
       .withColumn("vfx", round(col("x").cast("double") * 1e6).cast("long"))
-    val sums = graft.PlanCapture.checkpoint(
-      comp.groupBy(col("label"), col("dim"))
-        .agg(sum(col("vfx")).as("sfx"), count(lit(1)).as("nv")),
-      "centroid-sums")
+    val sums = comp.groupBy(col("label"), col("dim"))
+      .agg(sum(col("vfx")).as("sfx"), count(lit(1)).as("nv")).localCheckpoint()
     val norms = sums.groupBy(col("label")).agg(
       sum(expr("CAST(sfx AS DECIMAL(38,0)) * sfx")).as("nrm2"),
       max(col("nv")).as("n_vecs"))

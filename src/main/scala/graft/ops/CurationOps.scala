@@ -1083,16 +1083,14 @@ object CurationOps {
     // the |sources|-row frame feeds three consumers (total, weights,
     // weight sum) — checkpoint it or each consumer re-runs the corpus
     // aggregation (the ≥3-consumer rule)
-    val per = graft.PlanCapture.checkpoint(
-      d.select(col(srcCol).as("source"), nTok.as("n"))
-        .groupBy(col("source")).agg(sum(col("n")).as("n_tokens")),
-      "temp-mixture-per")
+    val per = d.select(col(srcCol).as("source"), nTok.as("n"))
+      .groupBy(col("source")).agg(sum(col("n")).as("n_tokens")).localCheckpoint()
     val tot = per.agg(sum(col("n_tokens")).as("tot"))
-    val w = graft.PlanCapture.checkpoint(per.crossJoin(broadcast(tot))
+    val w = per.crossJoin(broadcast(tot))
       .withColumn("share_fx", expr("(n_tokens * 1000000) div tot"))
       .withColumn("weight_fx",
-        round(sqrt(col("n_tokens").cast("double") / col("tot")) * 1e6).cast("long")),
-      "temp-mixture-w")
+        round(sqrt(col("n_tokens").cast("double") / col("tot")) * 1e6).cast("long"))
+      .localCheckpoint()
     val wsum = w.agg(sum(col("weight_fx")).as("wsum"))
     w.crossJoin(broadcast(wsum))
       .select(col("source"), col("n_tokens"), col("share_fx"), col("weight_fx"),

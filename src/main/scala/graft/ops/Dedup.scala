@@ -35,7 +35,7 @@ object Dedup {
     * checkpointed result is the near-dup pair list — tiny next to the
     * intermediates it replaces. */
   private def materializeAndFree(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = graft.PlanCapture.checkpoint(result, "neardup-pairs")
+    val out = result.localCheckpoint()
     // blocking: shingle-array caches are the largest heap blocks in a
     // composed recipe; an async release lets them linger into the
     // caller's next stage (round-13, VERDICT r12 item 2)
@@ -157,17 +157,15 @@ object Dedup {
     // docSets is the pipeline pivot (the docShingleArrays analog):
     // prefix explode (twice) and the candidate verify all read it —
     // materialize once so the shingle build isn't recomputed 3×
-    val docSets = graft.PlanCapture.checkpoint(
-      shingleSets.join(dfreq, Seq("sh"))
-        .groupBy(col("id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("ord"))
-        .withColumn("shs", transform(col("ord"), x => x("sh")))
-        .withColumn("sz", size(col("shs")))
-        .withColumn("plen",
-          (col("sz") - ceil(col("sz") * minJaccard) + 1).cast("int"))
-        .select(col("id"), col("shs"),
-          slice(col("shs"), lit(1), col("plen")).as("prefix")),
-      "ppjoin-docsets")
+    val docSets = shingleSets.join(dfreq, Seq("sh"))
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("ord"))
+      .withColumn("shs", transform(col("ord"), x => x("sh")))
+      .withColumn("sz", size(col("shs")))
+      .withColumn("plen",
+        (col("sz") - ceil(col("sz") * minJaccard) + 1).cast("int"))
+      .select(col("id"), col("shs"),
+        slice(col("shs"), lit(1), col("plen")).as("prefix")).localCheckpoint()
     val pref = docSets.select(col("id"), explode(col("prefix")).as("sh"))
     val cand = pref.select(col("id").as("id_a"), col("sh"))
       .join(pref.select(col("id").as("id_b"), col("sh")), Seq("sh"))
@@ -210,17 +208,15 @@ object Dedup {
       minContainment: Double): DataFrame = {
     val tFx = math.round(minContainment * 1e6)
     val dfreq = shingleSets.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val docSets = graft.PlanCapture.checkpoint(
-      shingleSets.join(dfreq, Seq("sh"))
-        .groupBy(col("id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("ord"))
-        .withColumn("shs", transform(col("ord"), x => x("sh")))
-        .withColumn("sz", size(col("shs")))
-        .withColumn("plen", expr(
-          s"CAST(sz - (($tFx * CAST(sz AS BIGINT) + 999999) div 1000000) + 1 AS INT)"))
-        .select(col("id"), col("shs"),
-          slice(col("shs"), lit(1), col("plen")).as("prefix")),
-      "containment-docsets")
+    val docSets = shingleSets.join(dfreq, Seq("sh"))
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("ord"))
+      .withColumn("shs", transform(col("ord"), x => x("sh")))
+      .withColumn("sz", size(col("shs")))
+      .withColumn("plen", expr(
+        s"CAST(sz - (($tFx * CAST(sz AS BIGINT) + 999999) div 1000000) + 1 AS INT)"))
+      .select(col("id"), col("shs"),
+        slice(col("shs"), lit(1), col("plen")).as("prefix")).localCheckpoint()
     val pref = docSets.select(col("id").as("id_sub"), explode(col("prefix")).as("sh"))
     val cand = pref
       .join(shingleSets.select(col("id").as("id_sup"), col("sh")), Seq("sh"))
@@ -296,20 +292,18 @@ object Dedup {
     // sorted vocabulary while count(*) still sees every original row
     // (= the original-|A| denominator). The sup-side index is the
     // checkpointed docSets EXPLODED — map-side, no second shuffle.
-    val docSets = graft.PlanCapture.checkpoint(
-      shingleSets.join(dfreq, Seq("sh"))
-        .groupBy(col("id"))
-        .agg(count(lit(1)).as("orig_sz"),
-          sort_array(collect_list(when(col("df") <= maxDf,
-            struct(col("df"), col("sh"))))).as("ord"))
-        .withColumn("shs", transform(col("ord"), x => x("sh")))
-        .withColumn("sz", size(col("shs")))
-        .withColumn("omin", expr(s"($tFx * orig_sz + 999999) div 1000000"))
-        .withColumn("plen", expr("CAST(sz - omin + 1 AS INT)"))
-        .select(col("id"), col("shs"), col("orig_sz"),
-          when(col("plen") >= 1, slice(col("shs"), lit(1), col("plen")))
-            .otherwise(array().cast("array<string>")).as("prefix")),
-      "containment-capped-docsets")
+    val docSets = shingleSets.join(dfreq, Seq("sh"))
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("orig_sz"),
+        sort_array(collect_list(when(col("df") <= maxDf,
+          struct(col("df"), col("sh"))))).as("ord"))
+      .withColumn("shs", transform(col("ord"), x => x("sh")))
+      .withColumn("sz", size(col("shs")))
+      .withColumn("omin", expr(s"($tFx * orig_sz + 999999) div 1000000"))
+      .withColumn("plen", expr("CAST(sz - omin + 1 AS INT)"))
+      .select(col("id"), col("shs"), col("orig_sz"),
+        when(col("plen") >= 1, slice(col("shs"), lit(1), col("plen")))
+          .otherwise(array().cast("array<string>")).as("prefix")).localCheckpoint()
     val pref = docSets.select(col("id").as("id_sub"), explode(col("prefix")).as("sh"))
     val cand = pref
       .join(docSets.select(col("id").as("id_sup"), explode(col("shs")).as("sh")), Seq("sh"))
@@ -913,13 +907,11 @@ object Dedup {
     * self-join per round is over the label frame (node-sized), cheap
     * next to saving diameter−log(diameter) full rounds on chains. */
   private def componentsByPropagation(pairs: DataFrame): DataFrame = {
-    val edges = graft.PlanCapture.checkpoint(
-      pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-        .unionByName(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
-        .distinct(), "cc-edges")
-    var labels = graft.PlanCapture.checkpoint(
-      edges.select(col("s").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")), "cc-labels-init")
+    val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
+      .unionByName(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
+      .distinct().localCheckpoint()
+    var labels = edges.select(col("s").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")).localCheckpoint()
     var done = false
     while (!done) {
       val viaNeighbor = edges.join(labels, edges("d") === labels("id"))
@@ -932,12 +924,11 @@ object Dedup {
       // label is still reachable-and-smaller) — jumping against
       // `stepped` itself would recompute the propagation join twice.
       val jump = labels.select(col("id").as("_jid"), col("comp").as("_jcomp"))
-      val next = graft.PlanCapture.checkpoint(
-        stepped.join(jump, stepped("mid") === jump("_jid"), "left")
-          .select(stepped("id"),
-            least(col("mid"), coalesce(col("_jcomp"), col("mid"))).as("comp"),
-            (least(col("mid"), coalesce(col("_jcomp"), col("mid"))) < col("old")).as("chg")),
-        "cc-round")
+      val next = stepped.join(jump, stepped("mid") === jump("_jid"), "left")
+        .select(stepped("id"),
+          least(col("mid"), coalesce(col("_jcomp"), col("mid"))).as("comp"),
+          (least(col("mid"), coalesce(col("_jcomp"), col("mid"))) < col("old")).as("chg"))
+        .localCheckpoint()
       done = next.filter(col("chg")).isEmpty
       labels = next.select(col("id"), col("comp"))
     }

@@ -587,12 +587,10 @@ object DedupShapes {
                            bit_count(x.hl ^ y.hl) AS hamming))))""")).as("p"))
       .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
       .distinct()
-    val toksets = graft.PlanCapture.checkpoint(
-      dd.select(col("doc_id").as("id"),
-          explode(split(trim(col("text")), "\\s+")).as("tok"))
-        .groupBy(col("id"))
-        .agg(sort_array(collect_set(col("tok"))).as("ts")),
-      "calib-toksets")
+    val toksets = dd.select(col("doc_id").as("id"),
+        explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .groupBy(col("id"))
+      .agg(sort_array(collect_set(col("tok"))).as("ts")).localCheckpoint()
     cand
       .join(toksets.select(col("id").as("id_a"), col("ts").as("ts_a")), Seq("id_a"))
       .join(toksets.select(col("id").as("id_b"), col("ts").as("ts_b")), Seq("id_b"))

@@ -208,7 +208,7 @@ object FeedShapes {
             (lit(150000L) + floor(lit(0.85) * coalesce(col("s"), lit(0L)))
               .cast("long")).as("r"))
       }
-      graft.PlanCapture.checkpoint(rank, "pagerank-final")
+      rank.localCheckpoint()
     } finally {
       e.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -288,28 +288,23 @@ object FeedShapes {
         // checkpoint per half-step or the lineage re-derives the whole
         // prior trajectory per consumer (the q146 round-9 lesson:
         // 68 exchanges → single digits)
-        val araw = graft.PlanCapture.checkpoint(
-          eU.join(broadcast(hub), Seq("u"))
-            .groupBy(col("v")).agg(sum(col("h")).as("s")), s"hits-a$it")
+        val araw = eU.join(broadcast(hub), Seq("u"))
+          .groupBy(col("v")).agg(sum(col("h")).as("s")).localCheckpoint()
         val amax = araw.agg(max(col("s")).as("mx"))
-        auth = graft.PlanCapture.checkpoint(nodes
+        auth = nodes
           .join(broadcast(araw.select(col("v").as("u"), col("s"))), Seq("u"), "left")
           .crossJoin(broadcast(amax))
-          .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("a")),
-          s"hits-auth$it")
-        val hraw = graft.PlanCapture.checkpoint(
-          eV.join(broadcast(auth.select(col("u").as("v"), col("a"))), Seq("v"))
-            .groupBy(col("u")).agg(sum(col("a")).as("s")), s"hits-h$it")
+          .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("a")).localCheckpoint()
+        val hraw = eV.join(broadcast(auth.select(col("u").as("v"), col("a"))), Seq("v"))
+          .groupBy(col("u")).agg(sum(col("a")).as("s")).localCheckpoint()
         val hmax = hraw.agg(max(col("s")).as("mx"))
-        hub = graft.PlanCapture.checkpoint(
-          nodes.join(broadcast(hraw), Seq("u"), "left")
-            .crossJoin(broadcast(hmax))
-            .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("h")),
-          s"hits-hub$it")
+        hub = nodes.join(broadcast(hraw), Seq("u"), "left")
+          .crossJoin(broadcast(hmax))
+          .select(col("u"), expr("(coalesce(s, 0) * 1000000) div mx").as("h")).localCheckpoint()
       }
       // both sides are node-sized checkpoints — broadcast one so the
       // close is a BHJ, not a sort-merge of two tiny frames
-      graft.PlanCapture.checkpoint(hub.join(broadcast(auth), Seq("u")), "hits-final")
+      hub.join(broadcast(auth), Seq("u")).localCheckpoint()
     } finally {
       eU.unpersist(blocking = false)
       eV.unpersist(blocking = false)
@@ -511,14 +506,11 @@ object FeedShapes {
     // ize once (the Pregel edge-partition-once contract);
     // localCheckpoint preserves outputPartitioning, so every round
     // reuses it without an exchange
-    val und = graft.PlanCapture.checkpoint(
-      edges.select(col("u"), col("v"))
-        .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-        .distinct()
-        .repartition(col("u")),
-      "lpa-adjacency").persist()
-    val nodes = graft.PlanCapture.checkpoint(
-      und.select(col("u")).distinct(), "lpa-nodes").persist()
+    val und = edges.select(col("u"), col("v"))
+      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+      .repartition(col("u")).localCheckpoint().persist()
+    val nodes = und.select(col("u")).distinct().localCheckpoint().persist()
     try {
       var lab = nodes.select(col("u"), col("u").cast("long").as("lab"))
       for (_ <- 1 to iterations) {
@@ -533,12 +525,10 @@ object FeedShapes {
         // node-bounded frame, consumed by the next round's join AND
         // broadcast — materialize per round (the q103 pageRank shape)
         // so round N+1's plan starts from labels, not the full lineage
-        lab = graft.PlanCapture.checkpoint(
-          nodes
-            .join(broadcast(lab), Seq("u"))
-            .join(broadcast(best), Seq("u"), "left")
-            .select(col("u"), coalesce(col("new_lab"), col("lab")).as("lab")),
-          "lpa-labels")
+        lab = nodes
+          .join(broadcast(lab), Seq("u"))
+          .join(broadcast(best), Seq("u"), "left")
+          .select(col("u"), coalesce(col("new_lab"), col("lab")).as("lab")).localCheckpoint()
       }
       lab
     } finally { und.unpersist(blocking = false); nodes.unpersist(blocking = false) }
@@ -598,12 +588,10 @@ object FeedShapes {
     * frame must fit a broadcast. Returns the surviving nodes with
     * their degree in the final induced subgraph. */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val und = graft.PlanCapture.checkpoint(
-      edges.select(col("u"), col("v"))
-        .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-        .distinct()
-        .repartition(col("u")),
-      "kcore-adjacency").persist()
+    val und = edges.select(col("u"), col("v"))
+      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+      .repartition(col("u")).localCheckpoint().persist()
     try {
       // induced degree of ALIVE u = # alive neighbors v. Count over
       // v-alive edges first (edge frame untouched on its partitioning),
@@ -614,12 +602,9 @@ object FeedShapes {
         .join(broadcast(alive.withColumnRenamed("u", "v")), Seq("v"), "left_semi")
         .groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .join(broadcast(alive), Seq("u"), "left_semi")
-      var alive = graft.PlanCapture.checkpoint(
-        und.select(col("u")).distinct(), "kcore-nodes")
+      var alive = und.select(col("u")).distinct().localCheckpoint()
       for (_ <- 1 to rounds) {
-        alive = graft.PlanCapture.checkpoint(
-          induceDeg(alive).filter(col("deg") >= k).select(col("u")),
-          "kcore-alive")
+        alive = induceDeg(alive).filter(col("deg") >= k).select(col("u")).localCheckpoint()
       }
       induceDeg(alive)
     } finally { und.unpersist(blocking = false) }

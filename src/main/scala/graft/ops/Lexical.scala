@@ -48,16 +48,14 @@ object Lexical {
     // the corpus pass nor the agg is recomputed, and compute totals
     // as 1-row aggs broadcast back (the bm25 stats pattern), never an
     // empty-partitionBy window funneling the pair frame into one task
-    val uni = graft.PlanCapture.checkpoint(
-      toks.groupBy(col("tok")).agg(count(lit(1)).as("c")), "pmi-uni")
+    val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("c")).localCheckpoint()
     val t1 = uni.agg(sum(col("c")).as("n1"))
-    val pairs = graft.PlanCapture.checkpoint(
-      arrs
-        .withColumn("_a", slice(col("_l"), lit(1), size(col("_l")) - 1))
-        .withColumn("_b", slice(col("_l"), lit(2), size(col("_l")) - 1))
-        .select(explode(arrays_zip(col("_a"), col("_b"))).as("p"))
-        .select(col("p._a").as("w1"), col("p._b").as("w2"))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cp")), "pmi-pairs")
+    val pairs = arrs
+      .withColumn("_a", slice(col("_l"), lit(1), size(col("_l")) - 1))
+      .withColumn("_b", slice(col("_l"), lit(2), size(col("_l")) - 1))
+      .select(explode(arrays_zip(col("_a"), col("_b"))).as("p"))
+      .select(col("p._a").as("w1"), col("p._b").as("w2"))
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cp")).localCheckpoint()
     val t2 = pairs.agg(sum(col("cp")).as("n2"))
     val ua = uni.select(col("tok").as("w1"), col("c").as("ca"))
     val ub = uni.select(col("tok").as("w2"), col("c").as("cb"))
@@ -123,8 +121,7 @@ object Lexical {
     // the (id, s) frame has FOUR consumers (both key sides, both
     // verify sides) — materialize it once so the input lineage isn't
     // recomputed per consumer (the materializeAndFree precedent)
-    val s = graft.PlanCapture.checkpoint(
-      strings.select(col(idCol).as("_id"), col(sCol).as("_s")), "edjoin-strings")
+    val s = strings.select(col(idCol).as("_id"), col(sCol).as("_s")).localCheckpoint()
     val keys = s.select(col("_id"), col("_s"),
         explode(concat(
           array(struct(col("_s").as("k"), lit(0).as("p"))),
@@ -273,9 +270,6 @@ object Lexical {
           .select(col("freq"), explode(arrays_zip(col("_a"), col("_b"))).as("p"))
           .groupBy(col("p._a").as("pl"), col("p._b").as("pr"))
           .agg(sum(col("freq")).as("cnt"))
-        // per-round work ends in a driver collect and never reaches the
-        // final lineage — surface one representative round to the audit
-        if (step == 1) graft.PlanCapture.record(pairs, "bpe-pair-count")
         val best = pairs.orderBy(col("cnt").desc, col("pl"), col("pr"))
           .limit(1).collect()
         if (best.isEmpty) {

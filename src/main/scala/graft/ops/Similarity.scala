@@ -569,7 +569,7 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 4).as("sim"))
       .orderBy(col("q_id"), col("rnk"))
-    val out = graft.PlanCapture.checkpoint(rr, "ivf-retrieve")
+    val out = rr.localCheckpoint()
     nrm.unpersist()
     assigned.unpersist()
     out
@@ -706,12 +706,9 @@ object Similarity {
     // inside the codes broadcast, once for the codebook return).
     val cb1 = comp.groupBy(col("s"), col("code"))
       .agg(sort_array(collect_list(struct(col("i"), col("c")))).as("ics"))
-    val cb1ck = graft.PlanCapture.checkpoint(
-      cb1.select(col("s"), col("code"),
-        transform(col("ics"), ic => ic.getField("c")).as("cw")),
-      "pq-codebooks")
-    val codes = graft.PlanCapture.checkpoint(
-      assignCodes(sub, cb1ck), "pq-codes")
+    val cb1ck = cb1.select(col("s"), col("code"),
+      transform(col("ics"), ic => ic.getField("c")).as("cw")).localCheckpoint()
+    val codes = assignCodes(sub, cb1ck).localCheckpoint()
     sub.unpersist()
     (cb1ck, codes)
   }
@@ -1006,7 +1003,7 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 4).as("sim"))
       .orderBy(col("q_id"), col("rnk"))
-    val out = graft.PlanCapture.checkpoint(rr, "pq-adc-retrieve")
+    val out = rr.localCheckpoint()
     nrm.unpersist()
     out
   }
@@ -1038,17 +1035,15 @@ object Similarity {
     val n = withNorm(emb, idCol, vecCol)
     val q = n.filter(queryPred)
       .select(col(vecCol).as("qv"), col("norm").as("qn"))
-    val pool = graft.PlanCapture.checkpoint(
-      n.filter(!queryPred)
-        .crossJoin(broadcast(q))
-        .withColumn("rel_fx",
-          round(cosine(col(vecCol), col("qv"), col("norm"), col("qn")) * 1e6)
-            .cast("long"))
-        .select(col(idCol).as("id"), col(vecCol).as("v"),
-          col("norm").as("nm"), col("rel_fx"))
-        .orderBy(col("rel_fx").desc, col("id"))
-        .limit(poolK),
-      "mmr-pool")
+    val pool = n.filter(!queryPred)
+      .crossJoin(broadcast(q))
+      .withColumn("rel_fx",
+        round(cosine(col(vecCol), col("qv"), col("norm"), col("qn")) * 1e6)
+          .cast("long"))
+      .select(col(idCol).as("id"), col(vecCol).as("v"),
+        col("norm").as("nm"), col("rel_fx"))
+      .orderBy(col("rel_fx").desc, col("id"))
+      .limit(poolK).localCheckpoint()
     val sims = pool.as("a").join(pool.as("b"), col("a.id") =!= col("b.id"))
       .select(col("a.id").as("ai"), col("b.id").as("bi"),
         round(cosine(col("a.v"), col("b.v"), col("a.nm"), col("b.nm")) * 1e6)

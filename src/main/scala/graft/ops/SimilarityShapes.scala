@@ -746,8 +746,7 @@ object SimilarityShapes {
     * `serve_ivfpq_topk` bench row. */
   def serveIvfPqGate(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_serve_ivfpq_gate").toString
+    val idx = graft.GraftSession.tempDir("graft_serve_ivfpq_gate")
     Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -768,8 +767,7 @@ object SimilarityShapes {
     * rebuild — at delta cost. */
   def ivfPqAppendServe(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_append_gate").toString
+    val idx = graft.GraftSession.tempDir("graft_ivfpq_append_gate")
     Similarity.writeIvfPqIndex(
       e.filter(col("vec_id") % 4 =!= 1), "vec_id", "embedding", idx)
     Similarity.appendToIvfPqIndex(

@@ -107,7 +107,7 @@ object StreamingShapes {
     * corpus — the correct semantics for a bounded replay. */
   private def landAvailableNow(s: SparkSession, dir: String, tag: String)(
       pipe: (SparkSession, DataFrame) => DataFrame): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    val tmp = graft.GraftSession.tempDir(s"graft_$tag")
     val ss = streamSession(s, dir)
     val src = ss.readStream.schema(docs(ss, dir).schema)
       .parquet(stageSourceDir(tmp, dir))
@@ -183,7 +183,7 @@ object StreamingShapes {
     * stats dir, and `releaseGateFromPartials` assembles the 6-check
     * verdict from the accumulated partials alone. */
   def streamReleaseGate(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q234").toString
+    val tmp = graft.GraftSession.tempDir("graft_q234")
     val ss = streamSession(s, dir)
     val src = ss.readStream.schema(docs(ss, dir).schema)
       .parquet(stageSourceDir(tmp, dir))

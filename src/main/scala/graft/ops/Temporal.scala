@@ -300,11 +300,9 @@ object Temporal {
     // the user-day frame has THREE consumers (dau, the wau fan-out,
     // and the day-list clamp) — materialize it so events is scanned
     // once, not three times
-    val ud = graft.PlanCapture.checkpoint(
-      events
-        .select(col(userCol), expr(s"$tsCol div 86400000000000").as("d"))
-        .distinct(),
-      "rau-userdays")
+    val ud = events
+      .select(col(userCol), expr(s"$tsCol div 86400000000000").as("d"))
+      .distinct().localCheckpoint()
     // ud is already distinct, so DAU is a plain count; the day list
     // and the DAU frame are day-cardinality-sized — broadcast both
     val dau = ud.groupBy(col("d").as("day_num"))
@@ -395,13 +393,11 @@ object Temporal {
   /** Generic core over any (day BIGINT, rev_fx BIGINT) daily frame. */
   def seasonalOf(daily: DataFrame): DataFrame = {
     val w = Window.orderBy(col("day")).rangeBetween(-3, 3)
-    val tr = graft.PlanCapture.checkpoint(
-      daily
-        .withColumn("n_win", count(lit(1)).over(w))
-        .withColumn("trend_fx",
-          when(col("n_win") === 7, expr("sum(rev_fx) OVER (ORDER BY day RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) div 7")))
-        .select(col("day"), col("rev_fx"), col("trend_fx")),
-      "seasonal-trend")
+    val tr = daily
+      .withColumn("n_win", count(lit(1)).over(w))
+      .withColumn("trend_fx",
+        when(col("n_win") === 7, expr("sum(rev_fx) OVER (ORDER BY day RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) div 7")))
+      .select(col("day"), col("rev_fx"), col("trend_fx")).localCheckpoint()
     val dow = tr.filter(col("trend_fx").isNotNull)
       .groupBy((col("day") % 7).as("dow"))
       .agg(expr("sum(rev_fx - trend_fx) div count(1)").as("seasonal_fx"))

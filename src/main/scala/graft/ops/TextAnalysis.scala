@@ -1517,12 +1517,10 @@ object TextAnalysis {
     // times (c12 agg, c1 agg, vocab count, scoring join), which is the
     // term that dominates at 100×.
     val cached = arrDf.persist(graft.GraftSession.textFrameLevel) // text-sized token arrays (r15 GC audit)
-    val c12 = graft.PlanCapture.checkpoint(
-      bgOf(cached).groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c12")), "bigram-c12")
-    val v = graft.PlanCapture.checkpoint(
-      cached.select(explode(col("_a")).as("tok"))
-        .agg(countDistinct(col("tok")).as("v")), "bigram-vocab")
+    val c12 = bgOf(cached).groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("c12")).localCheckpoint()
+    val v = cached.select(explode(col("_a")).as("tok"))
+      .agg(countDistinct(col("tok")).as("v")).localCheckpoint()
     cached.unpersist()
     // c(w1·) by RE-AGGREGATING c12 (sum over w2) — vocab-sized input,
     // not another corpus scan; equals the direct bigram count by w1.
@@ -1581,9 +1579,8 @@ object TextAnalysis {
     // itself) — checkpoint it so the corpus is scanned ONCE, not four
     // times (the q84/bigram precedent; everything downstream is
     // vocab-bounded).
-    val st = graft.PlanCapture.checkpoint(
-      toks.groupBy(col("source"), col("t"))
-        .agg(count(lit(1)).as("c_st")), "domainkl-st")
+    val st = toks.groupBy(col("source"), col("t"))
+      .agg(count(lit(1)).as("c_st")).localCheckpoint()
     val ct = st.groupBy(col("t")).agg(sum(col("c_st")).as("c_t"))
     val ns = st.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
     val n = st.agg(sum(col("c_st")).as("n"))
@@ -1609,9 +1606,8 @@ object TextAnalysis {
     val toks = df.select(col(sourceCol).as("source"),
         explode(split(trim(col(textCol)), WS)).as("t"))
       .filter(col("t") =!= "")
-    val st = graft.PlanCapture.checkpoint(
-      toks.groupBy(col("source"), col("t"))
-        .agg(count(lit(1)).as("c_st")), "entropy-st")
+    val st = toks.groupBy(col("source"), col("t"))
+      .agg(count(lit(1)).as("c_st")).localCheckpoint()
     val ns = st.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
     st.join(broadcast(ns), Seq("source"))
       .withColumn("hfx", round(
@@ -1812,14 +1808,12 @@ object TextAnalysis {
     // the distinct (source, shingle) frame has THREE consumers (sizes
     // + both self-join sides) — materialize it so the corpus is
     // scanned once, not three times (the q84/q112 precedent)
-    val sh = graft.PlanCapture.checkpoint(
-      df.select(col(sourceCol).as("src"),
-          split(trim(col(textCol)), WS).as("ts"))
-        .filter(size(col("ts")) >= 2)
-        .select(col("src"),
-          explode(array_distinct(graft.functions.TextFunctions.ngramArray(col("ts"), 2))).as("sh"))
-        .distinct(),
-      "srcsim-shingles")
+    val sh = df.select(col(sourceCol).as("src"),
+        split(trim(col(textCol)), WS).as("ts"))
+      .filter(size(col("ts")) >= 2)
+      .select(col("src"),
+        explode(array_distinct(graft.functions.TextFunctions.ngramArray(col("ts"), 2))).as("sh"))
+      .distinct().localCheckpoint()
     val sz = sh.groupBy(col("src")).agg(count(lit(1)).as("n"))
     val shared = sh.select(col("src").as("src_a"), col("sh"))
       .join(sh.select(col("src").as("src_b"), col("sh")), Seq("sh"))
@@ -1914,8 +1908,7 @@ object TextAnalysis {
     * (train_in_query); the repeating cost is the `serve_bm25_search`
     * bench row. */
   def serveBm25Gate(s: SparkSession, dir: String): DataFrame = {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_serve_bm25_gate").toString
+    val idx = graft.GraftSession.tempDir("graft_serve_bm25_gate")
     writeInvertedIndex(docs(s, dir), "doc_id", "text", idx)
     serveBm25(s, idx, Seq("spark", "join", "query"), k = 20)
       .withColumnRenamed("id", "doc_id")
@@ -1930,8 +1923,7 @@ object TextAnalysis {
     * the identical retrieval state a full rebuild would. */
   def invertedAppendServeGate(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_inv_append_gate").toString
+    val idx = graft.GraftSession.tempDir("graft_inv_append_gate")
     writeInvertedIndex(d.filter(pmod(col("doc_id"), lit(4)) =!= 1),
       "doc_id", "text", idx)
     appendToInvertedIndex(s, idx,

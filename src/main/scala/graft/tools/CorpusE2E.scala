@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.ops.{CorpusPipeline, TextAnalysis}
@@ -8,7 +7,8 @@ import graft.ops.{CorpusPipeline, TextAnalysis}
 /** End-to-end training-data pipeline driver: documents parquet in →
   * full training recipe (quality gate → repetition filter →
   * decontamination → exact dedup → near-dup collapse → split) →
-  * range-sharded parquet out with manifest — the operational twin of
+  * range-sharded parquet out with manifest (under the JVM's scratch
+  * root, deleted at exit) — the operational twin of
   * the oracle-gated q69, measured stage by stage. The benchmark set
   * for decontamination is carved from the corpus itself (every 20th
   * doc), mirroring the q69 gate construction.
@@ -55,7 +55,7 @@ object CorpusE2E {
     }
     val nCurated = curated.count()
 
-    val outDir = Files.createTempDirectory("corpus-e2e-shards").toString
+    val outDir = GraftSession.tempDir("corpus-e2e-shards")
     val (manifest, writeSec) = timed {
       CorpusPipeline.writeShards(recipe, "doc_id", outDir,
         numShards, maxRecs, partitionCols = Seq("split")).collect()
@@ -75,8 +75,7 @@ object CorpusE2E {
       s""""docs_per_sec":${"%.1f".format(nDocs / recipeSec)},""" +
       s""""curated":$nCurated,"curated_sec":${"%.2f".format(curatedSec)},""" +
       s""""shards":$nFiles,"write_sec":${"%.2f".format(writeSec)},""" +
-      s""""mixture_sources":${plan.length},"mixture_sec":${"%.2f".format(planSec)},""" +
-      s""""out":"$outDir"}""")
+      s""""mixture_sources":${plan.length},"mixture_sec":${"%.2f".format(planSec)}}""")
     spark.stop()
   }
 }

@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import scala.jdk.CollectionConverters._
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftSession
@@ -26,8 +23,9 @@ import graft.sources.Connectors
   * Seeded generation → deterministic.
   *
   * Every scratch dir (feed tables, stream checkpoints, warehouse copy)
-  * lives under one `e2e-*` temp root, and all of it but the latency
-  * CSV — whose path the result line prints — is deleted on exit.
+  * lives under the JVM's scratch root and is deleted at exit; the
+  * latency CSV, whose path the result line prints, goes to
+  * `target/e2e-latency` and is overwritten by the next run.
   *
   * Usage: runMain graft.tools.E2EBench [U F P]
   */
@@ -38,17 +36,9 @@ object E2EBench {
     val p = args.lift(2).map(_.toInt).getOrElse(5000)
     val spark = GraftSession.local(appName = "e2e-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    val root = Files.createTempDirectory("e2e-")
-    def scratch(name: String): String = Files.createDirectory(root.resolve(name)).toString
-    val csvDir = root.resolve("lat")
-    try run(spark, u, f, p, scratch, csvDir.toString)
-    finally {
-      spark.stop()
-      val children = Files.list(root)
-      try children.iterator().asScala.filter(_ != csvDir)
-        .foreach(d => FileUtils.deleteDirectory(d.toFile))
-      finally children.close()
-    }
+    val csvDir = new java.io.File("target/e2e-latency").getAbsolutePath
+    try run(spark, u, f, p, GraftSession.tempDir, csvDir)
+    finally spark.stop()
   }
 
   private def run(spark: SparkSession, u: Int, f: Int, p: Int,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query dev timer: splits each rep of a query into
@@ -13,8 +11,8 @@ import graft.{GraftSession, SparkEntry}
   *            command's planning on top of the analyzed frame, then
   *            scheduling + tasks + AQE replans); `count()` would let
   *            Catalyst prune the columns the gate checks,
-  * and stamps jobs/stages/tasks per rep, so a query's cost is
-  * attributable to planning vs scheduling vs task work.
+  * and stamps jobs/stages/tasks per rep (from [[ExecutionTrace]]), so a
+  * query's cost is attributable to planning vs scheduling vs task work.
   *
   * Usage: runMain graft.tools.FloorProbe <sfDir> <reps> <query> [query...]
   */
@@ -25,32 +23,22 @@ object FloorProbe {
     val names = args.drop(2).toSeq
     val spark = GraftSession.local(appName = "floorprobe")
     spark.sparkContext.setLogLevel("WARN")
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages += 1; tasks += s.stageInfo.numTasks
-      }
-    })
     println("query\trep\tbuild_s\tplan_s\texec_s\tjobs\tstages\ttasks")
     names.foreach { q =>
       (1 to reps).foreach { rep =>
-        jobs = 0; stages = 0; tasks = 0
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(q)(spark, dir)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis→physical plan
-        val t2 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t3 = System.nanoTime()
+        val ((t0, t1, t2, t3), w) = ExecutionTrace.window(spark) {
+          val t0 = System.nanoTime()
+          val df = SparkEntry.queries(q)(spark, dir)
+          val t1 = System.nanoTime()
+          df.queryExecution.executedPlan // force analysis→physical plan
+          val t2 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          (t0, t1, t2, System.nanoTime())
+        }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        // listener events are async; give the bus a beat before reading
-        Thread.sleep(200)
         println(f"$q\t$rep\t${(t1 - t0) / 1e9}%.3f\t${(t2 - t1) / 1e9}%.3f" +
-          f"\t${(t3 - t2) / 1e9}%.3f\t$jobs\t$stages\t$tasks")
+          f"\t${(t3 - t2) / 1e9}%.3f\t${w.jobs}\t${w.stages}\t${w.tasks}")
       }
     }
     spark.stop()

@@ -46,7 +46,7 @@ object IndexLifecycleProbe {
       println(s"""{"metric":"index_lifecycle","index":"$index",""" +
         s""""appends":$appends,"files":$files,"serve_sec":$sec}""")
 
-    val base = java.nio.file.Files.createTempDirectory("lifecycle_").toString
+    val base = GraftSession.tempDir("lifecycle_")
 
     // ---- BM25 inverted index ----
     val inv = s"$base/inv"

@@ -1,61 +1,68 @@
 package graft.tools
 
-import graft.{GraftSession, PlanCapture, SparkEntry}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.{GraftSession, SparkEntry}
 
 /** Physical-plan sweep over every gate query: shuffle counts, join
   * strategies, scan pruning. The per-round "would this survive a
   * 100× scale-up" checklist.
   *
-  * Queries that eagerly `localCheckpoint` intermediates (connected
-  * components, the PQ family, q84) truncate lineage, so their FINAL
-  * plan is a bare `Scan ExistingRDD`. Each query is therefore built
-  * under [[PlanCapture.audited]], which records every pre-checkpoint
-  * sub-plan; counts here are over final plan + all sub-plans, so the
-  * expensive pre-checkpoint stages are audited too (round-6 verdict
-  * residual #1). `ck` = number of checkpointed sub-plans merged in.
-  * A query whose merged plan has neither a parquet scan nor a Range
-  * source (q39 synthesizes its workload from spark.range by design)
-  * is flagged `NO-SCAN!` and counted in the failing exit summary.
+  * A query's plan is its final frame's plan plus the plan of every SQL
+  * execution its build ran, as [[ExecutionTrace]] saw them on any
+  * session: each `localCheckpoint` (a checkpointed frame's own plan is
+  * a bare `Scan ExistingRDD`), and each `collect`, `first`, `isEmpty`,
+  * write or stream batch a query runs to build itself (index builds,
+  * probe lists, per-round argmax). Counts are taken over [[planned]]:
+  * a plan that has run counts as it did before it ran, and a persisted
+  * subtree counts at none of its references (its cache scan stands for
+  * it; q99's recipe would otherwise read as hundreds of scans), so
+  * `--check` does not see a join planned inside a persisted frame. A
+  * query whose plan has no parquet scan, Range (q39 synthesizes its
+  * workload) or cache scan is flagged `NO-SCAN!` and fails the run.
   *
-  * `InMemoryRelation` nodes print their entire CACHED child plan
-  * inline, so counting the raw string would re-count every persisted
-  * subtree's scans/joins once per reference — q99's heavily-persisted
-  * recipe read as 253 scans when its executed shape has a handful
-  * (the cache computes once). `stripCached` drops each cached
-  * subtree's text (every line indented deeper than its
-  * InMemoryRelation header) before counting, so counts reflect what
-  * actually executes.
+  * Columns: exchanges (printed, not gated, see [[Counts]]), the gated
+  * counts, then the build-time work: `bexec` SQL executions and
+  * `bjobs` Spark jobs run while the query was built (jobs outside an
+  * execution, such as schema inference, count in `bjobs` only), and
+  * `actions` per action (`command` is a write, `unnamed` a stream
+  * micro-batch).
   *
-  * Regression tripwire (round-15, VERDICT r14 item 6): the committed
-  * baseline `tools/plan_baseline.tsv` snapshots each query's join-
-  * strategy counters; `--check` fails (exit 2) on any query whose plan
-  * grew a NEW SortMergeJoin / BroadcastNestedLoopJoin / cartesian
-  * product or LOST filter pushdown relative to that baseline — the
-  * drift classes a silent broadcast-threshold or pushdown regression
-  * produces. q221's one SMJ (the fact-fact lineitem self-correlation
-  * that must not broadcast) is a baseline entry, not an exception in
-  * code. New queries absent from the baseline are held to zero
-  * SMJ/BNLJ/cartesian until snapshotted. Injection knob for the
-  * tripwire's own test: SPARK_GRAFT_INJECT_BROADCAST_OFF=1 disables
-  * broadcast joins session-wide, which must trip `--check`.
+  * Regression tripwire: the committed baseline `tools/plan_baseline.tsv`
+  * snapshots each query's join-strategy counters; `--check` fails
+  * (exit 2) on any query whose plan grew a NEW SortMergeJoin /
+  * BroadcastNestedLoopJoin / cartesian product or LOST filter pushdown
+  * relative to that baseline — the drift classes a silent
+  * broadcast-threshold or pushdown regression produces (see
+  * [[regressions]]). q221's one SMJ (the fact-fact lineitem
+  * self-correlation that must not broadcast) is a baseline entry, not
+  * an exception in code. Output: one tab-separated row per query, then
+  * `#` summary lines (docs/PLAN_AUDIT_sf0.01.tsv).
   *
   * Usage: runMain graft.tools.PlanAudit [--check|--snapshot] [sfDir]
   */
 object PlanAudit {
-  private[tools] def stripCached(plan: String): String = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var skipDepth = -1
-    plan.split("\n").foreach { l =>
-      val depth = l.indexWhere(c => !" :+-".contains(c)) match {
-        case -1 => 0; case i => i
-      }
-      if (skipDepth >= 0 && depth > skipDepth) ()
-      else {
-        skipDepth = if (l.contains("InMemoryRelation")) depth else -1
-        out += l
-      }
+  /** A physical plan as planned, one operator per line, for counting.
+    * An AQE node stands for its initial plan, so a plan that has run
+    * reads as it did before it ran (its text would print the final
+    * plan above the initial one, and nested AQE nodes print those
+    * headers at the wrong indent). Subqueries are walked. A cached
+    * relation is its `InMemoryTableScan` line alone: the plan that
+    * fills the cache is not walked at any reference. */
+  def planned(plan: SparkPlan): String = {
+    val out = new StringBuilder
+    val maxFields = SQLConf.get.maxToStringFields
+    def walk(p: SparkPlan, depth: Int): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan, depth)
+      case _ =>
+        out.append("  " * depth).append(p.simpleString(maxFields)).append('\n')
+        (p.subqueries ++ p.children).foreach(walk(_, depth + 1))
     }
-    out.mkString("\n")
+    walk(plan, 0)
+    out.toString
   }
 
   /** The gated per-query plan counts. The exchange count is printed
@@ -64,6 +71,50 @@ object PlanAudit {
     * would drift with the host. */
   final case class Counts(bhj: Int, smj: Int, bnlj: Int,
       cart: Int, scans: Int, pushed: Int)
+
+  private def occurrences(plan: String, re: String): Int = re.r.findAllIn(plan).length
+
+  private[tools] def exchanges(plan: String): Int =
+    occurrences(plan, "Exchange ") - occurrences(plan, "BroadcastExchange ")
+
+  def counts(plan: String): Counts = Counts(
+    bhj = occurrences(plan, "BroadcastHashJoin"),
+    smj = occurrences(plan, "SortMergeJoin"),
+    bnlj = occurrences(plan, "BroadcastNestedLoopJoin"),
+    cart = occurrences(plan, "CartesianProduct"),
+    scans = occurrences(plan, "FileScan parquet|Scan parquet"),
+    pushed = occurrences(plan, "PushedFilters: \\[[^\\]]"))
+
+  /** One audited query: its frame, the window its build ran in, and
+    * the plan text the counts are taken from (final plan, then each
+    * build-time execution's plan, each as [[planned]]). */
+  final case class Audit(df: DataFrame, build: ExecutionTrace.Window, plan: String)
+
+  def audit(spark: SparkSession)(query: => DataFrame): Audit = {
+    val (df, w) = ExecutionTrace.window(spark)(query)
+    val subPlans = w.executions.map { e =>
+      val plan =
+        try planned(e.qe.executedPlan)
+        catch { case t: Throwable => s"<plan unavailable: ${t.getMessage}>" }
+      s"=== build-time ${e.action} ===\n$plan"
+    }
+    Audit(df, w, (planned(df.queryExecution.executedPlan) +: subPlans).mkString("\n"))
+  }
+
+  /** The `--check` verdict: each query whose plan grew a SortMergeJoin,
+    * BroadcastNestedLoopJoin or cartesian product, or lost a pushed
+    * filter, against its baseline row. A query with no row is held to
+    * zero SMJ/BNLJ/cartesian until it is snapshotted. */
+  def regressions(now: Map[String, Counts], base: Map[String, Counts]): Seq[String] =
+    now.toSeq.sortBy(_._1).flatMap { case (n, k) =>
+      val b = base.getOrElse(n, Counts(0, 0, 0, 0, 0, k.pushed))
+      val q = if (base.contains(n)) n else s"$n (new)"
+      Seq((k.smj > b.smj) -> s"$q: smj ${b.smj}->${k.smj}",
+        (k.bnlj > b.bnlj) -> s"$q: bnlj ${b.bnlj}->${k.bnlj}",
+        (k.cart > b.cart) -> s"$q: cartesian ${b.cart}->${k.cart}",
+        (k.pushed < b.pushed) -> s"$q: pushdown lost ${b.pushed}->${k.pushed}")
+        .collect { case (true, r) => r }
+    }
 
   val baselinePath = "tools/plan_baseline.tsv"
 
@@ -89,43 +140,35 @@ object PlanAudit {
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(8, "plan-audit")
-    if (sys.env.get("SPARK_GRAFT_INJECT_BROADCAST_OFF").contains("1"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     var noScan = List.empty[String]
     var failed = List.empty[String]
-    val counts = scala.collection.mutable.Map.empty[String, Counts]
-    println(f"${"query"}%-24s ${"exch"}%4s ${"bhj"}%4s ${"smj"}%4s ${"bnlj"}%5s ${"scans"}%5s ${"pushed"}%7s ${"ck"}%3s  flags")
+    val byQuery = scala.collection.mutable.Map.empty[String, Counts]
+    println(Seq("query", "exch", "bhj", "smj", "bnlj", "cart", "scans", "pushed",
+      "bexec", "bjobs", "actions", "flags").mkString("\t"))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val (df, subPlans) = PlanCapture.audited(name)(fn(spark, dir))
-        val plan = stripCached(
-          (df.queryExecution.executedPlan.toString +: subPlans).mkString("\n"))
-        def c(s: String) = s.r.findAllIn(plan).length
-        val exch = c("Exchange ") - c("BroadcastExchange ")
-        val bhj = c("BroadcastHashJoin")
-        val smj = c("SortMergeJoin")
-        val bnlj = c("BroadcastNestedLoopJoin")
-        val cart = c("CartesianProduct")
-        val scans = c("FileScan parquet|Scan parquet")
-        val pushed = c("PushedFilters: \\[[^\\]]")
-        counts(name) = Counts(bhj, smj, bnlj, cart, scans, pushed)
+        val a = audit(spark)(fn(spark, dir))
+        val exch = exchanges(a.plan)
+        val k = counts(a.plan)
+        byQuery(name) = k
         val flags = new StringBuilder
-        if (smj > 0) flags.append(" SMJ!")
-        if (cart > 0) flags.append(" CARTESIAN!")
+        if (k.smj > 0) flags.append(" SMJ!")
+        if (k.cart > 0) flags.append(" CARTESIAN!")
         if (exch > 6) flags.append(" MANY-SHUFFLES!")
-        // A query is "sourced" if it reads parquet, a Range (q39's
-        // synthesized workload), or a cached relation (whose one-time
-        // compute scan lives in the stripped cached plan, e.g. q31's
-        // persisted shingle table).
-        if (scans == 0 && c("Range \\(") == 0 && c("InMemoryTableScan") == 0) {
+        if (k.scans == 0 && occurrences(a.plan, "Range \\(") == 0 &&
+            occurrences(a.plan, "InMemoryTableScan") == 0) {
           flags.append(" NO-SCAN!"); noScan ::= name
         }
-        println(f"$name%-24s $exch%4d $bhj%4d $smj%4d $bnlj%5d $scans%5d $pushed%7d ${subPlans.size}%3d  ${flags.toString}")
+        val actions = a.build.executions.groupBy(_.action).toSeq.sortBy(_._1)
+          .map { case (act, es) => s"$act:${es.size}" }.mkString(",")
+        println(Seq(name, exch, k.bhj, k.smj, k.bnlj, k.cart, k.scans, k.pushed,
+          a.build.executions.size, a.build.jobs, if (actions.isEmpty) "-" else actions,
+          flags.toString.trim).mkString("\t"))
       } catch {
         case e: Throwable =>
           failed ::= name
-          println(f"$name%-24s FAILED: ${e.getMessage.take(60)}")
+          println(s"$name\tFAILED: ${e.getMessage.take(60)}")
       }
     }
     println(s"# audited=${SparkEntry.queries.size} zero-scan=${noScan.size}" +
@@ -135,39 +178,27 @@ object PlanAudit {
 
     if (mode == "--snapshot") {
       val lines = "# query\tbhj\tsmj\tbnlj\tcart\tscans\tpushed" +:
-        counts.toSeq.sortBy(_._1).map { case (n, k) =>
+        byQuery.toSeq.sortBy(_._1).map { case (n, k) =>
           s"$n\t${k.bhj}\t${k.smj}\t${k.bnlj}\t${k.cart}\t${k.scans}\t${k.pushed}"
         }
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(baselinePath), lines.mkString("", "\n", "\n"))
-      println(s"# baseline snapshot → $baselinePath (${counts.size} queries)")
+      println(s"# baseline snapshot -> $baselinePath (${byQuery.size} queries)")
     }
 
-    var regressions = List.empty[String]
+    var found = Seq.empty[String]
     if (mode == "--check") {
       val base = readBaseline()
       require(base.nonEmpty, s"--check needs a committed $baselinePath (run --snapshot first)")
-      counts.toSeq.sortBy(_._1).foreach { case (n, k) =>
-        base.get(n) match {
-          case Some(b) =>
-            if (k.smj > b.smj) regressions ::= s"$n: smj ${b.smj}→${k.smj}"
-            if (k.bnlj > b.bnlj) regressions ::= s"$n: bnlj ${b.bnlj}→${k.bnlj}"
-            if (k.cart > b.cart) regressions ::= s"$n: cartesian ${b.cart}→${k.cart}"
-            if (k.pushed < b.pushed) regressions ::= s"$n: pushdown lost ${b.pushed}→${k.pushed}"
-          case None => // new query, not yet snapshotted: zero-tolerance
-            if (k.smj > 0) regressions ::= s"$n (new): smj ${k.smj} (snapshot to allowlist)"
-            if (k.bnlj > 0) regressions ::= s"$n (new): bnlj ${k.bnlj}"
-            if (k.cart > 0) regressions ::= s"$n (new): cartesian ${k.cart}"
-        }
-      }
-      if (regressions.nonEmpty) {
-        println(s"# CHECK FAILED — ${regressions.size} plan regression(s) vs $baselinePath:")
-        regressions.sorted.foreach(r => println(s"#   $r"))
-      } else println(s"# check ok — no join-strategy/pushdown regressions vs ${base.size}-query baseline")
+      found = regressions(byQuery.toMap, base)
+      if (found.nonEmpty) {
+        println(s"# CHECK FAILED - ${found.size} plan regression(s) vs $baselinePath:")
+        found.sorted.foreach(r => println(s"#   $r"))
+      } else println(s"# check ok - no join-strategy/pushdown regressions vs ${base.size}-query baseline")
     }
 
     spark.stop()
     if (noScan.nonEmpty || failed.nonEmpty) sys.exit(1)
-    if (regressions.nonEmpty) sys.exit(2)
+    if (found.nonEmpty) sys.exit(2)
   }
 }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every `graft.tools` main is a documented command: a tool that no
   * CLAUDE.md command runs is dead code that still has to compile,
   * carries its own session conf, and drifts from the harnesses that
-  * replaced it. And every spec temp dir comes from `SparkSpec.tempDir`,
-  * which deletes it after the suite. */
+  * replaced it. And every temp dir is deleted: a spec's comes from
+  * `SparkSpec.tempDir` (deleted after the suite), the library's and the
+  * tools' from `GraftSession.tempDir` (deleted when the JVM exits). */
 class ToolCommandsSpec extends AnyFunSuite {
   private val toolsDir = Paths.get("src/main/scala/graft/tools")
 
@@ -49,5 +50,18 @@ class ToolCommandsSpec extends AnyFunSuite {
     }
     assert(specs.nonEmpty && hits.isEmpty,
       s"temp dirs that no suite deletes: ${hits.mkString(", ")}")
+  }
+
+  test("src/main creates temp dirs only through GraftSession.tempDir") {
+    val leak = """createTempDirectory""".r
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "GraftSession.scala")
+    val hits = sources.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if leak.findFirstIn(line).nonEmpty => s"$f:${i + 1}"
+      }
+    }
+    assert(sources.nonEmpty && hits.isEmpty,
+      s"temp dirs that outlive their JVM: ${hits.mkString(", ")}")
   }
 }
