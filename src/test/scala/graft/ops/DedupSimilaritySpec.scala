@@ -508,6 +508,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(served == self)
   }
 
+  /** The parquet scans of index table `table` in the executions a window saw. */
+  private def indexScans(w: graft.tools.ExecutionTrace.Window, table: String) =
+    w.executions.flatMap(_.qe.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == table) => f
+    })
+
   test("servePqIndex off the persisted layout pins to ivfPqTopK; probed clusters prune files") {
     val e = graft.Tables.load(spark, dir, "embeddings")
     val idx = tempDir("ivfpq_idx_")
@@ -515,57 +522,58 @@ class DedupSimilaritySpec extends SparkSpec {
       seedStepIvf = 37, nAssign = 2, m = 8, seedStepPq = 7)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val served = Similarity.servePqIndex(spark, idx, queries, k = 5,
-      nProbe = 8, shortlist = 100)
+    val (served, w) = graft.tools.ExecutionTrace.window(spark)(
+      Similarity.servePqIndex(spark, idx, queries, k = 5, nProbe = 8, shortlist = 100))
     val self = Similarity.ivfPqTopK(e, "vec_id", "embedding",
       col("vec_id") < 5, k = 5, seedStepIvf = 37, nProbe = 8, nAssign = 2,
       m = 8, seedStepPq = 7, shortlist = 100)
     assert(served.collect().map(_.toSeq).toSet == self.collect().map(_.toSeq).toSet)
-    // the probed-cluster isin reaches the scan as a NON-EMPTY partition
-    // filter ('PartitionFilters: [' alone prints even when empty)
-    val plan = served.queryExecution.executedPlan.toString
-    val nonEmptyPf = "PartitionFilters: \\[[^\\]]".r.findAllIn(plan).length
-    assert(nonEmptyPf >= 2, s"codes AND vectors reads must be partition-pruned, got $nonEmptyPf")
+    // the served frame is a local relation: the call's own codes and
+    // vectors scans carry the probed-cluster isin as a partition filter
+    for (table <- Seq("codes", "vectors")) {
+      val scans = indexScans(w, table)
+      assert(scans.size == 1, s"$table: one scan per call, got ${scans.size}")
+      assert(scans.forall(_.partitionFilters.nonEmpty), s"$table scan is not partition-pruned")
+    }
   }
 
-  test("servePqIndex job budget: one build plus collect() runs at most 13 Spark jobs") {
-    // Serving is fixed work per query batch: an eager side job during
-    // frame construction (schema inference, first(), a second probe
-    // pass) shows up here as a count above the budget.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("servePqIndex job budget: 5 Spark jobs for the call that loads the model, 3 on a resident model") {
+    // Serving is fixed work per query batch: an eager side job (schema
+    // inference, first(), a second probe pass, a model re-read) shows
+    // up here as a count above the budget.
     val e = graft.Tables.load(spark, dir01, "embeddings")
     val idx = tempDir("ivfpq_jobs_")
     Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    def serve() = Similarity.servePqIndex(spark, idx, queries, k = 5,
-      nProbe = 8, shortlist = 100).collect()
-    val warm = serve()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "pq-budget" => jobs.incrementAndGet()
-          case "pq-budget-drained" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val rows = try {
-      sc.setJobGroup("pq-budget", "servePqIndex job budget")
-      val r = serve()
-      // events arrive in order on one listener queue: once this marker
-      // job's start is seen, every serve job's start has been counted
-      sc.setJobGroup("pq-budget-drained", "listener drain marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      r
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    assert(rows.nonEmpty && rows.toSeq == warm.toSeq)
-    info(s"servePqIndex jobs: ${jobs.get}")
-    assert(jobs.get <= 13, s"servePqIndex ran ${jobs.get} jobs, budget 13")
+    def serve() = graft.tools.ExecutionTrace.window(spark)(
+      Similarity.servePqIndex(spark, idx, queries, k = 5, nProbe = 8, shortlist = 100).collect())
+    val (cold, loading) = serve()
+    val (warm, resident) = serve()
+    assert(warm.nonEmpty && warm.toSeq == cold.toSeq)
+    info(s"servePqIndex jobs: ${loading.jobs} loading the model, ${resident.jobs} resident")
+    assert(loading.jobs <= 5, s"the loading call ran ${loading.jobs} jobs, budget 5")
+    assert(resident.jobs <= 3, s"a resident-model call ran ${resident.jobs} jobs, budget 3")
+  }
+
+  test("servePqIndex reloads its resident model when the same dir is rebuilt with another model") {
+    val e = graft.Tables.load(spark, dir, "embeddings")
+    val idx = tempDir("ivfpq_rebuild_")
+    val queries = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    def serve() = Similarity.servePqIndex(spark, idx, queries, k = 5, nProbe = 8,
+      shortlist = 100).collect().map(_.toSeq).toSet
+    def self(seedStepIvf: Int) = Similarity.ivfPqTopK(e, "vec_id", "embedding",
+      col("vec_id") < 5, k = 5, seedStepIvf = seedStepIvf, nProbe = 8, nAssign = 2,
+      m = 8, seedStepPq = 7, shortlist = 100).collect().map(_.toSeq).toSet
+    Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx, seedStepIvf = 37)
+    assert(serve() == self(37))
+    // overwrite in place with other centroids: a model keyed on the dir
+    // alone would probe the old clusters of the new codes
+    Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx, seedStepIvf = 11)
+    val rebuilt = self(11)
+    assert(rebuilt != self(37))
+    assert(serve() == rebuilt)
   }
 
   test("IVF-PQ index schema: a double-embedding build serves like the float build; a mistyped table fails loudly") {
@@ -583,8 +591,10 @@ class DedupSimilaritySpec extends SparkSpec {
     val fIdx = build(e, "ivfpq_float_")
     val fRows = serve(fIdx, e)
     assert(fRows.nonEmpty && serve(build(ed, "ivfpq_double_"), ed) == fRows)
-    // one column per table rewritten with a type the declared schema
-    // does not allow: the serve must throw, never read the column as null
+    // one column per table rewritten, after a serve has made the
+    // model resident, with a type the declared schema does not allow:
+    // the serve must throw, never read the column as null or serve the
+    // model it held
     for ((table, column, badType) <- Seq(
         ("centroids", "cn", "string"),
         ("codebooks", "cw", "array<string>"),
@@ -592,6 +602,7 @@ class DedupSimilaritySpec extends SparkSpec {
         ("vectors", "ve", "array<string>"))) {
       val bad = tempDir(s"ivfpq_bad_$table")
       org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(fIdx), new java.io.File(bad))
+      assert(serve(bad, e) == fRows)
       val t = spark.read.parquet(s"$fIdx/$table")
         .withColumn(column, col(column).cast(badType))
       val w = t.write.mode("overwrite")
@@ -696,8 +707,16 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val base = emb.filter(col("vec_id") % 4 =!= 1)
     val delta = emb.filter(col("vec_id") % 4 === 1)
+    val qs = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    def serve(d: String) = Similarity.servePqIndex(spark, d, qs, k = 5, nProbe = 8,
+      shortlist = 100).collect().map(_.toSeq).toSeq
     val dirA = tempDir("ivfpq_append_a")
     Similarity.writeIvfPqIndex(base, "vec_id", "embedding", dirA)
+    // served before the append, dirA's model is resident when it is
+    // served again: the append leaves the model tables as they were, and
+    // the serve after it must still read the codes and vectors it added
+    val before = serve(dirA)
     Similarity.appendToIvfPqIndex(spark, dirA, delta, "vec_id", "embedding")
     // reference: the SAME model read back from the base index, tables
     // encoding the full corpus in one pass
@@ -719,13 +738,9 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(idsA.count() == emb.count())
     assert(spark.read.parquet(s"$dirA/codes").count() ==
       spark.read.parquet(s"$dirB/codes").count())
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val a = Similarity.servePqIndex(spark, dirA, qs, k = 5, nProbe = 8, shortlist = 100)
-      .collect().map(_.toSeq).toSeq
-    val b = Similarity.servePqIndex(spark, dirB, qs, k = 5, nProbe = 8, shortlist = 100)
-      .collect().map(_.toSeq).toSeq
-    assert(a.nonEmpty && a == b)
+    val a = serve(dirA)
+    val b = serve(dirB)
+    assert(a.nonEmpty && a == b && a != before)
   }
 
   test("appendToIvfPqIndex: replayed (double) append serves identically — at-least-once tolerant") {
@@ -759,12 +774,14 @@ class DedupSimilaritySpec extends SparkSpec {
     val src = tempDir("ivfpq_cmp_src")
     Similarity.writeIvfPqIndex(base, "vec_id", "embedding", src)
     Similarity.appendToIvfPqIndex(spark, src, delta, "vec_id", "embedding")
-    val dst = tempDir("ivfpq_cmp_dst")
-    Similarity.compactIvfPqIndex(spark, src, dst)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    // src is served (its model resident) before the compaction, and the
+    // serve of the new dir reads that dir's own model files
     val a = Similarity.servePqIndex(spark, src, qs, k = 5, nProbe = 8, shortlist = 100)
       .collect().map(_.toSeq).toSeq
+    val dst = tempDir("ivfpq_cmp_dst")
+    Similarity.compactIvfPqIndex(spark, src, dst)
     val b = Similarity.servePqIndex(spark, dst, qs, k = 5, nProbe = 8, shortlist = 100)
       .collect().map(_.toSeq).toSeq
     assert(a.nonEmpty && a == b)
