@@ -52,8 +52,11 @@ object GraftSession {
       // dominates any GC-scan cost of the pinned classes).
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .withExtensions(new GraftExtensions) // dot_product/hamming as SQL functions
+    // after getOrCreate: the first SparkContext re-initializes log4j
+    // and drops a filter installed before it
+    val spark = b.getOrCreate()
     quietBoundedWindowWarnings()
-    b.getOrCreate()
+    spark
   }
 
   /** One root per JVM for scratch dirs, deleted at exit. Hadoop's hook

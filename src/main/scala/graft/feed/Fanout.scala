@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
   * mega-authors beyond AQE's reach, `saltedFanout` spreads one hot key
   * over `salt` sub-partitions.
   *
-  * Scale (the stream): the roles flip. `FeedStream` keeps the edges
-  * resident as `followerIndex` and broadcasts the micro-batch, whose
-  * size the source's per-trigger limit bounds (Kafka
-  * `maxOffsetsPerTrigger`), the reference worker's lookup of
-  * `followers_by_followee` per post.
+  * Scale (the stream): no join. `FeedStream` collects the edges once
+  * per query into a broadcast lookup, followee → distinct followers,
+  * and explodes each post of a micro-batch over its author's entry: the
+  * reference worker's lookup of `followers_by_followee` per post. A
+  * batch is one task whatever the edge count. Limit: the follower
+  * lists must fit a broadcast.
   */
 object Fanout {
 
@@ -38,14 +39,6 @@ object Fanout {
       posts.select(posts("author_id").as("user_id"), posts("post_id"),
         posts("author_id"), posts("body"), posts("created_at")))
   }
-
-  /** The follower index of `FeedStream`: the distinct
-    * (user_id, followee_id) edges of `follows`, hash-partitioned by
-    * follower. A join that streams this side keeps that partitioning,
-    * so a later dedup on a key that contains `user_id` (the feed key)
-    * needs no exchange. */
-  def followerIndex(follows: DataFrame): DataFrame =
-    follows.select("user_id", "followee_id").repartition(col("user_id")).dropDuplicates()
 
   /** Skew-resistant variant: replicate each post row `salt` ways and
     * scatter edges by a deterministic hash so one celebrity followee's

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 /** The streaming feed-materialization pipeline (SURVEY.md §3.2):
   *
   *   kafka-envelope stream → from_json → valid/dead-letter split →
-  *   broadcast fanout join vs the resident follower index →
+  *   post dedup + fan-out over the resident follower lookup →
   *   idempotent append into the feed table
   *
   * Reference semantics carried over (§2.4):
@@ -53,7 +53,7 @@ object FeedStream {
     *     reference's PK-upsert semantics verbatim (masks even a
     *     producer publishing the same post twice at different
     *     offsets). Probe cost grows with the table.
-    *   - Fast: in-batch key dedup + per-batch commit markers —
+    *   - Fast: the batch's own post dedup + per-batch commit markers —
     *     exactly-once under checkpointed replay with O(batch) cost;
     *     the 100 TB default. Producer-level content duplicates are
     *     handled upstream (StreamOps.dedupWithinWatermark).
@@ -63,23 +63,28 @@ object FeedStream {
   case object Fast extends DedupMode
 
   /** Start the full pipeline. `follows` is the static edge table
-    * (stream-static join — F1). Each micro-batch: route dead letters,
-    * fan out valid posts, idempotent-append to the feed.
+    * (stream-static fan-out — F1). Each micro-batch: route dead
+    * letters, fan out valid posts, idempotent-append to the feed.
     *
-    * The edges are read once per query: `Fanout.followerIndex(follows)`
-    * is persisted here, built by the first batch, and unpersisted when
-    * the query terminates, by a listener that then removes itself. The
-    * index is therefore a snapshot of `follows`; edges added later
-    * reach the stream at its next start (a file-backed `follows` is
-    * already a snapshot of its file listing). Two live queries over the
-    * same `follows` share one cache entry, and the first to stop drops
-    * it for both; the other then re-reads the edges every batch.
+    * The edges are read once per query: `start` collects `follows` into
+    * a follower lookup, `followee_id` → its distinct followers, and
+    * broadcasts it; the broadcast is destroyed when the query
+    * terminates, by a listener that then removes itself. The lookup is
+    * therefore a snapshot of `follows`; edges added later reach the
+    * stream at its next start. This is the reference worker's lookup of
+    * `followers_by_followee` per post (cmd/worker/worker.go:128-156).
     *
-    * Each batch is broadcast against the index. The broadcast side is
-    * one micro-batch, so the source's per-trigger limit (Kafka
-    * `maxOffsetsPerTrigger`) bounds it. The fanned-out rows stay
-    * partitioned by follower, so the sink's key dedup runs without a
-    * shuffle: a Fast-mode batch is one broadcast job and one write job. */
+    * A Fast-mode batch is one narrow job with one task, so it writes
+    * one file: the valid posts are coalesced to one partition,
+    * deduplicated on `post_id` (`fanOut`), and each surviving post
+    * becomes one row per follower of its author. No exchange, join or
+    * aggregate runs, and the rows are unique on the feed key, so the
+    * sink appends them as they are. Exact mode adds its anti-join probe
+    * of the feed table (`IdempotentSink.appendDedup`). The source's
+    * per-trigger limit (Kafka `maxOffsetsPerTrigger`) bounds the task's
+    * input.
+    *
+    * Limit: the follower lists must fit a broadcast. */
   def start(
       spark: SparkSession,
       raw: DataFrame,
@@ -88,43 +93,72 @@ object FeedStream {
       checkpointPath: String,
       deadLetterPath: Option[String] = None,
       dedupMode: DedupMode = Exact): StreamingQuery = {
+    import spark.implicits._
     val parsed = parse(raw)
-    val index = Fanout.followerIndex(follows).persist()
-    val q = parsed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val valid = batch.filter(col("_valid"))
-          .select("post_id", "author_id", "body", "created_at")
-        deadLetterPath.foreach { p =>
-          val dead = batch.filter(!col("_valid"))
-            .select(col("raw_value"), current_timestamp().as("rejected_at"))
-          if (!dead.isEmpty) dead.write.mode("append").parquet(p)
+    val lookup = spark.sparkContext.broadcast(
+      follows.groupBy("followee_id").agg(collect_set("user_id")).collect()
+        .map(r => r.getString(0) -> r.getSeq[String](1).toArray).toMap)
+    val q =
+      try parsed.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", checkpointPath)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          deadLetterPath.foreach { p =>
+            val dead = batch.filter(!col("_valid"))
+              .select(col("raw_value"), current_timestamp().as("rejected_at"))
+            if (!dead.isEmpty) dead.write.mode("append").parquet(p)
+          }
+          val valid = batch.filter(col("_valid"))
+            .select("post_id", "author_id", "body", "created_at").as[Post]
+          val feedRows = valid.coalesce(1)
+            .mapPartitions(posts => fanOut(posts, lookup.value)).toDF()
+          dedupMode match {
+            case Exact => IdempotentSink.appendDedup(spark, feedRows, feedPath, Schemas.feedKey)
+            case Fast => IdempotentSink.appendOnce(spark, feedRows, batchId, feedPath, Schemas.feedKey)
+          }
+          ()
         }
-        val feedRows = Fanout.fanout(broadcast(valid), index)
-        dedupMode match {
-          case Exact => IdempotentSink.appendDedup(spark, feedRows, feedPath, Schemas.feedKey)
-          case Fast => IdempotentSink.appendOnce(spark, feedRows, batchId, feedPath, Schemas.feedKey)
-        }
-        ()
-      }
-      .start()
-    unpersistOnTermination(q, index)
+        .start()
+      catch { case e: Throwable => lookup.destroy(); throw e }
+    onTermination(q)(lookup.destroy())
     q
   }
 
-  /** Unpersist `cached` once `q` terminates, then stop listening. A
+  /** Which of two copies of one `post_id` a batch keeps: the earliest
+    * `created_at`, then the least `author_id`, then the least `body`.
+    * The rule reads only the copies, so the winner is the same whatever
+    * order or partitions they arrive in, on a replay too. */
+  private val postCopyOrder: Ordering[Post] =
+    Ordering.by((p: Post) => (p.created_at.toInstant, p.author_id, p.body))
+
+  /** One feed row per (follower of the author, post), for one copy of
+    * each `post_id` in `posts` (`postCopyOrder`). `followers` holds
+    * distinct followers per author, so the rows are unique on the feed
+    * key. */
+  private def fanOut(posts: Iterator[Post], followers: Map[String, Array[String]]): Iterator[FeedEntry] = {
+    val kept = scala.collection.mutable.HashMap.empty[String, Post]
+    posts.foreach(p => kept.updateWith(p.post_id) {
+      case Some(w) if postCopyOrder.lteq(w, p) => Some(w)
+      case _ => Some(p)
+    })
+    kept.valuesIterator.flatMap(p => followers.getOrElse(p.author_id, Array.empty[String]).iterator
+      .map(u => FeedEntry(u, p.post_id, p.author_id, p.body, p.created_at)))
+  }
+
+  /** Run `release` once, when `q` terminates, then stop listening. A
     * query that ended before the listener was added is handled here. */
-  private def unpersistOnTermination(q: StreamingQuery, cached: DataFrame): Unit = {
+  private def onTermination(q: StreamingQuery)(release: => Unit): Unit = {
     val streams = q.sparkSession.streams
-    def release(l: StreamingQueryListener): Unit = { cached.unpersist(); streams.removeListener(l) }
+    val pending = new java.util.concurrent.atomic.AtomicBoolean(true)
+    def done(l: StreamingQueryListener): Unit =
+      if (pending.getAndSet(false)) { release; streams.removeListener(l) }
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.runId == q.runId) release(this)
+        if (e.runId == q.runId) done(this)
     }
     streams.addListener(listener)
-    if (!q.isActive) release(listener)
+    if (!q.isActive) done(listener)
   }
 }

@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   *      (cross-batch redelivery);
   *   3. append the survivors.
   *
+  * That is `appendDedup` (Exact mode, and any replay after a crash).
+  * `appendOnce` (Fast mode) appends a batch that its producer already
+  * made key-unique, and guards replay with per-batch markers.
+  *
   * Every append is one write job that also counts its rows
   * (`Dataset.observe`); nothing is cached or counted first. An append
   * of zero rows still runs the write and leaves at most one
@@ -46,15 +50,18 @@ object IdempotentSink {
     *     append and committing (the batch may be absent, partial, or
     *     even fully present). THIS replay reconciles via the anti-join
     *     path (`appendDedup`), which drops whatever already landed.
-    *   - neither marker → first attempt: fast path, O(batch) only, no
-    *     scan of the existing table — throughput stays flat as the
-    *     feed grows (the 100 TB default). The inflight marker is two
-    *     tiny file ops, so the crash-free cost is unchanged.
+    *   - neither marker → first attempt: fast path, a plain observed
+    *     append of `batch`, O(batch) only, no scan of the existing
+    *     table — throughput stays flat as the feed grows (the 100 TB
+    *     default). The inflight marker is two tiny file ops, so the
+    *     crash-free cost is unchanged.
     *
-    * Net effect: exactly-once for every crash position, paying the
-    * existing-table key scan only on the replay attempt that actually
-    * follows a crash. Returns rows appended (0 for a replayed,
-    * already-committed batch). */
+    * The fast path does not dedup: `batch` must hold each `keys` value
+    * at most once, as `FeedStream`'s fan-out does (one copy per post,
+    * distinct followers per author). Net effect: exactly-once for every
+    * crash position, paying the existing-table key scan only on the
+    * replay attempt that actually follows a crash. Returns rows
+    * appended (0 for a replayed, already-committed batch). */
   def appendOnce(spark: SparkSession, batch: DataFrame, batchId: Long,
       path: String, keys: Seq[String]): Long = {
     val dir = java.nio.file.Paths.get(path, "_graft_commits")
@@ -66,7 +73,7 @@ object IdempotentSink {
     if (!crashed) java.nio.file.Files.createFile(inflight)
     val n =
       if (crashed) appendDedup(spark, batch, path, keys)
-      else writeCounted(batch.dropDuplicates(keys), path)
+      else writeCounted(batch, path)
     java.nio.file.Files.createFile(marker)
     java.nio.file.Files.deleteIfExists(inflight)
     n

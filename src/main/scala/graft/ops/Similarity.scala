@@ -925,11 +925,15 @@ object Similarity {
     *     shortlisted ids.
     * The model is one driver-held slot (`residentPqModel`), reloaded
     * (one `collect` per table) when the listing of `centroids/` or
-    * `codebooks/` changes, so the writers keep no version. Above 32
-    * cluster dirs Spark lists each table read with a parallel-listing
-    * job, one more per scan. The probe ranking, the ADC tables, the
-    * (q_id, id, s) dedup before the ADC sum, the shortlist, the rerank's
-    * (q_id, n_id) dedup and the top-k run on the driver. Cosines, the
+    * `codebooks/` changes, so the writers keep no version. Each scan
+    * reads only the probed `cluster_id=` dirs that exist, under
+    * `basePath` so the partition column and its `isin` filter stay: the
+    * driver lists the table root once, where a read of the whole table
+    * above 32 cluster dirs would cost a parallel-listing job (a batch
+    * that probes more than 32 clusters still pays it). The probe
+    * ranking, the ADC tables, the (q_id, id, s) dedup before the ADC
+    * sum, the shortlist, the rerank's (q_id, n_id) dedup and the top-k
+    * run on the driver. Cosines, the
     * normalization, the ADC distances and the rounding are the Column
     * expressions of `ivfPqTopK`, evaluated on driver rows by projecting
     * a local relation (Catalyst folds it, no job), and every double sort
@@ -976,8 +980,12 @@ object Similarity {
 
     def scan[A: org.apache.spark.sql.Encoder, B: scala.reflect.ClassTag](table: String, state: B)(
         f: (B, Row) => Iterator[A]): Array[A] = {
+      val root = new org.apache.hadoop.fs.Path(indexDir, table)
+      val dirs = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+        .map(_.getPath.getName).toSet
       val bc = spark.sparkContext.broadcast(state)
-      try readIndexTable(spark, indexDir, table)
+      try spark.read.schema(IvfPqSchema(table)).option("basePath", root.toString)
+        .parquet(probed.map(c => s"cluster_id=$c").filter(dirs).map(d => s"$root/$d"): _*)
         .filter(col("cluster_id").isin(probed: _*))
         .mapPartitions(rows => rows.filterNot(_.anyNull).flatMap(r => f(bc.value, r)))
         .collect()

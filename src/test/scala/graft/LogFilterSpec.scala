@@ -46,4 +46,31 @@ class LogFilterSpec extends AnyFunSuite {
       ctx.updateLoggers()
     }
   }
+
+  test("a session from GraftSession.local drops the warning of a real global-window query") {
+    val spark = GraftSession.local(4, "graft-test")
+    val name = "org.apache.spark.sql.execution.window"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val level = LogManager.getLogger(name).getLevel
+    Configurator.setLevel(name, Level.WARN) // level must not gate the probe
+    val root = ctx.getConfiguration.getRootLogger
+    val app = new MemAppender
+    app.start()
+    root.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions.row_number
+      spark.range(10).withColumn("r", row_number().over(Window.orderBy("id"))).collect()
+      LogManager.getLogger(name + ".WindowExec").warn("spilled 1 GB to disk during window sort")
+      assert(app.messages.exists(_.contains("spilled")),
+        s"a window warning must reach the root appender; saw: ${app.messages}")
+      assert(!app.messages.exists(_.contains("No Partition Defined")),
+        "the bounded-window warning must be dropped")
+    } finally {
+      root.removeAppender("graft-test-mem")
+      Configurator.setLevel(name, level)
+      ctx.updateLoggers()
+    }
+  }
 }

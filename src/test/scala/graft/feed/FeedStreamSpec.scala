@@ -1,18 +1,13 @@
 package graft.feed
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import graft.tools.ExecutionTrace
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end streaming pipeline test (FIXTURES.md §3 scenario through
   * the real StreamingQuery — the no-polling mirror of the reference's
@@ -184,64 +179,51 @@ class FeedStreamSpec extends SparkSpec {
     } finally streams.removeListener(watch)
   }
 
-  private def indexCached(s: SparkSession, follows: DataFrame): Boolean =
-    s.sharedState.cacheManager.lookupCachedData(
-      Fanout.followerIndex(follows).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+  /** Ids of the follower lookups the driver holds whose followees
+    * include `followee`. */
+  private def lookupsOf(followee: String): Set[Long] =
+    org.apache.spark.graftbridge.BroadcastBridge.values().collect {
+      case (id, m: Map[_, _]) if m.asInstanceOf[Map[Any, Any]].contains(followee) => id
+    }.toSet
 
-  test("Fast mode job budget: a warm micro-batch runs at most 2 jobs, and its write shuffles nothing") {
+  test("Fast mode job budget: a warm micro-batch runs 1 job and 1 task, writes at most 1 file, and neither shuffles nor broadcasts") {
     // a few thousand edges over 50 authors, so every post fans out
     val follows = (0 until 4000).map(i => Follow(s"u-${i % 997}", s"a-${i % 50}"))
       .distinct.toDS.toDF
-    val jobs = new ConcurrentHashMap[Long, AtomicInteger]
-    val drained = new CountDownLatch(1)
-    val sc = spark.sparkContext
-    val jobListener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        p.flatMap(p => Option(p.getProperty("streaming.sql.batchId"))).foreach { b =>
-          jobs.computeIfAbsent(b.toLong, _ => new AtomicInteger).incrementAndGet()
-        }
-        if (p.exists(_.getProperty("spark.jobGroup.id") == "feed-budget-drained")) drained.countDown()
-      }
-    }
-    // the stream clones the session's QueryExecutionListeners at start
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand")) writes.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(planListener)
-    sc.addSparkListener(jobListener)
+    val feedPath = tempDir("feedjobs")
+    def partFiles = Option(new java.io.File(feedPath).listFiles).toSeq.flatten
+      .count(_.getName.startsWith("part-"))
     val in = memStream[String]
-    val q = FeedStream.start(spark, in.toDF(), follows, tempDir("feedjobs"), tempDir("ckjobs"),
+    val q = FeedStream.start(spark, in.toDF(), follows, feedPath, tempDir("ckjobs"),
       dedupMode = FeedStream.Fast)
-    try {
-      (0 until 4).foreach { b =>
-        in.addData((0 until 30).map(i => msg(s"p-$b-$i", s"a-${(b * 7 + i) % 50}")))
-        q.processAllAvailable()
+    val batches =
+      try (0 until 4).map { b =>
+        val before = partFiles
+        val (_, w) = ExecutionTrace.window(spark) {
+          in.addData((0 until 30).map(i => msg(s"p-$b-$i", s"a-${(b * 7 + i) % 50}")))
+          q.processAllAvailable()
+        }
+        (w, partFiles - before)
+      } finally q.stop()
+    info(s"jobs, tasks and new files per batch: ${batches.map { case (w, f) => (w.jobs, w.tasks, f) }}")
+    // batch 0 is the cold one; the lookup was built by start
+    for ((w, files) <- batches.tail) {
+      assert(w.jobs == 1 && w.tasks == 1, s"${w.jobs} jobs and ${w.tasks} tasks in a warm batch")
+      assert(files <= 1, s"$files part files from one batch")
+      val writes = w.executions.map(_.qe.executedPlan)
+        .filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(writes.size == 1, s"${writes.size} feed writes in one batch")
+      val helper = new AdaptiveSparkPlanHelper {}
+      writes.foreach { plan =>
+        assert(helper.collectWithSubqueries(plan) {
+          case e: ShuffleExchangeExec => e
+          case e: BroadcastExchangeExec => e
+        }.isEmpty, s"the feed write exchanges:\n$plan")
       }
-      q.stop()
-      sc.setJobGroup("feed-budget-drained", "listener drain marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS))
-    } finally {
-      if (q.isActive) q.stop()
-      sc.clearJobGroup(); sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
     }
-    // batch 0 also builds the resident index; batches 1-3 are warm
-    val perBatch = (0L to 3L).map(b => Option(jobs.get(b)).map(_.get).getOrElse(0))
-    info(s"jobs per batch: $perBatch")
-    assert(perBatch.tail.forall(n => n >= 1 && n <= 2), s"jobs per warm batch ${perBatch.tail}, budget 2")
-    assert(writes.size == 4, s"${writes.size} feed writes seen")
-    val helper = new AdaptiveSparkPlanHelper {}
-    writes.forEach { plan =>
-      assert(helper.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"the feed write shuffles:\n$plan")
-      assert(helper.collectWithSubqueries(plan) { case e: BroadcastExchangeExec => e }.size == 1,
-        s"the feed write broadcasts no batch:\n$plan")
-    }
+    assert(spark.read.parquet(feedPath).count() == Fanout.fanout(
+      (0 until 4).flatMap(b => (0 until 30).map(i => Post(s"p-$b-$i", s"a-${(b * 7 + i) % 50}", "b",
+        Timestamp.valueOf("2026-01-01 00:00:00")))).toDS.toDF, follows).count())
   }
 
   test("the stream's dedup is exact at 1, 3 and 7 shuffle partitions, over duplicate edges and posts") {
@@ -278,6 +260,65 @@ class FeedStreamSpec extends SparkSpec {
     }
   }
 
+  test("post dedup: repeats, a replay after a crash and conflicting copies give the fan-out of the winning copy, at 1, 3 and 7 shuffle partitions") {
+    val edges = (1 to 6).map(i => Follow(s"u-$i", "a-1")) ++ (4 to 9).map(i => Follow(s"u-$i", "a-2")) ++
+      Seq(Follow("u-1", "a-1"), Follow("u-5", "a-2"))
+    def json(id: String, author: String, body: String, sec: Int) =
+      s"""{"id":"$id","author_id":"$author","body":"$body","created":"2026-01-01T00:00:0${sec}Z"}"""
+    def post(id: String, author: String, body: String, sec: Int) =
+      Post(id, author, body, Timestamp.valueOf(s"2026-01-01 00:00:0$sec"))
+    // Batch 0 repeats p-1 and holds two copies of p-2: the one created
+    // first wins, whatever its author or body. Batch 1 holds two copies
+    // of p-4 created at the same time: the least author_id wins, then
+    // the least body. Batch 1 is replayed after a crash.
+    val batch0 = Seq(json("p-1", "a-1", "one", 0), json("p-2", "a-1", "late", 5),
+      json("p-1", "a-1", "one", 0), json("p-2", "a-2", "early", 1))
+    val batch1 = Seq(json("p-3", "a-2", "three", 2), json("p-4", "a-2", "x", 3),
+      json("p-4", "a-1", "y", 3), json("p-4", "a-1", "w", 3))
+    val winners = Seq(post("p-1", "a-1", "one", 0), post("p-2", "a-2", "early", 1),
+      post("p-3", "a-2", "three", 2), post("p-4", "a-1", "w", 3))
+    for (parts <- Seq(1, 3, 7); mode <- Seq(FeedStream.Exact, FeedStream.Fast)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+      import s.implicits._
+      val follows = s.createDataset(edges).toDF.repartition(4)
+      // the copies arrive in the opposite order at 3 partitions
+      val src = tempDir("postsrc")
+      for ((lines, i) <- Seq(batch0, batch1).zipWithIndex) {
+        val f = java.nio.file.Paths.get(src, s"b$i.json")
+        java.nio.file.Files.write(f, (if (parts == 3) lines.reverse else lines).asJava)
+        f.toFile.setLastModified(1767225600000L + i * 1000L)
+      }
+      val feedPath = tempDir("feeddedup")
+      val ckpt = tempDir("ckdedup")
+      def run() = {
+        val q = FeedStream.start(s, s.readStream.option("maxFilesPerTrigger", "1").text(src),
+          follows, feedPath, ckpt, dedupMode = mode)
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
+      run()
+      // crash after batch 1's rows landed, before its commits: Spark's
+      // commit log and, in Fast mode, the sink's marker
+      java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+      if (mode == FeedStream.Fast) {
+        val commits = java.nio.file.Paths.get(feedPath, "_graft_commits")
+        java.nio.file.Files.move(commits.resolve("1"), commits.resolve("1.inflight"))
+      }
+      val replay = run()
+      assert(replay.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == 4),
+        s"$mode at $parts: batch 1 was not replayed")
+      val expected = Fanout.fanout(s.createDataset(winners).toDF, follows)
+        .dropDuplicates(Schemas.feedKey).as[FeedEntry].collect().toSeq
+      val got = s.read.schema(Schemas.feedEntry).parquet(feedPath).as[FeedEntry].collect().toSeq
+      // a-1 has 6 distinct followers, a-2 has 6
+      assert(expected.size == 4 * 6 && expected.distinct.size == expected.size)
+      assert(got.sortBy(e => (e.user_id, e.post_id)) == expected.sortBy(e => (e.user_id, e.post_id)),
+        s"$mode at $parts shuffle partitions")
+    }
+  }
+
   test("a batch that fans out to no rows commits, appends 0 and leaves at most one schema-only file") {
     def dataFiles(p: String) = Option(new java.io.File(p).listFiles).toSeq.flatten
       .count(f => f.getName.startsWith("part-"))
@@ -302,19 +343,22 @@ class FeedStreamSpec extends SparkSpec {
     assert(spark.read.parquet(fresh).count() == 1)
   }
 
-  test("the follower index is cached while the stream runs and released when it stops; no listener stays") {
-    val follows = Seq(Follow("u-almaz", "u-nur"), Follow("u-b", "u-nur")).toDS.toDF
+  test("the follower lookup is released when the stream stops; no listener stays") {
+    val follows = Seq(Follow("u-almaz", "u-life"), Follow("u-b", "u-life")).toDS.toDF
     val listeners = spark.streams.listListeners().length
     (0 until 3).foreach { i =>
       val in = memStream[String]
       val q = FeedStream.start(spark, in.toDF(), follows, tempDir("feedlife"), tempDir("cklife"),
         dedupMode = if (i % 2 == 0) FeedStream.Fast else FeedStream.Exact)
       try {
-        in.addData(Seq(goodJson))
+        in.addData(Seq(msg("p-life", "u-life")))
         q.processAllAvailable()
-        assert(indexCached(spark, follows), s"stream $i: follower index not cached")
+        assert(lookupsOf("u-life").size == 1, s"stream $i: no follower lookup held")
       } finally stopAndDrain(q)
-      assert(!indexCached(spark, follows), s"stream $i: follower index still cached after stop")
+      // destroy() removes the blocks asynchronously
+      val until = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (lookupsOf("u-life").nonEmpty && System.nanoTime() < until) Thread.sleep(20)
+      assert(lookupsOf("u-life").isEmpty, s"stream $i: follower lookup still held after stop")
     }
     assert(spark.streams.listListeners().length == listeners)
   }

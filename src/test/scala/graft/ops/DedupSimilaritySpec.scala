@@ -508,11 +508,12 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(served == self)
   }
 
-  /** The parquet scans of index table `table` in the executions a window saw. */
+  /** The parquet scans of index table `table` in the executions a
+    * window saw: scans of the table dir or of its cluster dirs. */
   private def indexScans(w: graft.tools.ExecutionTrace.Window, table: String) =
     w.executions.flatMap(_.qe.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.location.rootPaths.exists(_.getName == table) => f
+          if f.relation.location.rootPaths.exists(p => Seq(p, p.getParent).exists(_.getName == table)) => f
     })
 
   test("servePqIndex off the persisted layout pins to ivfPqTopK; probed clusters prune files") {
@@ -541,19 +542,26 @@ class DedupSimilaritySpec extends SparkSpec {
     // Serving is fixed work per query batch: an eager side job (schema
     // inference, first(), a second probe pass, a model re-read) shows
     // up here as a count above the budget.
+    // Also on more cluster dirs than Spark lists without a job (32):
+    // only the probed dirs are read.
     val e = graft.Tables.load(spark, dir01, "embeddings")
-    val idx = tempDir("ivfpq_jobs_")
-    Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    def serve() = graft.tools.ExecutionTrace.window(spark)(
-      Similarity.servePqIndex(spark, idx, queries, k = 5, nProbe = 8, shortlist = 100).collect())
-    val (cold, loading) = serve()
-    val (warm, resident) = serve()
-    assert(warm.nonEmpty && warm.toSeq == cold.toSeq)
-    info(s"servePqIndex jobs: ${loading.jobs} loading the model, ${resident.jobs} resident")
-    assert(loading.jobs <= 5, s"the loading call ran ${loading.jobs} jobs, budget 5")
-    assert(resident.jobs <= 3, s"a resident-model call ran ${resident.jobs} jobs, budget 3")
+    for (seedStepIvf <- Seq(37, 11)) {
+      val idx = tempDir("ivfpq_jobs_")
+      Similarity.writeIvfPqIndex(e, "vec_id", "embedding", idx, seedStepIvf = seedStepIvf)
+      val clusters = new java.io.File(idx, "codes").list().count(_.startsWith("cluster_id="))
+      def serve() = graft.tools.ExecutionTrace.window(spark)(
+        Similarity.servePqIndex(spark, idx, queries, k = 5, nProbe = 8, shortlist = 100).collect())
+      val (cold, loading) = serve()
+      val (warm, resident) = serve()
+      assert(warm.nonEmpty && warm.toSeq == cold.toSeq)
+      info(s"servePqIndex jobs over $clusters cluster dirs: ${loading.jobs} loading the model, " +
+        s"${resident.jobs} resident")
+      if (seedStepIvf == 11) assert(clusters > 32, s"$clusters cluster dirs")
+      assert(loading.jobs <= 5, s"$clusters dirs: the loading call ran ${loading.jobs} jobs, budget 5")
+      assert(resident.jobs <= 3, s"$clusters dirs: a resident-model call ran ${resident.jobs} jobs, budget 3")
+    }
   }
 
   test("servePqIndex reloads its resident model when the same dir is rebuilt with another model") {
