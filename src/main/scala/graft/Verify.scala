@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.tools.Suite
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,24 +18,10 @@ object Verify {
     // (the round-10 empty-artifact lesson — partial truth always
     // beats an empty directory).
     writeOracleJson(outDir, only)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        // clearCache drops persist()ed plans; getPersistentRDDs also
-        // covers localCheckpoint blocks (RDD-level persistence the
-        // catalog never sees) and frees them synchronously — the
-        // gc()-and-hope variant lost the race at 69 queries.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-      }
-    }
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    Suite.run(spark, sfDir, names) { b =>
+      b.df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${b.name}")
+    }.foreach(_.left.foreach(f => System.err.println(s"[verify] ${f.name} failed: ${f.error}")))
     spark.stop()
   }
 

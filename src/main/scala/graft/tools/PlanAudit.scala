@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.internal.SQLConf
@@ -22,7 +21,10 @@ import graft.{GraftSession, SparkEntry}
   * it; q99's recipe would otherwise read as hundreds of scans), so
   * `--check` does not see a join planned inside a persisted frame. A
   * query whose plan has no parquet scan, Range (q39 synthesizes its
-  * workload) or cache scan is flagged `NO-SCAN!` and fails the run.
+  * workload) or cache scan is flagged `NO-SCAN!` and fails the run. The
+  * queries run on [[Suite]], which cleans up after each one, so no
+  * frame an earlier query cached reaches a later query's plan; a query
+  * that throws is a `FAILED` row and fails the run.
   *
   * Columns: exchanges (printed, not gated, see [[Counts]]), the gated
   * counts, then the build-time work: `bexec` SQL executions and
@@ -85,20 +87,18 @@ object PlanAudit {
     scans = occurrences(plan, "FileScan parquet|Scan parquet"),
     pushed = occurrences(plan, "PushedFilters: \\[[^\\]]"))
 
-  /** One audited query: its frame, the window its build ran in, and
-    * the plan text the counts are taken from (final plan, then each
-    * build-time execution's plan, each as [[planned]]). */
-  final case class Audit(df: DataFrame, build: ExecutionTrace.Window, plan: String)
+  private final case class Row(counts: Counts, noScan: Boolean, line: String)
 
-  def audit(spark: SparkSession)(query: => DataFrame): Audit = {
-    val (df, w) = ExecutionTrace.window(spark)(query)
-    val subPlans = w.executions.map { e =>
+  /** The plan text a query's counts are taken from: its final plan,
+    * then the plan of each execution its build ran, each as [[planned]]. */
+  def planText(b: Suite.Built): String = {
+    val subPlans = b.trace.executions.map { e =>
       val plan =
         try planned(e.qe.executedPlan)
-        catch { case t: Throwable => s"<plan unavailable: ${t.getMessage}>" }
+        catch { case t: Throwable => s"<plan unavailable: $t>" }
       s"=== build-time ${e.action} ===\n$plan"
     }
-    Audit(df, w, (planned(df.queryExecution.executedPlan) +: subPlans).mkString("\n"))
+    (planned(b.df.queryExecution.executedPlan) +: subPlans).mkString("\n")
   }
 
   /** The `--check` verdict: each query whose plan grew a SortMergeJoin,
@@ -141,40 +141,34 @@ object PlanAudit {
       .getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(8, "plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    var noScan = List.empty[String]
-    var failed = List.empty[String]
-    val byQuery = scala.collection.mutable.Map.empty[String, Counts]
     println(Seq("query", "exch", "bhj", "smj", "bnlj", "cart", "scans", "pushed",
       "bexec", "bjobs", "actions", "flags").mkString("\t"))
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val a = audit(spark)(fn(spark, dir))
-        val exch = exchanges(a.plan)
-        val k = counts(a.plan)
-        byQuery(name) = k
-        val flags = new StringBuilder
-        if (k.smj > 0) flags.append(" SMJ!")
-        if (k.cart > 0) flags.append(" CARTESIAN!")
-        if (exch > 6) flags.append(" MANY-SHUFFLES!")
-        if (k.scans == 0 && occurrences(a.plan, "Range \\(") == 0 &&
-            occurrences(a.plan, "InMemoryTableScan") == 0) {
-          flags.append(" NO-SCAN!"); noScan ::= name
-        }
-        val actions = a.build.executions.groupBy(_.action).toSeq.sortBy(_._1)
-          .map { case (act, es) => s"$act:${es.size}" }.mkString(",")
-        println(Seq(name, exch, k.bhj, k.smj, k.bnlj, k.cart, k.scans, k.pushed,
-          a.build.executions.size, a.build.jobs, if (actions.isEmpty) "-" else actions,
-          flags.toString.trim).mkString("\t"))
-      } catch {
-        case e: Throwable =>
-          failed ::= name
-          println(s"$name\tFAILED: ${e.getMessage.take(60)}")
-      }
+    val outcomes = Suite.run(spark, dir, SparkEntry.queries.keys.toSeq.sorted) { b =>
+      val plan = planText(b)
+      val exch = exchanges(plan)
+      val k = counts(plan)
+      val noScan = k.scans == 0 && occurrences(plan, "Range \\(") == 0 &&
+        occurrences(plan, "InMemoryTableScan") == 0
+      val flags = Seq((k.smj > 0) -> "SMJ!", (k.cart > 0) -> "CARTESIAN!",
+        (exch > 6) -> "MANY-SHUFFLES!", noScan -> "NO-SCAN!").collect { case (true, f) => f }
+      val actions = b.trace.executions.groupBy(_.action).toSeq.sortBy(_._1)
+        .map { case (act, es) => s"$act:${es.size}" }.mkString(",")
+      val row = Seq(b.name, exch, k.bhj, k.smj, k.bnlj, k.cart, k.scans, k.pushed,
+        b.trace.executions.size, b.trace.jobs, if (actions.isEmpty) "-" else actions,
+        flags.mkString(" ")).mkString("\t")
+      Row(k, noScan, row)
     }
-    println(s"# audited=${SparkEntry.queries.size} zero-scan=${noScan.size}" +
-      (if (noScan.nonEmpty) noScan.sorted.mkString(" [", ",", "]") else "") +
+    outcomes.foreach {
+      case Right(p) => println(p.value.line)
+      case Left(f) => println(s"${f.name}\tFAILED: ${f.error.takeWhile(_ != '\n').take(60)}")
+    }
+    val byQuery = outcomes.collect { case Right(p) => p.name -> p.value.counts }.toMap
+    val noScan = outcomes.collect { case Right(p) if p.value.noScan => p.name }
+    val failed = outcomes.collect { case Left(f) => f.name }
+    println(s"# audited=${outcomes.size} zero-scan=${noScan.size}" +
+      (if (noScan.nonEmpty) noScan.mkString(" [", ",", "]") else "") +
       s" failed=${failed.size}" +
-      (if (failed.nonEmpty) failed.sorted.mkString(" [", ",", "]") else ""))
+      (if (failed.nonEmpty) failed.mkString(" [", ",", "]") else ""))
 
     if (mode == "--snapshot") {
       val lines = "# query\tbhj\tsmj\tbnlj\tcart\tscans\tpushed" +:
@@ -190,7 +184,7 @@ object PlanAudit {
     if (mode == "--check") {
       val base = readBaseline()
       require(base.nonEmpty, s"--check needs a committed $baselinePath (run --snapshot first)")
-      found = regressions(byQuery.toMap, base)
+      found = regressions(byQuery, base)
       if (found.nonEmpty) {
         println(s"# CHECK FAILED - ${found.size} plan regression(s) vs $baselinePath:")
         found.sorted.foreach(r => println(s"#   $r"))

@@ -41,20 +41,24 @@ class PlanAuditSpec extends SparkSpec {
     val expected = build().collect().toSet
     assert(expected.map(_.getLong(1)) == Set(11343L, 11400L, 11457L, 11514L, 11571L))
 
-    PlanAudit.audit(spark) { src.distinct().collect(); src } // the query audited before
+    // the query audited before
+    Suite.over(spark, Seq("before" -> (() => { src.distinct().collect(); src })))(PlanAudit.planText)
     src.filter(col("v") > 3).count() // unaudited work between the two
-    val a = PlanAudit.audit(spark)(build())
+    val Vector(Right(a)) = Suite.over(spark, Seq("q" -> (() => build()))) { b =>
+      (b.trace, PlanAudit.planText(b), b.df.collect().toSet)
+    }
+    val (trace, text, rows) = a.value
 
-    val ex = a.build.executions
+    val ex = trace.executions
     assert(ex.map(_.action) == Seq("localCheckpoint", "collect", "isEmpty", "head", "collect"))
     val plans = ex.map(e => PlanAudit.planned(e.qe.executedPlan))
     // the pre-checkpoint plan, exchange included
     assert(plans.head.contains("Exchange hashpartitioning") && plans.head.contains("HashAggregate"),
       plans.head)
     // the clone's execution: its Range, and the slice of the audit it fills
-    assert(plans.last.contains("Range (0, 10") && a.plan.contains("Range (0, 10"))
-    assert(a.build.jobs >= ex.size)
-    assert(a.df.collect().toSet == expected)
+    assert(plans.last.contains("Range (0, 10") && text.contains("Range (0, 10"))
+    assert(a.build.executions == ex.size && trace.jobs >= ex.size)
+    assert(rows == expected)
   }
 
   test("planned reads a plan that has run as it read before it ran") {
